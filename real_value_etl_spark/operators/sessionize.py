@@ -22,13 +22,15 @@ def sessionize(
     gap_seconds: int,
 ) -> DataFrame:
     """Assign session ids: a new session starts when the gap to the previous
-    event of the same key exceeds `gap_seconds`. Output: input columns +
+    event of the same key exceeds `gap_seconds`. Gaps are compared in
+    microseconds, so a fractional gap such as 1800.5 s exceeds 1800 (as in
+    ``F.session_window`` and DuckDB's ``epoch()``). Output: input columns +
     ``session_seq`` (1-based per key)."""
     w = Window.partitionBy(key).orderBy(ts)
     prev_ts = F.lag(ts).over(w)
     new_sess = F.when(
         prev_ts.isNull()
-        | (F.unix_timestamp(F.col(ts)) - F.unix_timestamp(prev_ts) > gap_seconds),
+        | (F.unix_micros(F.col(ts)) - F.unix_micros(prev_ts) > gap_seconds * 1_000_000),
         1,
     ).otherwise(0)
     wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -96,7 +98,7 @@ def sessionize_two_phase(
     prev_ts = F.lag(ts).over(w_local)
     new_sess = F.when(
         prev_ts.isNull()
-        | (F.unix_timestamp(F.col(ts)) - F.unix_timestamp(prev_ts) > gap_seconds),
+        | (F.unix_micros(F.col(ts)) - F.unix_micros(prev_ts) > gap_seconds * 1_000_000),
         1,
     ).otherwise(0)
     wcum = w_local.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -113,8 +115,8 @@ def sessionize_two_phase(
     cont = F.when(
         prev_last.isNotNull()
         & (
-            F.unix_timestamp(F.col("__first_ts")) - F.unix_timestamp(prev_last)
-            <= gap_seconds
+            F.unix_micros(F.col("__first_ts")) - F.unix_micros(prev_last)
+            <= gap_seconds * 1_000_000
         ),
         F.lit(1),
     ).otherwise(F.lit(0))

@@ -15,10 +15,14 @@ value-hash with columns sorted by name):
 
 from __future__ import annotations
 
+import os
+import stat
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -76,6 +80,60 @@ def ensure_session_confs(spark: SparkSession) -> None:
         pass
 
 
+# path -> (file signature, schema Spark inferred for it). One entry per
+# path, replaced whenever the signature changes. Concurrent API threads need
+# no lock: dict get/set is atomic, and each entry pairs a signature with a
+# schema inferred after that signature was taken, so a racing writer can at
+# worst leave an older entry that the next read re-infers.
+_SCHEMAS: dict[str, tuple[object, StructType]] = {}
+
+
+def _file_signature(path: str):
+    """(inode, size, mtime_ns) of a file; for a directory, the sorted
+    (relative path, inode, size, mtime_ns) of every file under it. None when
+    the path is not local (a `scheme://` URI other than `file:`) or cannot
+    be stat'ed."""
+    url = urlsplit(path)
+    if url.scheme and url.scheme != "file":
+        return None
+    local = url.path if url.scheme else path
+
+    def raise_error(err: OSError) -> None:
+        raise err
+
+    try:
+        st = os.stat(local)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_ino, st.st_size, st.st_mtime_ns)
+        sig = []
+        for root, _dirs, files in os.walk(local, onerror=raise_error, followlinks=True):
+            for f in files:
+                full = os.path.join(root, f)
+                fst = os.stat(full)
+                rel = os.path.relpath(full, local)
+                sig.append((rel, fst.st_ino, fst.st_size, fst.st_mtime_ns))
+        return tuple(sorted(sig))
+    except OSError:
+        return None
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)` that infers the schema once per version of
+    the path's files. Inference is a Spark job reading parquet footers; while
+    the file signature is unchanged the cached schema is supplied instead, so
+    the read starts no job. Spark still lists the files on every read, and
+    every call returns a fresh DataFrame (a shared one would give self-joins
+    the same attribute ids)."""
+    sig = _file_signature(path)
+    entry = _SCHEMAS.get(path)
+    if sig is not None and entry is not None and entry[0] == sig:
+        return spark.read.schema(entry[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if sig is not None:
+        _SCHEMAS[path] = (sig, df.schema)
+    return df
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver parquet table (lazy scan; pushdown-friendly).
 
@@ -89,7 +147,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (unix_micros, watermarks) require the instant type.
     """
     ensure_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         from pyspark.sql import functions as F
 

@@ -7,8 +7,10 @@ Design notes (scale-first):
 - AQE on: runtime coalescing of shuffle partitions + skew-join splitting are
   the first line of defense at 100 TB (skewed listing/platform keys).
 - Arrow on: every Pandas UDF / toPandas crossing is Arrow-batched.
-- shuffle.partitions defaults to 2x cores locally; on a real cluster this is
-  overridden per job (target ~128-256 MB per shuffle partition).
+- shuffle.partitions defaults to 32 (`DEFAULT_SHUFFLE_PARTITIONS`; the
+  `SPARK_GRAFT_SHUFFLE` environment variable overrides it), whatever the
+  core count; on a real cluster this is overridden per job (target
+  ~128-256 MB per shuffle partition).
 """
 
 from __future__ import annotations
@@ -71,31 +73,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Register the driver's parquet tables as temp views; return dict of DFs.
-
-    Parquet scans get predicate pushdown + column pruning from Catalyst for
-    free; at cluster scale the same call reads a partitioned s3a:// layout.
-    """
-    tables = names or (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    )
-    out = {}
-    for t in tables:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(t)
-            out[t] = df
-    return out

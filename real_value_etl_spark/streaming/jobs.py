@@ -47,11 +47,11 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     either int64 (legacy nanosAsLong) or TIMESTAMP_NTZ (native nanos read);
     normalize to instant-typed `timestamp` exactly like the batch reader in
     queries/registry.py — watermarks require the instant type."""
-    from ..queries.registry import ensure_session_confs
+    from ..queries.registry import ensure_session_confs, read_parquet
 
     ensure_session_confs(spark)
     path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, path).schema
     # The file stream source requires a DIRECTORY (in production: the s3a://
     # drop prefix new snapshot files land in). Stage a symlink dir per sf.
     import hashlib

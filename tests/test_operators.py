@@ -60,6 +60,40 @@ def test_sessionize_gap(spark):
     assert by_user[2] == [1]
 
 
+def test_sessionize_fractional_gap_matches_oracle(spark, tmp_path):
+    """A 1800.5 s gap exceeds the 30-min gap (two sessions), a 1799.5 s
+    gap does not (one session): both sessionize queries agree with the
+    DuckDB oracle, which compares fractional epoch() seconds."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from real_value_etl_spark.queries.all_queries import REGISTRY
+
+    from .oracle_compare import compare
+
+    times = [ts("2024-01-01 12:00:00"), ts("2024-01-01 12:30:00.500"),
+             ts("2024-01-01 12:00:00"), ts("2024-01-01 12:29:59.500")]
+    pq.write_table(pa.table({
+        "event_id": pa.array([1, 2, 3, 4], pa.int64()),
+        "ts": pa.array(times, pa.timestamp("us")),
+        "user_id": pa.array([1, 1, 2, 2], pa.int64()),
+        "event_type": ["click"] * 4,
+        "value": [1.0, 2.0, 3.0, 4.0],
+        "props": ["{}"] * 4,
+    }), tmp_path / "events.parquet")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'")
+    oracle = REGISTRY["events_sessionize"].oracle
+    assert REGISTRY["events_sessionize_scalable"].oracle == oracle
+    for name in ("events_sessionize", "events_sessionize_scalable"):
+        df = REGISTRY[name].fn(spark, str(tmp_path))
+        ok, msg = compare(df, con, oracle)
+        assert ok, f"{name}: {msg}"
+        sessions = sorted((r["user_id"], r["n_events"]) for r in df.collect())
+        assert sessions == [(1, 1), (1, 1), (2, 2)], name
+
+
 def test_salted_agg_matches_plain(spark):
     df = spark.range(0, 10_000).select(
         (F.col("id") % 3).alias("k"),
