@@ -63,10 +63,11 @@ def handle_run_query(
 ) -> dict:
     """Transport-free core of `POST /query/{name}`: run one registered
     query against `sf_dir` and return up to `limit` rows as JSON-safe
-    dicts plus the schema. Unknown names return an error dict (the
-    HTTP layer maps it to 404) — never an exception across the API
-    boundary. `limit` bounds the driver-side collect; bulk extraction
-    belongs to the parquet/ORC sinks, not a REST response."""
+    dicts plus the schema. Unknown names, and any exception raised while
+    building or collecting the query, return an error dict (the latter
+    carrying the exception's class and message) — never an exception
+    across the API boundary. `limit` bounds the driver-side collect; bulk
+    extraction belongs to the parquet/ORC sinks, not a REST response."""
     from .queries import all_queries  # noqa: F401
     from .queries.registry import REGISTRY
 
@@ -85,6 +86,13 @@ def handle_run_query(
             ],
             "n_rows": len(rows),
             "rows": [r.asDict(recursive=True) for r in rows],
+        }
+    except Exception as exc:
+        return {
+            "status": "error",
+            "name": name,
+            "error_class": type(exc).__name__,
+            "error": str(exc),
         }
     finally:
         # Request-end cache release (r6 verdict ask #7): the two-phase

@@ -160,9 +160,9 @@ def ngram_jaccard_pairs_full(
 # Opt-in suite-level pair-graph sharing (r7 verdict ask #8): four
 # registered queries (dedup_clusters, graph_components_star,
 # dedup_bcubed_eval, docs_leakage_safe_split) rebuild the identical
-# Jaccard pair graph. tools/shared_pairs_probe.py measured the rebuild at
-# sf0.1: 22.5 s across the four as shipped vs 10.9 s with one persisted
-# pair frame (3.7 s build paid once) — 52% saved. Inside
+# Jaccard pair graph. Measured at sf0.1, the rebuild took 22.5 s across
+# the four as shipped vs 10.9 s with one persisted pair frame (3.7 s
+# build paid once) — 52% saved. Inside
 # `shared_pair_cache()` the builder memoizes per (input-plan semantic
 # hash, id_col, text_col, threshold); outside it, behavior is unchanged
 # (per-query rebuild, zero cross-request state). Entries are persisted
@@ -556,9 +556,9 @@ def _packed_prefix_docsets(idx: DataFrame, threshold: float) -> DataFrame:
     elements) and verification (array_intersect over the full array), so
     the doc-size/prefix/verify passes stop being three distinct
     aggregation shapes. Local wall-clock is ~neutral (exchange reuse
-    already deduplicated the old form's repeated passes — numbers in
-    OPTIMIZATION_r12.md); the win is the scale shape: per-row sort_array
-    instead of a corpus-wide window sort per candidate side."""
+    already deduplicated the old form's repeated passes); the win is
+    the scale shape: per-row sort_array instead of a corpus-wide window
+    sort per candidate side."""
     dfreq = idx.groupBy("sh").agg(F.count("*").alias("df"))
     return (
         idx.join(dfreq, "sh")

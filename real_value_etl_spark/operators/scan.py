@@ -55,11 +55,13 @@ Spark's LRU eviction, exactly the pre-r6 behavior, never an error.
 
 THREADING: the registry is guarded by a lock, so concurrent appends and
 releases cannot corrupt it — but release scope is GLOBAL, not
-per-request: a `release_rank_caches()` from one request unpersists
-frames another in-flight request persisted (correctness holds per the
-paragraph above; the other request just loses its cache). The REST layer
-(`api.py`) serializes query handling, which is the assumed deployment;
-true multi-tenant concurrency wants per-request cache lists instead.
+per-request. Nothing serializes query handling: FastAPI runs the REST
+layer's sync `def` handlers (`api.py`) in a thread pool, so requests do
+run concurrently, and a `release_rank_caches()` at the end of one
+request can unpersist frames another in-flight request persisted.
+Results stay correct, per the paragraph above; the other request just
+loses its cache and recomputes. Per-request cache lists would remove
+that cross-request release.
 """
 
 from __future__ import annotations

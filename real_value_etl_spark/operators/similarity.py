@@ -326,9 +326,9 @@ def ivf_assign_tree(
     Why a third level: two-level routing costs N x |coarse| for the
     corpus->coarse stage; with |coarse| proportional to N (which the
     blocked kNN join requires) that is N^2/625 — invisible at bench
-    scales, measured at 56x for 10x data by the sf1->sf10 probe
-    (tools/scaling_probe.py). Routing the coarse stage itself through a
-    |coarse|/25 SUPER grid makes every stage's fan-out ~constant over
+    scales, measured at 56x for 10x data from sf1 to sf10. Routing the
+    coarse stage itself through a |coarse|/25 SUPER grid makes every
+    stage's fan-out ~constant over
     the rehearsed decades: N x |super| + N x ~25 + N x ~25. Deeper
     corpora repeat the trick (log-depth tree quantizer).
 

@@ -1757,8 +1757,10 @@ def stream_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # exact F2 from the static table (the batch replay the sketch is
     # judged against, countmin-style)
+    from ..queries.registry import table as _table
+
     exact = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        _table(spark, sf_dir, "events")
         .groupBy("event_type", "user_id")
         .agg(F.count("*").alias("c"))
         .groupBy("event_type")

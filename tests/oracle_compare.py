@@ -1,8 +1,7 @@
 """Local re-implementation of the driver's Spark-vs-DuckDB compare.
 
 Row count + column-name set + order-insensitive value compare with columns
-sorted by name — the same gate CORRECTNESS_r{N}.json applies, so a green
-run here predicts a green driver run.
+sorted by name.
 
 Round-2 hardening: the driver canonicalizes BOTH sides through pandas
 (observed from its r01 traceback: `DataFrame.sort_values` over all columns,

@@ -245,12 +245,14 @@ def test_file_deleted_after_planning_is_skipped_not_fatal(spark, tmp_path):
     assert df.count() == 2  # a.csv rows; no job failure
 
 
-def test_query_api_handlers(spark, sf_dir):
+def test_query_api_handlers(spark, sf_dir, monkeypatch):
     """The analytics API handlers (transport-free): the catalog lists
     every registered query with oracle/tag metadata, a run returns
-    JSON-safe rows + schema bounded by the limit, and an unknown name is
-    an error DICT, not an exception across the API boundary."""
+    JSON-safe rows + schema bounded by the limit, and an unknown name or
+    a query that fails while building or collecting is an error DICT,
+    not an exception across the API boundary."""
     from real_value_etl_spark.api import handle_list_queries, handle_run_query
+    from real_value_etl_spark.queries.registry import REGISTRY, QuerySpec
 
     cat = handle_list_queries()["queries"]
     names = {q["name"] for q in cat}
@@ -263,6 +265,22 @@ def test_query_api_handlers(spark, sf_dir):
     assert isinstance(out["rows"][0], dict)
 
     assert handle_run_query(spark, "no_such_query", sf_dir)["status"] == "error"
+
+    def fails_to_build(spark, sf_dir):
+        raise ValueError("bad plan")
+
+    def fails_at_collect(spark, sf_dir):
+        return spark.range(1).select(F.raise_error(F.lit("boom")).alias("x"))
+
+    for name, fn in (("_fails_to_build", fails_to_build),
+                     ("_fails_at_collect", fails_at_collect)):
+        monkeypatch.setitem(REGISTRY, name, QuerySpec(name=name, fn=fn, oracle=None))
+    out = handle_run_query(spark, "_fails_to_build", sf_dir)
+    assert out == {"status": "error", "name": "_fails_to_build",
+                   "error_class": "ValueError", "error": "bad plan"}
+    out = handle_run_query(spark, "_fails_at_collect", sf_dir)
+    assert out["status"] == "error" and out["name"] == "_fails_at_collect"
+    assert out["error_class"] == "SparkRuntimeException" and "boom" in out["error"]
 
 
 def test_cli_run_and_errors(spark, sf_dir, capsys):

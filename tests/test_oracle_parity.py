@@ -1,5 +1,5 @@
-"""Every registered query with an oracle must hash-match DuckDB — the same
-gate the driver applies (CORRECTNESS_r{N}.json). Runs at sf0.001 by default
+"""Every registered query with an oracle must hash-match DuckDB under the
+`oracle_compare` gate. Runs at sf0.001 by default
 (SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 for the driver-scale check).
 """
 
