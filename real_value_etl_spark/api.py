@@ -68,12 +68,14 @@ def handle_run_query(
     carrying the exception's class and message) — never an exception
     across the API boundary. `limit` bounds the driver-side collect; bulk
     extraction belongs to the parquet/ORC sinks, not a REST response."""
+    from .operators import scan
     from .queries import all_queries  # noqa: F401
     from .queries.registry import REGISTRY
 
     spec = REGISTRY.get(name)
     if spec is None:
         return {"status": "error", "error": f"unknown query: {name}"}
+    scope = scan.PERSIST_SCOPE.set([])
     try:
         df = spec.fn(spark, sf_dir)
         rows = df.limit(limit).collect()
@@ -95,14 +97,13 @@ def handle_run_query(
             "error": str(exc),
         }
     finally:
-        # Request-end cache release (r6 verdict ask #7): the two-phase
-        # rank operators persist their range-partitioned frames for
-        # label consistency; in a long-lived service those caches must
-        # not accumulate across requests. Safe after the collect — a
-        # dropped cache re-materializes on any later use.
-        from .operators.scan import release_rank_caches
-
-        release_rank_caches()
+        # Request-end release of the frames this request persisted
+        # (operators/scan.py, CACHE LIFECYCLE): left cached, they would
+        # accumulate and serve stale rows to later requests once the
+        # input files change. Only this request's scope is released;
+        # concurrent requests keep theirs.
+        scan.release_rank_caches()
+        scan.PERSIST_SCOPE.reset(scope)
 
 
 def create_app(data_dir: str, output_path: str, output_format: str = "parquet"):

@@ -30,17 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _persist_for(df: DataFrame, caches: list[DataFrame] | None) -> DataFrame:
-    """persist() + register for release: into the caller's `caches` list
-    when given, else the scan-module tracker (see bpe_train docstring)."""
-    if caches is not None:
-        df = df.persist()
-        caches.append(df)
-        return df
-    from .scan import _persist_tracked
-
-    return _persist_tracked(df)
+from .scan import _persist_tracked
 
 
 def words_with_symbols(tokens: DataFrame, token_col: str = "token") -> DataFrame:
@@ -132,22 +122,15 @@ def apply_merge(words: DataFrame, rule: DataFrame) -> DataFrame:
     return rebuilt
 
 
-def bpe_train(
-    tokens: DataFrame,
-    n_merges: int,
-    caches: list[DataFrame] | None = None,
-) -> DataFrame:
+def bpe_train(tokens: DataFrame, n_merges: int) -> DataFrame:
     """Learn `n_merges` BPE merge rules; returns (step, merge_left, merge_right, cnt).
 
     Each iteration's word table is persisted (it feeds pair counting, the
     top-pair selection, AND the next rebuild — without a cache the
-    lineage would re-run all previous merges once per consumer). Same
-    cache-lifecycle contract as operators/pagerank.py: with caches=None
-    (how the registered queries call it) the frames register in the
-    scan-module tracker so `release_rank_caches()` frees them instead of
-    accumulating per call in a long-lived session (the r8/r9 PPR leak
-    class, closed here too)."""
-    words = _persist_for(words_with_symbols(tokens), caches)
+    lineage would re-run all previous merges once per consumer). The
+    result is lazy, so the frames are persisted into the request scope
+    (operators/scan.py) and released when the request ends."""
+    words = _persist_tracked(words_with_symbols(tokens))
     rules: list[DataFrame] = []
     for step in range(1, n_merges + 1):
         # r12: persist the one-row rule — it feeds BOTH the output union
@@ -155,7 +138,7 @@ def bpe_train(
         # consumer re-runs the pair-count aggregation over the cached
         # word table (2x the explode+window+groupBy per merge step).
         # One cached row per step, released with the word tables.
-        rule = _persist_for(top_pair(pair_counts(words)), caches)
+        rule = _persist_tracked(top_pair(pair_counts(words)))
         rules.append(
             rule.select(
                 F.lit(step).alias("step"),
@@ -165,24 +148,20 @@ def bpe_train(
             )
         )
         if step < n_merges:
-            words = _persist_for(apply_merge(words, rule), caches)
+            words = _persist_tracked(apply_merge(words, rule))
     out = rules[0]
     for r in rules[1:]:
         out = out.unionAll(r)
     return out
 
 
-def bpe_encode(
-    tokens: DataFrame,
-    n_merges: int,
-    caches: list[DataFrame] | None = None,
-) -> DataFrame:
+def bpe_encode(tokens: DataFrame, n_merges: int) -> DataFrame:
     """The ENCODE half of BPE: learn `n_merges` rules (identical greedy
     trajectory to `bpe_train`) and apply ALL of them, returning the
-    encoded distinct-word table (word, freq, syms). Same persist
-    contract as bpe_train."""
-    words = _persist_for(words_with_symbols(tokens), caches)
+    encoded distinct-word table (word, freq, syms). Persists like
+    bpe_train."""
+    words = _persist_tracked(words_with_symbols(tokens))
     for _ in range(n_merges):
         rule = top_pair(pair_counts(words))
-        words = _persist_for(apply_merge(words, rule), caches)
+        words = _persist_tracked(apply_merge(words, rule))
     return words

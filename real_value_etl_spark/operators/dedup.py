@@ -21,9 +21,6 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import threading
-from contextlib import contextmanager
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -155,135 +152,6 @@ def ngram_jaccard_pairs_full(
     against; prefer `ngram_jaccard_pairs`."""
     idx = shingle_index(df, id_col, text_col)
     return _pair_jaccard(idx).filter(F.col("jac") >= threshold)
-
-
-# Opt-in suite-level pair-graph sharing (r7 verdict ask #8): four
-# registered queries (dedup_clusters, graph_components_star,
-# dedup_bcubed_eval, docs_leakage_safe_split) rebuild the identical
-# Jaccard pair graph. Measured at sf0.1, the rebuild took 22.5 s across
-# the four as shipped vs 10.9 s with one persisted pair frame (3.7 s
-# build paid once) — 52% saved. Inside
-# `shared_pair_cache()` the builder memoizes per (input-plan semantic
-# hash, id_col, text_col, threshold); outside it, behavior is unchanged
-# (per-query rebuild, zero cross-request state). Entries are persisted
-# frames released at context exit — the same explicit-lifecycle contract
-# as operators/scan.py's rank caches, and like them GLOBAL per process:
-# the context is for suite/batch drivers that own the whole run, not for
-# concurrent multi-tenant requests.
-_SHARED_PAIRS_LOCK = threading.Lock()
-# key (semanticHash, id_col, text_col, threshold) -> list of
-# (analyzed-plan handle, persisted frame). The hash alone is NOT identity:
-# Spark itself treats semanticHash as a bucket and confirms with
-# sameResult (r8 ADVICE) — a 32-bit collision between two different input
-# plans must not silently share the wrong pair graph, so lookups re-check
-# sameResult and colliding plans coexist as separate entries in the list.
-_SHARED_PAIRS: dict[tuple, list[tuple[object, DataFrame]]] | None = None
-
-
-def _analyzed_plan(df: DataFrame):
-    return df._jdf.queryExecution().analyzed()
-
-
-def _plan_hash(plan) -> object:
-    try:
-        return plan.semanticHash()
-    except Exception:  # non-classic backends: fall back to the plan text
-        return hash(plan.toString())
-
-
-def _same_plan(a, b) -> bool:
-    try:
-        return bool(a.sameResult(b))
-    except Exception:
-        return a.toString() == b.toString()
-
-
-def _shared_frames() -> list[DataFrame]:
-    """All persisted frames currently memoized (caller holds no lock:
-    snapshot under the lock, used by release + tests)."""
-    with _SHARED_PAIRS_LOCK:
-        if _SHARED_PAIRS is None:
-            return []
-        return [f for entries in _SHARED_PAIRS.values() for _, f in entries]
-
-
-@contextmanager
-def shared_pair_cache():
-    """Memoize `ngram_jaccard_pairs` onto one persisted frame per distinct
-    (input, columns, threshold) for the duration of the context; release
-    every frame on exit. Does not nest. See the module comment above for
-    the measured win and the concurrency contract."""
-    global _SHARED_PAIRS
-    with _SHARED_PAIRS_LOCK:
-        if _SHARED_PAIRS is not None:
-            raise RuntimeError("shared_pair_cache does not nest")
-        _SHARED_PAIRS = {}
-    try:
-        yield
-    finally:
-        with _SHARED_PAIRS_LOCK:
-            frames = [
-                f for entries in _SHARED_PAIRS.values() for _, f in entries
-            ]
-            _SHARED_PAIRS = None
-        for frame in frames:
-            try:
-                frame.unpersist()
-            except Exception:
-                pass  # session already stopped
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame, id_col: str, text_col: str, threshold: float
-) -> DataFrame:
-    """Exact n-gram (3-word shingle) Jaccard near-dup pairs >= threshold.
-
-    Primary path = AllPairs prefix filtering (candidates only join on each
-    doc's rare-first prefix, ~8.5%% of the full index join at sf0.01, and
-    — decisively at 100 TB — viral shingles land in almost no prefixes, so
-    the quadratic hot-shingle partition of the naive inverted-index join
-    never forms). Output is bit-identical to `ngram_jaccard_pairs_full`:
-    prefix filtering is lossless for Jaccard >= t (proof in
-    `prefix_filtered_candidates`). Inside a `shared_pair_cache()` context
-    the result is memoized+persisted per distinct input/threshold, so a
-    suite of pair-graph consumers pays the build once."""
-    if _SHARED_PAIRS is None:
-        return ngram_jaccard_pairs_prefix(df, id_col, text_col, threshold)
-    plan = _analyzed_plan(df)
-    key = (_plan_hash(plan), id_col, text_col, float(threshold))
-    with _SHARED_PAIRS_LOCK:
-        if _SHARED_PAIRS is None:  # context exited mid-call: plain path
-            return ngram_jaccard_pairs_prefix(
-                df, id_col, text_col, threshold
-            )
-        candidates = list(_SHARED_PAIRS.get(key, ()))
-    # sameResult is a py4j JVM round-trip — run it OUTSIDE the lock so a
-    # stalled gateway never serializes every concurrent consumer (r9
-    # ADVICE). The snapshot may go stale either way harmlessly: a hit on
-    # a since-released frame is still a valid lazy plan (see the publish
-    # path), and a concurrent publish we miss just means we build too
-    # and lose the locked re-validation race below.
-    for p, frame in candidates:
-        if _same_plan(p, plan):  # hash bucket + sameResult = identity
-            return frame
-    built = ngram_jaccard_pairs_prefix(df, id_col, text_col, threshold).persist()
-    winner = None
-    with _SHARED_PAIRS_LOCK:
-        cache = _SHARED_PAIRS
-        if cache is not None:
-            entries = cache.setdefault(key, [])
-            winner = next(
-                (f for p, f in entries if _same_plan(p, plan)), None
-            )
-            if winner is None:
-                entries.append((plan, built))
-                return built
-    # Lost a concurrent race, or the context exited between build and
-    # publish: release OUR persisted frame so nothing leaks for the
-    # session (r8 ADVICE). The frame stays a valid lazy plan after
-    # unpersist — callers on the exited-context path just lose caching.
-    built.unpersist()
-    return winner if cache is not None else built
 
 
 def minhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -435,29 +303,19 @@ def simhash_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame
 
 
 def simhash_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int,
-    caches: list[DataFrame] | None = None,
+    df: DataFrame, id_col: str, text_col: str, max_hamming: int
 ) -> DataFrame:
     """Near-dup pairs by SimHash: candidates share one of four 8-bit bands of
     the fingerprint (pigeonhole: hamming<=4 implies one identical band; wider
     distances trade recall for candidate count), verified by popcount.
 
     The fingerprint frame feeds both sides of the band self-join. Like the
-    shingle index in the Jaccard/LSH paths it is NOT persisted by default
-    (VERDICT r3 ask #3 / the r3 `caches` lifecycle convention): the two
+    shingle index in the Jaccard/LSH paths it is NOT persisted: the two
     consumers recompute the exploded 32-sum aggregation inside their own
     pipelined stages, pinning zero memory, and the cache-honest bench
     measures recompute ≈ persist at sf0.1 (the persist's win in earlier
-    rounds was cross-RUN cache reuse, not within-plan reuse). Callers who
-    reuse fingerprints across many jobs pass `caches` to persist with an
-    explicit release handle."""
+    rounds was cross-RUN cache reuse, not within-plan reuse)."""
     fps = simhash_fingerprints(df, id_col, text_col)
-    if caches is not None:
-        fps = fps.persist()
-        caches.append(fps)
     bands = fps.select(
         "did",
         "simhash",
@@ -650,15 +508,18 @@ def _packed_pair_tail(
     return cands.join(sa, "doc_a").join(sb, "doc_b"), inter
 
 
-def ngram_jaccard_pairs_prefix(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float,
-    caches: list[DataFrame] | None = None,
+def ngram_jaccard_pairs(
+    df: DataFrame, id_col: str, text_col: str, threshold: float
 ) -> DataFrame:
-    """Exact Jaccard >= threshold pairs through prefix-filtered candidates
-    — identical output to ngram_jaccard_pairs_full, smaller candidate join.
+    """Exact n-gram (3-word shingle) Jaccard near-dup pairs >= threshold.
+
+    AllPairs prefix filtering: candidates only join on each doc's
+    rare-first prefix (~8.5% of the full index join at sf0.01, and —
+    decisively at 100 TB — viral shingles land in almost no prefixes, so
+    the quadratic hot-shingle partition of the naive inverted-index join
+    never forms). Output is bit-identical to `ngram_jaccard_pairs_full`:
+    prefix filtering is lossless for Jaccard >= t (proof in
+    `prefix_filtered_candidates`).
 
     r12 shape: everything reads ONE packed docset frame
     (`_packed_prefix_docsets`) — candidate generation explodes each doc's
@@ -676,14 +537,9 @@ def ngram_jaccard_pairs_prefix(
     their own pipelined stages — zero pinned memory, the same
     recompute-over-persist policy as before (measured ~equal at sf0.1,
     and at 100 TB a MEMORY_AND_DISK copy of the packed corpus would hold
-    cluster memory for the session). Callers who DO want it materialized
-    (e.g. to reuse across many near-dup jobs) pass `caches`;
-    `ngram_jaccard_pairs_prefix_eager` runs that cycle itself."""
+    cluster memory for the session)."""
     idx = shingle_index(df, id_col, text_col)
     packed = _packed_prefix_docsets(idx, threshold)
-    if caches is not None:
-        packed = packed.persist()
-        caches.append(packed)
     verified, inter = _packed_pair_tail(packed, threshold)
     return verified.select(
         "doc_a",
@@ -693,11 +549,7 @@ def ngram_jaccard_pairs_prefix(
 
 
 def containment_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float,
-    caches: list[DataFrame] | None = None,
+    df: DataFrame, id_col: str, text_col: str, threshold: float
 ) -> DataFrame:
     """Asymmetric CONTAINMENT pairs over banded-LSH candidates:
     cont_a = |A ∩ B| / |A| and cont_b = |A ∩ B| / |B|, kept where either
@@ -716,14 +568,10 @@ def containment_pairs(
     O(|candidates|), no re-expansion, SHUFFLE_HASH-pinned like the
     Jaccard verify (the docset side is corpus-sized — never
     broadcastable at 100 TB). The index follows the same no-persist
-    default as `ngram_jaccard_pairs_prefix` (two consumers recompute the
-    cheap explode inside their own stages; pass `caches` to persist with
-    an explicit release handle).
+    default as `ngram_jaccard_pairs` (two consumers recompute the cheap
+    explode inside their own stages).
     """
     idx = shingle_index(df, id_col, text_col)
-    if caches is not None:
-        idx = idx.persist()
-        caches.append(idx)
     cands = lsh_candidate_pairs(_minhash_sig(idx))
     a, b, inter = _docset_sides(idx)
     return (
@@ -739,24 +587,3 @@ def containment_pairs(
             F.greatest(F.col("cont_a"), F.col("cont_b")) >= F.lit(threshold)
         )
     )
-
-
-def ngram_jaccard_pairs_prefix_eager(
-    df: DataFrame, id_col: str, text_col: str, threshold: float
-) -> DataFrame:
-    """Batch variant of `ngram_jaccard_pairs_prefix`: materializes the
-    (small) pair result, releases the (large, ≫ corpus) shingle-index
-    cache, and returns the cached result.
-
-    Use in long-lived sessions that process many distinct datasets — the
-    lazy variant would pin one exploded index per dataset for the session
-    lifetime. The pair result is persisted before the index is released so
-    downstream actions never silently re-run the shingle explosion."""
-    caches: list[DataFrame] = []
-    pairs = ngram_jaccard_pairs_prefix(
-        df, id_col, text_col, threshold, caches=caches
-    ).persist()
-    pairs.count()  # materialize while the index cache is still live
-    for c in caches:
-        c.unpersist()
-    return pairs

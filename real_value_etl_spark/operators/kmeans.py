@@ -29,6 +29,8 @@ import json
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .scan import _persist_tracked
+
 
 def _assign(df: DataFrame, vec_col: str, centroids: list[list[float]]) -> DataFrame:
     """Add `cluster` (argmin squared distance) and `dist2` columns."""
@@ -145,7 +147,6 @@ def kmeans_fit_fx(
     vec_col: str,
     init_fx: list[list[int]],
     n_iter: int = 3,
-    caches: list[DataFrame] | None = None,
 ) -> tuple[list[list[int]], DataFrame]:
     """Lloyd's k-means in int64 fixed-point: bit-exact on any engine,
     partitioning, or cluster size — which is what makes an ITERATIVE
@@ -163,13 +164,11 @@ def kmeans_fit_fx(
     The quantized-vector frame is PERSISTED: every iteration's update
     action (and the final assignment) re-reads it, and without a cache
     each of those n_iter+1 actions would re-scan and re-quantize the
-    source. Same lifecycle contract as the Jaccard prefix index
-    (operators/dedup.py) — lazy result, CacheManager dedup, optional
-    `caches` out-param for callers that release after materializing."""
+    source. The returned assignment is lazy and reads it too, so it is
+    persisted into the request scope (operators/scan.py) and released
+    when the request ends."""
     centroids = [[int(v) for v in c] for c in init_fx]
-    q = df.withColumn("__q", quantize_fx(F.col(vec_col))).persist()
-    if caches is not None:
-        caches.append(q)
+    q = _persist_tracked(df.withColumn("__q", quantize_fx(F.col(vec_col))))
     assigned = _assign_fx(q, "__q", centroids)
     for _ in range(n_iter):
         parts = (

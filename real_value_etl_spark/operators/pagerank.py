@@ -24,29 +24,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .scan import _persist_tracked
+
 SCALE = 10**12  # fixed-point unit
 DAMP_NUM, DAMP_DEN = 85, 100  # damping 0.85 as an exact ratio
-
-
-def _persist_for(df: DataFrame, caches: list[DataFrame] | None) -> DataFrame:
-    """persist() + register for release: into the caller's `caches` list
-    when one is passed, else into the scan.py rank-cache module registry
-    so `release_rank_caches()` frees it (r8 ADVICE: graph_ppr_seeds calls
-    with caches=None, and each call in a long-lived session accumulated
-    untracked persisted frames — edges, deg, and PPR's `base`)."""
-    if caches is not None:
-        df = df.persist()
-        caches.append(df)
-        return df
-    from .scan import _persist_tracked
-
-    return _persist_tracked(df)
 
 
 def pagerank_fixed_point(
     edges: DataFrame,
     n_iter: int = 3,
-    caches: list[DataFrame] | None = None,
     pre_partitioned: bool = False,
 ) -> DataFrame:
     """`edges` = (src, dst). Returns (node, rank) after `n_iter`
@@ -67,12 +53,11 @@ def pagerank_fixed_point(
 
     Without a cache Spark would also re-execute the caller's (often
     expensive — e.g. a distinct over a fact table) edge derivation once
-    per iteration plus once for degrees. Same lifecycle contract as the
-    Jaccard prefix index (operators/dedup.py): the result is lazy, so
-    the caches must outlive this function; CacheManager dedups repeated
-    calls, and callers that want release pass `caches` and unpersist
-    after materializing. At warehouse scale the edge list is a
-    checkpointed/bucketed intermediate instead.
+    per iteration plus once for degrees. The result is lazy, so the
+    caches must outlive this function: they are persisted into the
+    request scope (operators/scan.py) and released when the request
+    ends. At warehouse scale the edge list is a checkpointed/bucketed
+    intermediate instead.
 
     Callers whose edge derivation already ends hash-partitioned on `src`
     pass `pre_partitioned=True` to skip the redundant exchange (an
@@ -82,12 +67,11 @@ def pagerank_fixed_point(
     """
     if not pre_partitioned:
         edges = edges.repartition("src")
-    edges = _persist_for(edges, caches)
-    deg = _persist_for(
+    edges = _persist_tracked(edges)
+    deg = _persist_tracked(
         edges.groupBy("src")
         .agg(F.count("*").alias("deg"))
-        .select(F.col("src").alias("node"), "deg"),
-        caches,
+        .select(F.col("src").alias("node"), "deg")
     )
     n = deg.agg(F.count("*").alias("n"))
     # (node, deg, r): r0 = SCALE div N
@@ -125,7 +109,6 @@ HITS_SCALE = 10**6  # fixed-point unit for HITS (smaller than PageRank's:
 def hits_fixed_point(
     edges: DataFrame,
     n_iter: int = 3,
-    caches: list[DataFrame] | None = None,
     pre_partitioned: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """HITS (Kleinberg) hubs & authorities on a directed edge list.
@@ -162,8 +145,8 @@ def hits_fixed_point(
     """
     if not pre_partitioned:
         edges = edges.repartition("src")
-    edges = _persist_for(edges, caches)
-    edges_by_dst = _persist_for(edges.repartition("dst"), caches)
+    edges = _persist_tracked(edges)
+    edges_by_dst = _persist_tracked(edges.repartition("dst"))
     hubs = (
         edges.select("src").distinct().select(
             F.col("src").alias("node"), F.lit(HITS_SCALE).cast("long").alias("h")
@@ -200,7 +183,6 @@ def ppr_fixed_point(
     edges: DataFrame,
     seeds: DataFrame,
     n_iter: int = 3,
-    caches: list[DataFrame] | None = None,
     pre_partitioned: bool = False,
 ) -> DataFrame:
     """Personalized PageRank (random walk with restart): all teleport
@@ -224,12 +206,11 @@ def ppr_fixed_point(
     them as sources (e.g. with self-loops) first."""
     if not pre_partitioned:
         edges = edges.repartition("src")
-    edges = _persist_for(edges, caches)
-    deg = _persist_for(
+    edges = _persist_tracked(edges)
+    deg = _persist_tracked(
         edges.groupBy("src")
         .agg(F.count("*").alias("deg"))
-        .select(F.col("src").alias("node"), "deg"),
-        caches,
+        .select(F.col("src").alias("node"), "deg")
     )
     seed_flags = seeds.select(F.col("node"), F.lit(1).alias("__is_seed"))
     flagged = deg.join(F.broadcast(seed_flags), "node", "left").select(
@@ -243,11 +224,10 @@ def ppr_fixed_point(
     # node-sized subtree — one node-sized materialization, same order as
     # the `deg` persist above, instead of n_iter re-expansions.
     ns = flagged.agg(F.sum("__is_seed").alias("ns"))
-    base = _persist_for(
+    base = _persist_tracked(
         flagged.crossJoin(F.broadcast(ns)).select(
             "node", "deg", "ns", "__is_seed"
-        ),
-        caches,
+        )
     )
     ranks = base.select(
         "node",

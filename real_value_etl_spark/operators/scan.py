@@ -33,70 +33,82 @@ differently — value-derived time buckets — but rank order keys are
 arbitrary composites, where a value-derived bucketing needs boundary
 literals; persist is the general answer.)
 
-CACHE LIFECYCLE (r6 verdict ask #7): the persist cannot be released
-inside the lazy builder — unpersisting before the caller's action would
-re-open the hazard, and no hook fires after it. Every persist here is
-therefore TRACKED in a module registry; callers that own a request
-boundary (the REST layer, batch drivers, registry sweeps) call
-`release_rank_caches()` once the result is materialized, which
-unpersists every tracked frame (non-blocking) and empties the registry.
-A frame whose cache is dropped stays CORRECT if re-executed, but for a
-different reason than while persisted (r7 advice): `unpersist()` removes
-the persist marker entirely, so nothing re-materializes into the cache —
-instead, within any ONE subsequent action Catalyst's ReuseExchange rule
-collapses identical exchange subtrees into a single execution, so the
-nondeterministic range sample is still drawn once per action and every
-consumer in that plan sees the same partitioning. Two SEPARATE actions
-over a released frame may legitimately draw different range boundaries;
-each action is internally consistent, which is all per-action row-level
-determinism requires. Long-lived sessions that never release degrade to
-Spark's LRU eviction, exactly the pre-r6 behavior, never an error.
+CACHE LIFECYCLE: the persist cannot be released inside the lazy
+builder — unpersisting before the caller's action would re-open the
+hazard, and no hook fires after it. So every engine persist whose frame
+the returned lazy plan still reads goes through `_persist_tracked`,
+which records the frame in the current PERSIST_SCOPE list. The API
+(`api.handle_run_query`) sets a fresh list for each request and calls
+`release_rank_caches()` once the result is collected, which unpersists
+that request's frames (non-blocking) and empties its list. Outside any
+request (tests, tools, one-shot jobs) the scope is one process-wide
+list; callers there release when they choose, or never — a long-lived
+session that never releases degrades to Spark's LRU eviction, never an
+error. Releasing matters for correctness too, not only memory: Spark's
+CacheManager swaps a still-cached subtree into any later plan that
+matches it, so a frame left persisted after its request would keep
+serving old rows once the input files change.
+
+A frame whose cache is dropped stays CORRECT if re-executed:
+`unpersist()` removes the persist marker entirely, so nothing
+re-materializes into the cache — instead, within any ONE subsequent
+action Catalyst's ReuseExchange rule collapses identical exchange
+subtrees into a single execution, so the nondeterministic range sample
+is still drawn once per action and every consumer in that plan sees the
+same partitioning. Two SEPARATE actions over a released frame may
+legitimately draw different range boundaries; each action is internally
+consistent, which is all per-action row-level determinism requires.
 `tests/test_round7_ops.py` holds storage flat across repeated API calls.
 
-THREADING: the registry is guarded by a lock, so concurrent appends and
-releases cannot corrupt it — but release scope is GLOBAL, not
-per-request. Nothing serializes query handling: FastAPI runs the REST
-layer's sync `def` handlers (`api.py`) in a thread pool, so requests do
-run concurrently, and a `release_rank_caches()` at the end of one
-request can unpersist frames another in-flight request persisted.
-Results stay correct, per the paragraph above; the other request just
-loses its cache and recomputes. Per-request cache lists would remove
-that cross-request release.
+THREADING: FastAPI runs the REST layer's sync `def` handlers (`api.py`)
+in a thread pool, so requests do run concurrently. Each request's frames
+live in its own context's list, so one request's release never touches
+the frames another in-flight request persisted. One overlap remains:
+CacheManager keeps ONE entry per distinct plan, so when two concurrent
+requests persist frames with identical plans they share that entry, and
+the first request to finish drops it. The other request stays correct
+(previous paragraph) and just recomputes. The lock guards the
+process-wide default list, which threads outside any request share.
 """
 
 from __future__ import annotations
 
 import threading
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Strong refs to every frame persisted by the two-phase rank family —
-# the JVM-side cache outlives the Python DataFrame object, so a weak
-# registry would leak exactly the entries it was meant to release.
-_RANK_CACHES: list[DataFrame] = []
-_RANK_CACHES_LOCK = threading.Lock()
+# Strong refs to every frame persisted through `_persist_tracked` — the
+# JVM-side cache outlives the Python DataFrame object, so a weak
+# registry would leak exactly the entries it was meant to release. The
+# API sets a fresh list per request; the one default list is the
+# process-wide scope outside any request.
+PERSIST_SCOPE: ContextVar[list[DataFrame]] = ContextVar(
+    "PERSIST_SCOPE", default=[]
+)
+_PERSIST_SCOPE_LOCK = threading.Lock()
 
 
 def _persist_tracked(df: DataFrame) -> DataFrame:
-    """persist() + register for `release_rank_caches` (see module doc)."""
+    """persist() + register in the current PERSIST_SCOPE for
+    `release_rank_caches` (see module doc)."""
     df = df.persist()
-    with _RANK_CACHES_LOCK:
-        _RANK_CACHES.append(df)
+    with _PERSIST_SCOPE_LOCK:
+        PERSIST_SCOPE.get().append(df)
     return df
 
 
 def release_rank_caches() -> int:
-    """Unpersist every cached range-partitioned frame created by the
-    rank-family operators since the last release; returns how many were
-    dropped. Safe at any time — a released frame stays per-action
-    consistent via exchange reuse (module doc, CACHE LIFECYCLE) — but
-    GLOBAL in scope: concurrent requests' caches are released too (see
-    module doc, THREADING). Call at request end in long-lived services;
-    one-shot jobs may skip it."""
-    with _RANK_CACHES_LOCK:
-        frames = list(_RANK_CACHES)
-        _RANK_CACHES.clear()
+    """Unpersist every frame `_persist_tracked` recorded in the current
+    PERSIST_SCOPE since its last release; returns how many were dropped.
+    Safe at any time — a released frame stays per-action consistent via
+    exchange reuse (module doc, CACHE LIFECYCLE). The API calls it at
+    request end; one-shot jobs may skip it."""
+    with _PERSIST_SCOPE_LOCK:
+        scope = PERSIST_SCOPE.get()
+        frames = list(scope)
+        scope.clear()
     n = 0
     for frame in frames:
         try:

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as T
+from ..operators.scan import _persist_tracked
 from ..operators.similarity import brute_force_topk
 from .llm import ANN_QUERY_MOD, ANN_SEED_CAP
 from .registry import register, table
@@ -1518,14 +1519,12 @@ def emb_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     tri = q.mapInPandas(_gram_batches, schema=GRAM_SCHEMA).groupBy(
         "i", "j"
     ).agg(F.sum("s").alias("s"))
-    g = (
-        tri.select("i", "j", "s")
-        .unionByName(
+    g = _persist_tracked(
+        tri.select("i", "j", "s").unionByName(
             tri.filter(F.col("i") != F.col("j")).select(
                 F.col("j").alias("i"), F.col("i").alias("j"), "s"
             )
         )
-        .persist()
     )
 
     def matvec(v: list[int]) -> DataFrame:
@@ -2399,11 +2398,10 @@ def text_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", T.portable_hash32(F.col("token")).alias("hv")
     ).distinct()
     wsk = Window.partitionBy("source").orderBy("hv")
-    sk = (
+    sk = _persist_tracked(
         hv.withColumn("rn", F.row_number().over(wsk))
         .filter(F.col("rn") <= KMV_JACC_K)
         .drop("rn")
-        .persist()
     )
     srcs = sk.select("source").distinct()
     prs = (
@@ -5239,12 +5237,10 @@ def emb_pca_deflation(spark: SparkSession, sf_dir: str) -> DataFrame:
     for _ in range(POW_ITERS - 1):
         u = _pow_renorm_py(_defl_py(pull(matvec(u)), v1))
 
-    from ..operators.scan import _persist_tracked
-
     # wf is materialized by the pull below; it is the d-row frame the
-    # RETURNED plan reads, so it stays persisted under the scan tracker
-    # (release_rank_caches frees it — the BPE/PPR leak-class contract)
-    # while the corpus-sized g cache is released as soon as wf exists.
+    # RETURNED plan reads, so it stays persisted in the request scope
+    # (released at request end) while the corpus-sized g cache is
+    # released as soon as wf exists.
     wf = _persist_tracked(matvec(u))
     c = sum(
         wj * vj for wj, vj in zip(pull(wf), v1)

@@ -19,6 +19,7 @@ from ..functions import vectors as V
 from ..operators import dedup as D
 from ..operators import multimodal as M
 from ..operators import similarity as S
+from ..operators.scan import _persist_tracked
 from .registry import register, table
 
 JACCARD_THRESHOLD = 0.5
@@ -2429,7 +2430,7 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     optimized path must return the identical answer; at 100 TB the
     candidate join shrinks by the prefix ratio AND skips the most common
     (hottest, most skewed) shingles entirely."""
-    return D.ngram_jaccard_pairs_prefix(
+    return D.ngram_jaccard_pairs(
         table(spark, sf_dir, "documents"), "doc_id", "text", JACCARD_THRESHOLD
     )
 
@@ -3223,10 +3224,8 @@ def sim_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter((F.col("vec_id") % ANN_QUERY_MOD == 0) & (F.col("vec_id") < ANN_SEED_CAP))
     cents = emb.filter((F.col("vec_id") % IVF_CENTROID_MOD == 0) & (F.col("vec_id") < ANN_SEED_CAP))
-    exact = (
-        brute_force_topk(emb, queries, ANN_K)
-        .select("qid", "vec_id")
-        .persist()
+    exact = _persist_tracked(
+        brute_force_topk(emb, queries, ANN_K).select("qid", "vec_id")
     )
     expected = F.broadcast(exact.agg(F.count("*").alias("n_expected")))
     arms = []
@@ -3733,8 +3732,6 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(
         (F.col("vec_id") % ANN_QUERY_MOD == 0) & (F.col("vec_id") < ANN_SEED_CAP)
     )
-    from ..operators.scan import _persist_tracked
-
     cand = _persist_tracked(
         S.brute_force_topk(emb, queries, MMR_CAND).select(
             "qid", "vec_id", F.col("sim").alias("rel")

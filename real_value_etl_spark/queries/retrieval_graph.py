@@ -40,6 +40,7 @@ from ..functions import text as T
 from ..functions import vectors as V
 from ..operators import dedup as D
 from ..operators import similarity as S
+from ..operators.scan import _persist_tracked
 from .llm import (
     IVF_CENTROID_MOD,
     JACCARD_THRESHOLD,
@@ -894,10 +895,8 @@ def text_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the Jaccard paths (strictly larger, kept unpersisted by policy),
     # this frame is df-capped three-column rows — the boilerplate mass is
     # already gone.
-    w = (
-        idx.join(dfr, "sh")
-        .select(F.col("did").alias("doc_id"), "sh", "df")
-        .persist()
+    w = _persist_tracked(
+        idx.join(dfr, "sh").select(F.col("did").alias("doc_id"), "sh", "df")
     )
 
     def bucket_fold(grouped):

@@ -201,8 +201,8 @@ def text_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a (word) partitioning + one grouped rebuild, and each chosen
     pair flows forward as a broadcast one-row frame; the ONE extra step
     vs training is the final application. Per-iteration word tables are
-    persist-tracked for release (operators/bpe.py, the PPR leak-class
-    fix). Reference basis: SURVEY.md §2.12 tokenizer family (absent in
+    persisted in the request scope and released at request end
+    (operators/bpe.py). Reference basis: SURVEY.md §2.12 tokenizer family (absent in
     reference)."""
     from ..operators.bpe import bpe_encode
 

@@ -890,30 +890,6 @@ def test_jaccard_prefix_filter_prunes_candidates(spark, sf_dir):
     )
 
 
-def test_jaccard_prefix_eager_releases_index_cache(spark, sf_dir):
-    """The eager Jaccard variant must not leave the shingle index pinned:
-    after materialize-and-release, the only persisted data is the (small)
-    pair result, and unpersisting that returns the session to its
-    pre-call cache footprint. Guards the 100 TB lifecycle property — a
-    long-lived session touching many datasets must not accumulate one
-    exploded index (≫ corpus size) per dataset."""
-    from real_value_etl_spark.operators.dedup import (
-        ngram_jaccard_pairs_prefix_eager,
-    )
-    from real_value_etl_spark.queries.registry import table
-
-    sc = spark.sparkContext
-    spark.catalog.clearCache()
-    baseline = len(sc._jsc.getPersistentRDDs())
-    d = table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs_prefix_eager(d, "doc_id", "text", 0.5)
-    # index released, ONLY the materialized pair result remains cached
-    assert len(sc._jsc.getPersistentRDDs()) == baseline + 1
-    assert pairs.count() > 0
-    pairs.unpersist()
-    assert len(sc._jsc.getPersistentRDDs()) == baseline
-
-
 def test_staging_swap_has_no_empty_table_window(spark, tmp_path):
     """Two-phase overwrite semantics of the ClickHouse sink
     (sinks/writers.py:write_clickhouse_jdbc), proven against DuckDB since

@@ -22,7 +22,7 @@ def test_packed_prefix_jaccard_matches_windowed_formulation(spark):
     shingles sharing one document frequency) and containment shapes."""
     from real_value_etl_spark.operators.dedup import (
         _docset_sides,
-        ngram_jaccard_pairs_prefix,
+        ngram_jaccard_pairs,
         prefix_filtered_candidates,
         shingle_index,
     )
@@ -43,7 +43,7 @@ def test_packed_prefix_jaccard_matches_windowed_formulation(spark):
 
     new = {
         (r.doc_a, r.doc_b, r.jac)
-        for r in ngram_jaccard_pairs_prefix(d, "doc_id", "text", 0.5).collect()
+        for r in ngram_jaccard_pairs(d, "doc_id", "text", 0.5).collect()
     }
 
     idx = shingle_index(d, "doc_id", "text")

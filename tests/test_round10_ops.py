@@ -660,8 +660,8 @@ def test_bpe_apply_hand_corpus(spark, tmp_path):
 
 
 def test_bpe_persists_are_tracked(spark, sf_dir):
-    """bpe_train/bpe_encode with caches=None must register every
-    persisted word table in the scan tracker (the PPR leak class):
+    """bpe_train/bpe_encode must register every persisted word table in
+    the current persist scope (the PPR leak class):
     release_rank_caches() frees them all."""
     from real_value_etl_spark.operators import scan
     from real_value_etl_spark.operators.bpe import bpe_encode, bpe_train
@@ -685,13 +685,6 @@ def test_bpe_persists_are_tracked(spark, sf_dir):
     # words + n_merges rebuilds; encode's rule has ONE consumer (the
     # rebuild), so it is correctly NOT persisted
     assert n2 == BPE_MERGES + 1
-    # caches= list still takes precedence and tracker stays empty
-    caches: list = []
-    bpe_train(toks, BPE_MERGES, caches=caches).count()
-    assert len(caches) == 2 * BPE_MERGES
-    assert scan.release_rank_caches() == 0
-    for f in caches:
-        f.unpersist()
 
 
 def test_bitmap_intersect_exact_sets(spark, sf_dir):

@@ -196,93 +196,6 @@ def test_png_decode_gray_rejects_nothing_silently(spark):
 
 
 # ---------------------------------------------------------------------------
-# shared pair-graph cache under concurrency (VERDICT r10 ask #5): N threads
-# with FORCED semanticHash collisions, racing context entry/exit — the
-# sameResult/unpersist fixes hold, results stay correct per input, and no
-# persisted frame survives the context
-# ---------------------------------------------------------------------------
-def test_shared_pair_cache_concurrent_stress(spark, monkeypatch):
-    import threading
-
-    import real_value_etl_spark.operators.dedup as D
-
-    # Force every key into ONE hash bucket: identity must now rest
-    # entirely on the sameResult confirmation path.
-    monkeypatch.setattr(D, "_plan_hash", lambda plan: 0)
-
-    base = [
-        (i, f"alpha beta gamma delta epsilon zeta {i % 7} eta theta iota")
-        for i in range(60)
-    ]
-    docs = spark.createDataFrame(base, ["doc_id", "text"])
-    inputs = [
-        docs,
-        docs.filter("doc_id < 40"),
-        docs.filter("doc_id >= 10"),
-    ]
-    # ground truth from the plain (uncached) path, outside any context
-    expected = [
-        D.ngram_jaccard_pairs(df, "doc_id", "text", 0.5).count()
-        for df in inputs
-    ]
-    assert D._SHARED_PAIRS is None
-
-    sc = spark.sparkContext._jsc.sc()
-    baseline_rdds = len(sc.getRDDStorageInfo())
-
-    errors: list = []
-    stop = threading.Event()
-
-    def worker(seed: int) -> None:
-        k = seed
-        try:
-            while not stop.is_set():
-                df = inputs[k % 3]
-                n = D.ngram_jaccard_pairs(df, "doc_id", "text", 0.5).count()
-                assert n == expected[k % 3], (k % 3, n, expected[k % 3])
-                k += 1
-        except Exception as exc:  # surfaced below — threads must not die
-            errors.append(exc)
-
-    threads = [threading.Thread(target=worker, args=(i,)) for i in range(8)]
-    for t in threads:
-        t.start()
-    try:
-        # churn the context while calls are in flight: in-context calls
-        # share via the collision bucket; mid-exit calls exercise the
-        # build-then-context-died unpersist path; out-of-context calls
-        # take the plain rebuild path
-        for _ in range(6):
-            with D.shared_pair_cache():
-                bucket = D._SHARED_PAIRS
-                # let a few calls land inside the context
-                threading.Event().wait(0.4)
-                with D._SHARED_PAIRS_LOCK:
-                    entries = sum(len(v) for v in bucket.values())
-                    nkeys = len(bucket)
-                # forced collision: at most ONE bucket key, but distinct
-                # plans coexist as separate sameResult-confirmed entries
-                assert nkeys <= 1
-                assert entries <= 3
-            threading.Event().wait(0.1)
-    finally:
-        stop.set()
-        for t in threads:
-            t.join(timeout=120)
-    assert not errors, errors[:3]
-    assert D._SHARED_PAIRS is None
-    # every persisted pair frame was released: storage registry is back
-    # at (or below) its pre-test level once the final unpersists land
-    import time
-
-    for _ in range(50):
-        if len(sc.getRDDStorageInfo()) <= baseline_rdds:
-            break
-        time.sleep(0.2)
-    assert len(sc.getRDDStorageInfo()) <= baseline_rdds
-
-
-# ---------------------------------------------------------------------------
 # URL normalization hand cases (VERDICT r10 ask #6): expected outputs are
 # WRITTEN BY HAND, so the Spark normalizer and the DuckDB oracle normalizer
 # cannot be wrong in the same way without failing here

@@ -42,10 +42,10 @@ def test_release_rank_caches_drops_tracked_persists(spark):
     )
     ranked = scan.global_row_number(df, ["k"], "rn", n_partitions=8)
     assert ranked.count() == 5000
-    assert len(scan._RANK_CACHES) == 1
+    assert len(scan.PERSIST_SCOPE.get()) == 1
     assert not _cache_empty(spark)
     assert scan.release_rank_caches() == 1
-    assert not scan._RANK_CACHES
+    assert not scan.PERSIST_SCOPE.get()
     assert _cache_empty(spark)
 
 
@@ -68,17 +68,20 @@ def test_released_cache_recomputes_correctly(spark):
 
 
 def test_api_requests_hold_storage_flat(spark, sf_dir):
-    """r6 verdict ask #7 'Done' criterion: repeated API calls through a
-    rank-family query leave no cached frames behind."""
+    """r6 verdict ask #7 'Done' criterion: repeated API calls leave no
+    cached frames behind — through a rank-family query, and through
+    queries whose returned plan reads a frame they persist themselves
+    (the k-means quantized vectors, the tf-idf weighted index)."""
     from real_value_etl_spark.api import handle_run_query
 
     spark.catalog.clearCache()
     scan.release_rank_caches()
-    for _ in range(3):
-        out = handle_run_query(spark, "q_ntile_deciles", sf_dir, limit=5)
-        assert out["status"] == "success"
-        assert not scan._RANK_CACHES
-        assert _cache_empty(spark)
+    for name in ("q_ntile_deciles", "sim_kmeans_train", "text_tfidf_cosine_pairs"):
+        for _ in range(3):
+            out = handle_run_query(spark, name, sf_dir, limit=5)
+            assert out["status"] == "success", out
+            assert not scan.PERSIST_SCOPE.get()
+            assert _cache_empty(spark), name
 
 
 # ---------------------------------------------------------------------------

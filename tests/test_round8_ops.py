@@ -362,67 +362,6 @@ def test_mp3_codec_recovers_title_and_frame_math(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Shared jaccard-pair cache (r7 verdict ask #8)
-# ---------------------------------------------------------------------------
-
-
-def test_shared_pair_cache_identical_results_and_single_build(spark, sf_dir):
-    """Inside shared_pair_cache(), the pair-graph consumers must return
-    exactly their uncached results, the pair frame must be built once
-    (second consumer reuses the same persisted DataFrame object), and
-    exit must release every persisted entry."""
-    from real_value_etl_spark.operators import dedup as D
-    from real_value_etl_spark.queries.all_queries import REGISTRY
-
-    def rows(name):
-        return {tuple(r) for r in REGISTRY[name].fn(spark, sf_dir).collect()}
-
-    base_clusters = rows("dedup_clusters")
-    base_star = rows("graph_components_star")
-
-    spark.catalog.clearCache()
-    with D.shared_pair_cache():
-        got_clusters = rows("dedup_clusters")
-        frames = D._shared_frames()
-        assert len(frames) == 1
-        first = frames[0]
-        got_star = rows("graph_components_star")
-        assert len(D._shared_frames()) == 1  # second consumer hit the memo
-        assert D._shared_frames()[0] is first
-        assert first.storageLevel.useMemory  # persisted while active
-    assert D._SHARED_PAIRS is None
-    assert not first.storageLevel.useMemory  # released on exit
-    assert got_clusters == base_clusters
-    assert got_star == base_star
-
-
-def test_shared_pair_cache_does_not_nest(spark):
-    from real_value_etl_spark.operators import dedup as D
-
-    with D.shared_pair_cache():
-        with pytest.raises(RuntimeError, match="does not nest"):
-            with D.shared_pair_cache():
-                pass
-    assert D._SHARED_PAIRS is None
-
-
-def test_shared_pair_cache_distinguishes_thresholds(spark, sf_dir):
-    """Different thresholds (or inputs) must NOT share a frame — the memo
-    key includes the analyzed-plan semantic hash and the threshold."""
-    from real_value_etl_spark.operators import dedup as D
-    from real_value_etl_spark.queries.registry import table
-
-    d = table(spark, sf_dir, "documents")
-    with D.shared_pair_cache():
-        a = D.ngram_jaccard_pairs(d, "doc_id", "text", 0.5)
-        b = D.ngram_jaccard_pairs(d, "doc_id", "text", 0.8)
-        again = D.ngram_jaccard_pairs(d, "doc_id", "text", 0.5)
-        assert a is again
-        assert a is not b
-        assert len(D._shared_frames()) == 2
-
-
-# ---------------------------------------------------------------------------
 # Streaming priority sample: mergeability + replay idempotence
 # ---------------------------------------------------------------------------
 

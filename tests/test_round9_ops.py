@@ -53,90 +53,6 @@ def test_no_decimal_output_columns(spark, sf_dir, name):
 
 
 # ---------------------------------------------------------------------------
-# shared_pair_cache hardening (r8 ADVICE items 1+2)
-# ---------------------------------------------------------------------------
-
-
-def test_shared_pair_cache_hash_collision_is_not_a_hit(spark, sf_dir):
-    """Two semantically different inputs whose plan hashes collide must
-    NOT share a pair graph: identity = hash bucket + sameResult, exactly
-    Spark's own (semanticHash, sameResult) contract."""
-    from real_value_etl_spark.operators import dedup as D
-    from real_value_etl_spark.queries.registry import table
-    from unittest import mock
-
-    d = table(spark, sf_dir, "documents")
-    d2 = d.filter("doc_id % 2 = 0")  # different semantics
-    with mock.patch.object(D, "_plan_hash", return_value=12345):
-        with D.shared_pair_cache():
-            a = D.ngram_jaccard_pairs(d, "doc_id", "text", 0.5)
-            b = D.ngram_jaccard_pairs(d2, "doc_id", "text", 0.5)
-            assert a is not b  # forced-collision bucket, sameResult=False
-            assert len(D._shared_frames()) == 2
-            # genuine re-lookup inside the same bucket still hits
-            assert D.ngram_jaccard_pairs(d, "doc_id", "text", 0.5) is a
-            assert D.ngram_jaccard_pairs(d2, "doc_id", "text", 0.5) is b
-
-
-def test_shared_pair_cache_loser_frame_released(spark, sf_dir):
-    """If another thread published the same entry between our build and
-    our publish, OUR persisted frame must be unpersisted (no session-long
-    storage leak) and the winner returned."""
-    from real_value_etl_spark.operators import dedup as D
-    from real_value_etl_spark.queries.registry import table
-
-    d = table(spark, sf_dir, "documents")
-    with D.shared_pair_cache():
-        winner = D.ngram_jaccard_pairs(d, "doc_id", "text", 0.5)
-        # simulate the losing thread: build+persist before re-checking
-        loser = D.ngram_jaccard_pairs_prefix(d, "doc_id", "text", 0.5).persist()
-        plan = D._analyzed_plan(d)
-        key = (D._plan_hash(plan), "doc_id", "text", 0.5)
-        with D._SHARED_PAIRS_LOCK:
-            entries = D._SHARED_PAIRS[key]
-            got = next(f for p, f in entries if D._same_plan(p, plan))
-        assert got is winner
-        # the real code path: call again — must return winner, and the
-        # cache must still hold exactly one frame for this key
-        again = D.ngram_jaccard_pairs(d, "doc_id", "text", 0.5)
-        assert again is winner
-        assert len(entries) == 1
-        loser.unpersist()
-
-
-def test_shared_pair_cache_exit_during_build_no_leak(spark, sf_dir):
-    """Context exits between build and publish: the freshly persisted
-    frame must be unpersisted before being returned (r8 ADVICE leak)."""
-    from real_value_etl_spark.operators import dedup as D
-    from real_value_etl_spark.queries.registry import table
-
-    d = table(spark, sf_dir, "documents")
-
-    real_prefix = D.ngram_jaccard_pairs_prefix
-    state = {}
-
-    def sabotage(*args, **kwargs):
-        out = real_prefix(*args, **kwargs)
-        # context tears down while this "thread" is still building
-        with D._SHARED_PAIRS_LOCK:
-            state["stolen"] = D._SHARED_PAIRS
-            D._SHARED_PAIRS = None
-        return out
-
-    with D.shared_pair_cache():
-        try:
-            D.ngram_jaccard_pairs_prefix, patched = sabotage, True
-            out = D.ngram_jaccard_pairs(d, "doc_id", "text", 0.5)
-        finally:
-            D.ngram_jaccard_pairs_prefix = real_prefix
-        assert not out.storageLevel.useMemory  # released, no leak
-        assert out.count() >= 0  # still a valid lazy plan
-        # restore so the context manager's finally finds a dict to clear
-        with D._SHARED_PAIRS_LOCK:
-            D._SHARED_PAIRS = state["stolen"]
-
-
-# ---------------------------------------------------------------------------
 # HDR histogram: BIGINT shift base for values beyond 2^32 (r8 ADVICE)
 # ---------------------------------------------------------------------------
 
@@ -180,13 +96,13 @@ def test_hdr_sub_bucket_wide_values_match_duckdb(spark):
 
 
 # ---------------------------------------------------------------------------
-# PPR/PageRank/HITS persisted frames tracked when caches=None (r8 ADVICE)
+# PPR/PageRank/HITS persisted frames tracked in the persist scope (r8 ADVICE)
 # ---------------------------------------------------------------------------
 
 
 def test_ppr_caches_none_tracked_in_rank_registry(spark):
-    """graph_ppr_seeds calls ppr_fixed_point(caches=None); every persist
-    it takes (edges, deg, base) must land in the scan.py rank registry so
+    """Every persist ppr_fixed_point takes (edges, deg, base) must land
+    in the current persist scope (operators/scan.py) so
     release_rank_caches() frees them instead of leaking per call."""
     from real_value_etl_spark.operators import scan
     from real_value_etl_spark.operators.pagerank import ppr_fixed_point
@@ -197,29 +113,12 @@ def test_ppr_caches_none_tracked_in_rank_registry(spark):
     seeds = spark.createDataFrame([(1,)], "node long")
 
     scan.release_rank_caches()
-    before = len(scan._RANK_CACHES)
+    before = len(scan.PERSIST_SCOPE.get())
     ppr_fixed_point(edges, seeds, n_iter=2).collect()
-    tracked = len(scan._RANK_CACHES) - before
+    tracked = len(scan.PERSIST_SCOPE.get()) - before
     assert tracked == 3  # edges, deg, base — none untracked
     released = scan.release_rank_caches()
     assert released >= 3
-
-
-def test_ppr_caches_list_unchanged_contract(spark):
-    """Passing an explicit caches list must keep the old contract: the
-    frames land in THE LIST, not the module registry."""
-    from real_value_etl_spark.operators import scan
-    from real_value_etl_spark.operators.pagerank import ppr_fixed_point
-
-    edges = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long")
-    seeds = spark.createDataFrame([(1,)], "node long")
-    scan.release_rank_caches()
-    caches = []
-    ppr_fixed_point(edges, seeds, n_iter=1, caches=caches).collect()
-    assert len(caches) == 3
-    assert len(scan._RANK_CACHES) == 0
-    for f in caches:
-        f.unpersist()
 
 
 # ---------------------------------------------------------------------------
