@@ -5090,12 +5090,12 @@ def _defl_py(w: list[int], v1: list[int]) -> list[int]:
 def _pca2_oracle() -> str:
     v1_rounds = "".join(
         f"""
-    w{t} AS (
+    w{t} AS MATERIALIZED (
       SELECT g.i AS j, SUM(CAST(g.s AS HUGEINT) * v{t - 1}.v) AS w
       FROM g JOIN v{t - 1} ON v{t - 1}.j = g.j GROUP BY g.i
     ),
-    m{t} AS (SELECT GREATEST(MAX(ABS(w)), 1) AS mw FROM w{t}),
-    v{t} AS (
+    m{t} AS MATERIALIZED (SELECT GREATEST(MAX(ABS(w)), 1) AS mw FROM w{t}),
+    v{t} AS MATERIALIZED (
       SELECT j,
              CASE WHEN w < 0 THEN -(((-w) * {POW_V_FX}) // mw)
                   ELSE (w * {POW_V_FX}) // mw END AS v
@@ -5108,15 +5108,15 @@ def _pca2_oracle() -> str:
     u_rounds = ""
     for t in range(1, POW_ITERS + 1):
         u_rounds += f"""
-    uw{t} AS (
+    uw{t} AS MATERIALIZED (
       SELECT g.i AS j, SUM(CAST(g.s AS HUGEINT) * u{t - 1}.v) AS w
       FROM g JOIN u{t - 1} ON u{t - 1}.j = g.j GROUP BY g.i
     ),
-    uc{t} AS (
+    uc{t} AS MATERIALIZED (
       SELECT SUM(uw{t}.w * f.v) AS c
       FROM uw{t} JOIN {v1_final} f ON f.j = uw{t}.j
     ),
-    ud{t} AS (
+    ud{t} AS MATERIALIZED (
       SELECT uw{t}.j,
              uw{t}.w - (CASE WHEN uc{t}.c * f.v < 0
                              THEN -((-(uc{t}.c * f.v)) // {vv})
@@ -5124,8 +5124,8 @@ def _pca2_oracle() -> str:
       FROM uw{t}, uc{t}
       JOIN {v1_final} f ON f.j = uw{t}.j
     ),
-    um{t} AS (SELECT GREATEST(MAX(ABS(w)), 1) AS mw FROM ud{t}),
-    u{t} AS (
+    um{t} AS MATERIALIZED (SELECT GREATEST(MAX(ABS(w)), 1) AS mw FROM ud{t}),
+    u{t} AS MATERIALIZED (
       SELECT j,
              CASE WHEN w < 0 THEN -(((-w) * {POW_V_FX}) // mw)
                   ELSE (w * {POW_V_FX}) // mw END AS v
@@ -5142,7 +5142,7 @@ def _pca2_oracle() -> str:
       SELECT i.range AS i, j.range AS j
       FROM range(0, {GRAM_DIM}) i, range(0, {GRAM_DIM}) j
     ),
-    g AS (
+    g AS MATERIALIZED (
       SELECT p.i, p.j, SUM(v[p.i + 1] * v[p.j + 1]) AS s
       FROM q, pairs p GROUP BY p.i, p.j
     ),

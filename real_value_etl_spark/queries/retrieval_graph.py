@@ -2432,7 +2432,7 @@ def _dsweep_bfs_cte(tag: str, seed_cte: str) -> str:
     steps = []
     for t in range(1, DSWEEP_HOPS + 1):
         steps.append(f""",
-    {tag}{t} AS (
+    {tag}{t} AS MATERIALIZED (
       SELECT node, MIN(dist) AS dist FROM (
         SELECT node, dist FROM {tag}{t - 1}
         UNION ALL
@@ -2456,9 +2456,9 @@ def _dsweep_oracle() -> str:
     sym AS (SELECT a AS x, b AS y FROM und
             UNION ALL SELECT b AS x, a AS y FROM und),
     deg AS (SELECT x AS node, COUNT(*) AS d FROM sym GROUP BY x),
-    root AS (SELECT node FROM deg ORDER BY d DESC, node ASC LIMIT 1),
+    root AS MATERIALIZED (SELECT node FROM deg ORDER BY d DESC, node ASC LIMIT 1),
     {_dsweep_bfs_cte("ra", "root")},
-    far AS (SELECT node FROM ra{DSWEEP_HOPS}
+    far AS MATERIALIZED (SELECT node FROM ra{DSWEEP_HOPS}
             ORDER BY dist DESC, node ASC LIMIT 1),
     {_dsweep_bfs_cte("fb", "far")}
     SELECT (SELECT node FROM root) AS root_node,
