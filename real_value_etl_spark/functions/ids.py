@@ -50,8 +50,3 @@ def listing_uid(listing_id: Column, platform_id: Column) -> Column:
     (reference types_transform.py:76-79)."""
     name = F.concat_ws("_", listing_id.cast("string"), platform_id.cast("string"))
     return uuid5_expr(name)
-
-
-def uuid5_py(name: str) -> str:
-    """Python reference used by tests to pin uuid5_expr to the RFC."""
-    return str(uuid.uuid5(uuid.NAMESPACE_DNS, name))

@@ -39,10 +39,6 @@ def cosine(a: Column, b: Column) -> Column:
 # --------------------------- DuckDB SQL mirrors ---------------------------
 
 
-def dot_sql(a: str, b: str) -> str:
-    return f"list_dot_product({a}, {b})"
-
-
 def cosine_sql(a: str, b: str) -> str:
     return (
         f"(list_dot_product({a}, {b}) / "

@@ -108,15 +108,3 @@ def _finalize_cols(uint8_wrap: bool = True) -> tuple[Column, ...]:
 def finalize_unified(df: DataFrame, uint8_wrap: bool = True) -> DataFrame:
     """Cast the merged frame to UNIFIED_SCHEMA semantics (one select)."""
     return df.select(*_finalize_cols(uint8_wrap))
-
-
-def check_enum_domains(df: DataFrame) -> DataFrame:
-    """Constraint check for Enum8-typed fields (schema.md) — returns rows
-    violating the declared domains; empty result == valid load."""
-    from ..schema import ENUM_DOMAINS
-
-    cond = None
-    for col, domain in ENUM_DOMAINS.items():
-        bad = ~F.col(col).isin(*sorted(domain)) & F.col(col).isNotNull()
-        cond = bad if cond is None else (cond | bad)
-    return df.filter(cond)

@@ -118,10 +118,6 @@ def _conform_cols(exprs: dict[str, Column]) -> tuple[Column, ...]:
     return tuple(out)
 
 
-def _conform(df: DataFrame, exprs: dict[str, Column]) -> DataFrame:
-    return df.select(*_conform_cols(exprs))
-
-
 def _keep_first(df: DataFrame, key: str) -> DataFrame:
     """drop_duplicates(subset=[key], keep='first') with deterministic winner
     (reference transformation.py:224-228, :395). Uses the file-order column

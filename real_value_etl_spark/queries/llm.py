@@ -100,8 +100,10 @@ def dedup_exact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "llm", "join"),
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-word-shingle Jaccard pairs >= 0.5 via the shingle inverted-index
-    join (no cross join; candidate pairs only where shingles collide)."""
+    """3-word-shingle Jaccard pairs >= 0.5 via the prefix-filtered
+    candidate join (`operators/dedup.py:ngram_jaccard_pairs`), the same
+    builder as dedup_jaccard_prefix; no cross join, candidates only where
+    the docs' rare-first shingle prefixes collide."""
     return D.ngram_jaccard_pairs(
         table(spark, sf_dir, "documents"), "doc_id", "text", JACCARD_THRESHOLD
     )

@@ -132,16 +132,6 @@ UNIFIED_SCHEMA = T.StructType(
     ]
 )
 
-# Enum8 domains from schema.md (Spark has no enum type; enforced as a
-# constraint check, see plans/finalize.py).
-ENUM_DOMAINS: dict[str, set[str]] = {
-    "seller_type": {"UNKNOWN", "OWNER", "AGENT", "AGENCY", "DEVELOPER", "PRIVATE_AGENT"},
-    "property_type": {"Unknown", "flat", "house", "room", "townhouse", "layout", "unknown"},
-    "category": {"Unknown", "living"},
-    "deal_type": {"Unknown", "sale", "rent", "lease"},
-    "discount_status": {"Unknown", "Active", "Expired", "None", "discount_received"},
-}
-
 PLATFORM_IDS = {"domclick": 1, "avito": 2, "yandex": 4}  # code wins over the
 # stale comment at reference transformation.py:324 (SURVEY §1.4.4); cian has
 # no id because its transformer is intentionally unimplemented (§1.4.6).
