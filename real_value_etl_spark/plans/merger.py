@@ -11,15 +11,13 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schema import CH_FIELD_MAPPING, SOURCE_COLUMNS
 
 
-def merge_unified(
-    frames: list[DataFrame], spark: SparkSession | None = None
-) -> DataFrame | None:
+def merge_unified(frames: list[DataFrame]) -> DataFrame | None:
     """Union per-platform intermediate frames and rename to target columns.
 
     Empty input returns None (the reference returns an empty DataFrame with

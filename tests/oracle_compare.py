@@ -78,7 +78,7 @@ def _norm(v):
             # exact class the r8 q_weighted_median driver-red exposed. The
             # old `repr(float(v))` erased that difference and made the
             # local gate blind to it. Registered queries must not expose
-            # DecimalType outputs at all (tests/test_round9_ops.py lint);
+            # DecimalType outputs at all (tests/test_registered_queries.py);
             # this normalization makes any violation fail locally first.
             return str(v)
     except ImportError:

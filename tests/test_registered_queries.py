@@ -1,12 +1,15 @@
-"""Registry-wide physical-plan gate (VERDICT r5 ask #1).
+"""Every registered query, built ONCE, against every per-query check.
 
-One sweep over EVERY registered query's executed plan asserting the
-scale invariants that previous rounds audited by hand:
+`test_registered_query[name]` builds the query's frame from a clean cache,
+and `check_registered_query` reports every problem with it: a DecimalType
+output column, a broken plan invariant (a)-(e), or a mismatch with its
+DuckDB oracle (a rows-only query must run and have columns). Plan
+invariants, the scale properties of the executed plan:
 
 (a) any `Exchange SinglePartition` sits over a bounded-by-construction
     frame — scalar aggregates (one partial row per upstream partition),
     the two-phase rank family's n_partitions-row `__pid` frames,
-    limit-bounded frames, and two known small frames waived per-query;
+    limit-bounded frames, and known small frames waived per-query;
 (b) no Python evaluation (`BatchEvalPython` / `ArrowEvalPython` /
     UDTF) outside the sanctioned kernel list — row-at-a-time Python in
     a hot path is the 10-100x slow path;
@@ -16,7 +19,8 @@ scale invariants that previous rounds audited by hand:
 (d) no `CartesianProduct` anywhere, and `BroadcastNestedLoopJoin` only
     with an explicit per-query waiver documenting why the build side is
     bounded (broadcast of a fixed-size query/codebook/spine/scalar
-    frame — the data side streams once, which survives any scale).
+    frame — the data side streams once, which survives any scale);
+(e) shuffle / broadcast exchange counts equal to the pinned budget.
 
 Every waiver is inline below with its justification; a new query that
 trips a rule fails this test until it is either re-planned or waived
@@ -30,9 +34,13 @@ import os
 import re
 
 import pytest
+from pyspark.sql import types as T
 
 from real_value_etl_spark.operators import scan
 from real_value_etl_spark.queries.all_queries import REGISTRY
+from real_value_etl_spark.queries.registry import QuerySpec
+
+from .oracle_compare import compare, duck_connection
 
 # ---------------------------------------------------------------------------
 # (a) Exchange SinglePartition: structurally bounded child frames
@@ -264,16 +272,33 @@ _BNLJ_WAIVERS: dict[str, str] = {
 }
 
 
-def _executed_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+# A DecimalType output stringifies with trailing zeros ("506627.00") while
+# the oracle side arrives as float64 ("506627.0"): equal values, different
+# hash. Exact decimal math stays INSIDE the plan; outputs must be
+# double/bigint/string.
+def _decimal_paths(dt: T.DataType, path: str) -> list[str]:
+    """All paths inside `dt` that are DecimalType (recursive)."""
+    if isinstance(dt, T.DecimalType):
+        return [path]
+    if isinstance(dt, T.StructType):
+        out: list[str] = []
+        for f in dt.fields:
+            out += _decimal_paths(f.dataType, f"{path}.{f.name}")
+        return out
+    if isinstance(dt, T.ArrayType):
+        return _decimal_paths(dt.elementType, path + "[]")
+    if isinstance(dt, T.MapType):
+        return _decimal_paths(dt.keyType, path + "<key>") + _decimal_paths(
+            dt.valueType, path + "<value>"
+        )
+    return []
 
 
 # ---------------------------------------------------------------------------
-# (e) shuffle budget (VERDICT r6 ask #4): every query's Exchange /
-# BroadcastExchange node counts are pinned to tests/shuffle_budget.json.
-# EQUALITY, not <=, on both counts: an extra shuffle is the regression
-# class the r6 kNN router introduced deliberately (and the bench caught
-# late); a disappearing one is also a plan change a human should see.
+# (e) shuffle budget: every query's Exchange / BroadcastExchange node counts
+# are pinned to tests/shuffle_budget.json. EQUALITY, not <=, on both
+# counts: an extra shuffle is a plan regression a benchmark would only
+# catch late; a disappearing one is also a plan change a human should see.
 # Update deliberately via `python tools/make_shuffle_budget.py` and
 # commit the diff.
 # ---------------------------------------------------------------------------
@@ -281,73 +306,157 @@ def _executed_plan(df) -> str:
 _BUDGET_PATH = os.path.join(os.path.dirname(__file__), "shuffle_budget.json")
 try:
     with open(_BUDGET_PATH) as _f:
-        _SHUFFLE_BUDGET = json.load(_f)["budgets"]
+        _BUDGET_FILE = json.load(_f)
 except FileNotFoundError:  # pre-generation bootstrap only
-    _SHUFFLE_BUDGET = {}
+    _BUDGET_FILE = {"budgets": {}}
+_SHUFFLE_BUDGET = _BUDGET_FILE["budgets"]
 
 _EXCHANGE_RE = re.compile(r"\bExchange ")  # word boundary: excludes
 # Broadcast/ReusedExchange (no boundary mid-identifier)
 _BROADCAST_RE = re.compile(r"\bBroadcastExchange\b")
 
 
-@pytest.mark.parametrize("name", sorted(REGISTRY))
-def test_plan_gate(spark, sf_dir, name):
-    # Build each plan from a CLEAN cache state: CacheManager rewrites any
-    # matching logical subtree to an InMemoryRelation, so a cache left by
-    # an earlier query would change this query's plan shape (and its
-    # exchange counts) depending on test order. The budget generator
-    # (tools/make_shuffle_budget.py) clears identically.
-    spark.catalog.clearCache()
-    scan.release_rank_caches()
-    plan = _executed_plan(REGISTRY[name].fn(spark, sf_dir))
-    lines = plan.splitlines()
-
-    assert "CartesianProduct" not in plan, f"{name}: CartesianProduct"
-
-    for i, line in enumerate(lines):
-        if "Exchange SinglePartition" in line:
-            child = lines[i + 1] if i + 1 < len(lines) else ""
-            ok = any(p.search(child) for p in _BOUNDED_SINGLE_PARTITION)
-            waiver = _SINGLE_PARTITION_WAIVERS.get(name)
-            ok = ok or (waiver is not None and waiver.search(child))
-            assert ok, (
-                f"{name}: Exchange SinglePartition over a non-bounded "
-                f"frame:\n{child}"
-            )
-
-    if _PY_EVAL.search(plan):
-        assert name in _PY_EVAL_WAIVERS, (
-            f"{name}: un-sanctioned Python evaluation node "
-            f"({_PY_EVAL.search(plan).group()})"
-        )
-    if _ARROW_KERNEL.search(plan):
-        assert name in _ARROW_KERNEL_WAIVERS, (
-            f"{name}: un-sanctioned Arrow kernel "
-            f"({_ARROW_KERNEL.search(plan).group()})"
-        )
-    if "BroadcastNestedLoopJoin" in plan:
-        assert name in _BNLJ_WAIVERS, (
-            f"{name}: BroadcastNestedLoopJoin without a waiver — either "
-            "re-plan as an equi/broadcast-hash join or add a waiver "
-            "documenting why the build side is bounded"
-        )
-
-    sf_label = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    budget = _SHUFFLE_BUDGET.get(sf_label, {}).get(name)
-    # A registered query with NO pinned budget is a gate FAILURE, not a
-    # skip: round 9 ended red because a final-commit query slipped in
-    # unbudgeted and the silent skip hid it (VERDICT r9 ask #1).
-    assert budget is not None, (
-        f"{name}: no shuffle-budget entry for sf{sf_label} — run "
-        "`python tools/make_shuffle_budget.py` (or tools/refresh_evidence.py) "
-        "and commit tests/shuffle_budget.json"
-    )
-    got = {
+def count_exchanges(plan: str) -> dict[str, int]:
+    return {
         "exchange": len(_EXCHANGE_RE.findall(plan)),
         "broadcast": len(_BROADCAST_RE.findall(plan)),
     }
-    assert got == budget, (
-        f"{name}: exchange counts changed (got {got}, budget "
-        f"{budget}) — if the plan change is deliberate, regenerate "
-        "with `python tools/make_shuffle_budget.py` and commit"
+
+
+def _clean_build(spark, spec: QuerySpec, sf_dir: str):
+    # Build each plan from a CLEAN cache state: CacheManager rewrites any
+    # matching logical subtree to an InMemoryRelation, so a cache left by
+    # an earlier query would change this query's plan shape (and its
+    # exchange counts) depending on test order.
+    spark.catalog.clearCache()
+    scan.release_rank_caches()
+    return spec.fn(spark, sf_dir)
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def clean_plan(spark, spec: QuerySpec, sf_dir: str) -> str:
+    """The executed plan of a clean build, as the gate sees it;
+    tools/make_shuffle_budget.py records its exchange counts."""
+    return _executed_plan(_clean_build(spark, spec, sf_dir))
+
+
+def check_registered_query(spark, sf_dir: str, duck, name: str) -> list[str]:
+    """Build `name` once and return every problem found with it (the
+    decimal rule, the plan gate, oracle parity); empty means it passes."""
+    spec = REGISTRY[name]
+    problems: list[str] = []
+    try:
+        df = _clean_build(spark, spec, sf_dir)
+
+        offending = _decimal_paths(df.schema, "")
+        if offending:
+            problems.append(
+                f"{name}: DecimalType in output schema at {offending} — cast to "
+                "DOUBLE (or BIGINT if provably integral) on BOTH engines; see "
+                "queries/relational.py:16 and the r8 q_weighted_median driver-red"
+            )
+
+        # the plan before any action: AQE re-plans once stages run
+        plan = _executed_plan(df)
+        if "CartesianProduct" in plan:
+            problems.append(f"{name}: CartesianProduct")
+
+        lines = plan.splitlines()
+        for i, line in enumerate(lines):
+            if "Exchange SinglePartition" in line:
+                child = lines[i + 1] if i + 1 < len(lines) else ""
+                ok = any(p.search(child) for p in _BOUNDED_SINGLE_PARTITION)
+                waiver = _SINGLE_PARTITION_WAIVERS.get(name)
+                if not (ok or (waiver is not None and waiver.search(child))):
+                    problems.append(
+                        f"{name}: Exchange SinglePartition over a non-bounded "
+                        f"frame:\n{child}"
+                    )
+
+        py_eval = _PY_EVAL.search(plan)
+        if py_eval and name not in _PY_EVAL_WAIVERS:
+            problems.append(
+                f"{name}: un-sanctioned Python evaluation node ({py_eval.group()})"
+            )
+        arrow = _ARROW_KERNEL.search(plan)
+        if arrow and name not in _ARROW_KERNEL_WAIVERS:
+            problems.append(f"{name}: un-sanctioned Arrow kernel ({arrow.group()})")
+        if "BroadcastNestedLoopJoin" in plan and name not in _BNLJ_WAIVERS:
+            problems.append(
+                f"{name}: BroadcastNestedLoopJoin without a waiver — either "
+                "re-plan as an equi/broadcast-hash join or add a waiver "
+                "documenting why the build side is bounded"
+            )
+
+        sf_label = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+        budget = _SHUFFLE_BUDGET.get(sf_label, {}).get(name)
+        # A registered query with NO pinned budget is a gate FAILURE, not a
+        # skip: a silent skip would let an unbudgeted query slip in unseen.
+        if budget is None:
+            problems.append(
+                f"{name}: no shuffle-budget entry for sf{sf_label} — run "
+                "`python tools/make_shuffle_budget.py` (or tools/refresh_evidence.py) "
+                "and commit tests/shuffle_budget.json"
+            )
+        elif count_exchanges(plan) != budget:
+            problems.append(
+                f"{name}: exchange counts changed (got {count_exchanges(plan)}, "
+                f"budget {budget}) — if the plan change is deliberate, regenerate "
+                "with `python tools/make_shuffle_budget.py` and commit"
+            )
+
+        if spec.oracle:
+            ok, msg = compare(df, duck, spec.oracle)
+            if not ok:
+                problems.append(f"{name}: {msg}")
+        else:
+            df.count()
+            if not df.columns:
+                problems.append(f"{name}: no output columns")
+    finally:
+        # frames the build persisted must not leak into the next test
+        scan.release_rank_caches()
+    return problems
+
+
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    con = duck_connection(sf_dir)
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", sorted(REGISTRY))
+def test_registered_query(spark, sf_dir, duck, name):
+    problems = check_registered_query(spark, sf_dir, duck, name)
+    assert not problems, "\n".join(problems)
+
+
+def test_budget_file_matches_registry(spark):
+    """The budget file pins exactly the registered queries at every scale
+    it records, under the partition count the test session plans with."""
+    assert _BUDGET_FILE["shuffle_partitions"] == int(
+        spark.conf.get("spark.sql.shuffle.partitions")
     )
+    for label, per_sf in sorted(_SHUFFLE_BUDGET.items()):
+        assert set(per_sf) == set(REGISTRY), (
+            f"shuffle_budget sf{label}: missing or stale "
+            f"{sorted(set(per_sf) ^ set(REGISTRY))} — run "
+            "`python tools/make_shuffle_budget.py` and commit"
+        )
+
+
+def test_check_reports_every_problem(spark, sf_dir, duck, monkeypatch):
+    """One failing check does not hide the next: a decimal output, a
+    missing budget and a wrong oracle are all reported together."""
+    name = "_decimal_unbudgeted_wrong"
+    fn = lambda s, _: s.sql("SELECT CAST(1.5 AS DECIMAL(18,2)) AS x")  # noqa: E731
+    monkeypatch.setitem(REGISTRY, name, QuerySpec(name, fn, "SELECT 2.0 AS x"))
+    problems = check_registered_query(spark, sf_dir, duck, name)
+    assert len(problems) == 3, problems
+    assert "DecimalType in output schema at ['.x']" in problems[0]
+    assert "no shuffle-budget entry" in problems[1]
+    assert "value mismatch" in problems[2]

@@ -1,55 +1,8 @@
-"""Round-9 gates and operator tests.
-
-Lead item: the DecimalType-output lint (VERDICT r8 ask #1). The r8 driver
-window recorded the first hash-red ever — `q_weighted_median` exposed a
-DECIMAL(18,2) output whose integral values stringify "506627.00" on the
-Spark side but reach the driver's canonicalizer as float "506627.0" from
-DuckDB's pandas conversion. Values were bit-equal; the representation
-differed. The repo convention (exact decimal aggregation internally, CAST
-AS DOUBLE for output — queries/relational.py:16) now has a mechanical
-gate: NO registered query may expose DecimalType anywhere in its output
-schema, including nested inside arrays/structs/maps.
-"""
+"""Round-9 operator tests and the SURVEY §2.13 inventory drift gate."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import types as T
-
 from real_value_etl_spark.queries.all_queries import REGISTRY
-
-
-def _decimal_paths(dt: T.DataType, path: str) -> list[str]:
-    """All paths inside `dt` that are DecimalType (recursive)."""
-    if isinstance(dt, T.DecimalType):
-        return [path]
-    if isinstance(dt, T.StructType):
-        out: list[str] = []
-        for f in dt.fields:
-            out += _decimal_paths(f.dataType, f"{path}.{f.name}")
-        return out
-    if isinstance(dt, T.ArrayType):
-        return _decimal_paths(dt.elementType, path + "[]")
-    if isinstance(dt, T.MapType):
-        return _decimal_paths(dt.keyType, path + "<key>") + _decimal_paths(
-            dt.valueType, path + "<value>"
-        )
-    return []
-
-
-@pytest.mark.parametrize("name", sorted(REGISTRY))
-def test_no_decimal_output_columns(spark, sf_dir, name):
-    """Driver-hash safety: DecimalType output stringifies with trailing
-    zeros ("506627.00") while the oracle side arrives as float64
-    ("506627.0") — equal values, different hash. Exact decimal math stays
-    INSIDE the plan; outputs must be double/bigint/string."""
-    schema = REGISTRY[name].fn(spark, sf_dir).schema
-    offending = _decimal_paths(T.StructType(schema.fields), "")
-    assert not offending, (
-        f"{name}: DecimalType in output schema at {offending} — cast to "
-        "DOUBLE (or BIGINT if provably integral) on BOTH engines; see "
-        "queries/relational.py:16 and the r8 q_weighted_median driver-red"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -160,8 +113,6 @@ def test_max_burst_interval_matches_bruteforce(spark, sf_dir):
     earliest prefix argmin)."""
     from collections import defaultdict
 
-    from real_value_etl_spark.queries.all_queries import REGISTRY
-
     got = {
         r["event_type"]: r
         for r in REGISTRY["events_max_burst_interval"].fn(spark, sf_dir).collect()
@@ -209,7 +160,6 @@ def test_k_core_peel_properties(spark, sf_dir):
     i.e. re-peeling the survivors removes nothing (idempotence)."""
     import duckdb
 
-    from real_value_etl_spark.queries.all_queries import REGISTRY
     from real_value_etl_spark.queries.graph import KCORE_K, KCORE_ROUNDS
 
     rows = REGISTRY["graph_k_core"].fn(spark, sf_dir).collect()
@@ -253,8 +203,6 @@ def test_png_idat_codec_fields(spark, sf_dir):
     """Structural invariants recovered FROM THE BYTES: block chain
     complete, NLEN complements verified, reassembled stream length =
     height * (width + 1), and the block count matches ceil-div."""
-    from real_value_etl_spark.queries.all_queries import REGISTRY
-
     rows = REGISTRY["multimodal_png_idat_parse"].fn(spark, sf_dir).collect()
     assert len(rows) > 0
     for r in rows:
@@ -314,7 +262,6 @@ def test_mmr_rerank_greedy_invariants(spark, sf_dir):
     query; scores weakly decrease step-over-step is NOT required by MMR,
     but every later pick's score must be <= the same step's alternatives
     (verified by recomputation for one query)."""
-    from real_value_etl_spark.queries.all_queries import REGISTRY
     from real_value_etl_spark.queries.llm import MMR_K
 
     rows = REGISTRY["sim_mmr_rerank"].fn(spark, sf_dir).collect()
@@ -417,7 +364,6 @@ def test_mp3_frame_walk_lengths(spark, sf_dir):
     """The walked frame chain must sum to the payload length exactly
     (the walk consumed every byte, nothing more), and per-frame lengths
     must match the table formula."""
-    from real_value_etl_spark.queries.all_queries import REGISTRY
     from real_value_etl_spark.queries.feature_ops import (
         MP3_BITRATES,
         MP3_SAMPLE_RATES,
@@ -450,7 +396,6 @@ def test_holt_winters_matches_python_reference(spark, sf_dir):
     the same hourly series (same gains, same slot rotation)."""
     import pandas as pd
 
-    from real_value_etl_spark.queries.all_queries import REGISTRY
     from real_value_etl_spark.queries.events_queries import (
         HW_ALPHA,
         HW_BETA,
@@ -490,8 +435,6 @@ def test_hll_set_ops_algebra_invariants(spark, sf_dir):
     """Register-max union must dominate each input and respect
     subadditivity (raw-regime monotonicity); exact intersection is
     nonnegative and bounded by the smaller exact segment."""
-    from real_value_etl_spark.queries.all_queries import REGISTRY
-
     rows = REGISTRY["q_hll_set_ops"].fn(spark, sf_dir).collect()
     assert rows
     for r in rows:

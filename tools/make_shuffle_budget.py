@@ -1,13 +1,12 @@
 #!/usr/bin/env python
 """Record every registered query's physical-plan exchange counts into
-`tests/shuffle_budget.json` (VERDICT r6 ask #4).
+`tests/shuffle_budget.json`.
 
-The plan gate (tests/test_plan_gate.py) asserts each executed plan's
-shuffle-`Exchange` and `BroadcastExchange` node counts EQUAL the
-checked-in budget, so an unintentional extra shuffle (the class of
-regression the r6 kNN tree router introduced deliberately) fails the
-suite instead of surfacing rounds later in a bench delta. Equality, not
-<=: a DISAPPEARING shuffle is also a plan change someone should look at.
+The plan gate (tests/test_registered_queries.py) asserts each executed
+plan's shuffle-`Exchange` and `BroadcastExchange` node counts EQUAL the
+checked-in budget, so an unintentional extra shuffle fails the suite
+instead of surfacing later as a benchmark delta. Equality, not <=: a
+DISAPPEARING shuffle is also a plan change someone should look at.
 
 Run this after a deliberate plan change, eyeball the diff, and commit:
 
@@ -16,7 +15,8 @@ Run this after a deliberate plan change, eyeball the diff, and commit:
                                                  # into the existing file
 
 The session config mirrors the test fixture (shuffle_partitions=8) —
-plan shapes must be compared under identical configs. Counts are taken
+plan shapes must be compared under identical configs. Plans are built and
+counted by the gate's own `clean_plan` / `count_exchanges`; counts come
 from the UNEXECUTED plan string (AdaptiveSparkPlan initial plan), which
 is deterministic for a fixed input + config.
 """
@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -37,22 +36,11 @@ OUT = os.path.join(
 )
 SF_DIRS = ("/root/testdata/sf0.001", "/root/testdata/sf0.01")
 
-_EXCHANGE = re.compile(r"\bExchange ")  # shuffle only: the word-boundary
-# misses Broadcast/ReusedExchange (no boundary mid-identifier)
-_BROADCAST = re.compile(r"\bBroadcastExchange\b")
-
-
-def count_exchanges(plan: str) -> dict[str, int]:
-    return {
-        "exchange": len(_EXCHANGE.findall(plan)),
-        "broadcast": len(_BROADCAST.findall(plan)),
-    }
-
 
 def main() -> None:
-    from real_value_etl_spark.operators import scan
     from real_value_etl_spark.queries.all_queries import REGISTRY
     from real_value_etl_spark.session import get_spark
+    from tests.test_registered_queries import clean_plan, count_exchanges
 
     only: list[str] | None = None
     if "--only" in sys.argv:
@@ -66,7 +54,7 @@ def main() -> None:
     if only is not None:
         # Incremental merge: keep every other query's pinned counts. Names
         # dropped from the registry are pruned so the file never carries
-        # stale rows (the plan gate would not notice an orphan entry).
+        # stale rows (tier-1's test_budget_file_matches_registry fails on one).
         with open(OUT) as f:
             budgets = json.load(f)["budgets"]
         for label in budgets:
@@ -77,14 +65,7 @@ def main() -> None:
         label = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
         per_sf = budgets.setdefault(label, {})
         for name in sorted(only if only is not None else REGISTRY):
-            # Mirror the gate's pre-plan state exactly (test_plan_gate.py):
-            # a persisted frame rewrites matching subtrees to
-            # InMemoryRelation and changes exchange counts.
-            spark.catalog.clearCache()
-            scan.release_rank_caches()
-            df = REGISTRY[name].fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            per_sf[name] = count_exchanges(plan)
+            per_sf[name] = count_exchanges(clean_plan(spark, REGISTRY[name], sf_dir))
         print(f"# recorded {len(per_sf)} queries at sf{label}", file=sys.stderr)
     with open(OUT, "w") as f:
         json.dump({"shuffle_partitions": 8, "budgets": budgets}, f, indent=1, sort_keys=True)

@@ -38,7 +38,7 @@ def build() -> str:
         "`tools/make_survey_inventory.py` (drift between this table and the live",
         'registry is a build error). "rows-only" marks the single entry whose',
         "output is engine-specific by construction (approx sketches); every other",
-        "query carries a DuckDB oracle and is gated by `tests/test_oracle_parity.py`",
+        "query carries a DuckDB oracle and is gated by `tests/test_registered_queries.py`",
         "locally plus the driver window per round.",
         "",
         "| module | n | queries |",

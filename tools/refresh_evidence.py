@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""One-shot evidence refresh + drift audit (VERDICT r9 ask #8).
+"""One-shot evidence refresh + drift audit.
 
 Round 9 ended with `pytest tests/` red because a final-commit query needed
 THREE separate manual steps (SURVEY §2.13 inventory, shuffle budgets,
@@ -19,9 +19,10 @@ Steps:
         (the judge reads COVERAGE.md as the §2 map — a query that is
         registered but unmapped is the round-9 drift class).
 
-The audit alone (no regeneration) is `--audit-only`; tests/test_plan_gate
-and tests/test_survey_inventory already enforce (a) and (b) in CI, so the
-audit here is the fast pre-commit version of the same gates plus (c).
+The audit alone (no regeneration) is `--audit-only`. Tier-1 already
+enforces (a) in `tests/test_round9_ops.py::test_survey_inventory_matches_registry`
+and (b) in `tests/test_registered_queries.py::test_budget_file_matches_registry`,
+so the audit here is the fast pre-commit version of the same gates plus (c).
 """
 
 from __future__ import annotations
