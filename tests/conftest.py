@@ -9,6 +9,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from real_value_etl_spark.session import get_spark  # noqa: E402
 
+from .oracle_compare import duck_connection  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
@@ -21,3 +23,10 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def duck(sf_dir):
+    con = duck_connection(sf_dir)
+    yield con
+    con.close()

@@ -1,41 +1,28 @@
 """Every registered query with an oracle must hash-match DuckDB under the
-`oracle_compare` gate. Runs at sf0.001 by default
-(SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 for the driver-scale check).
+`oracle_compare` gate; a query without one must run and have columns. Runs
+at sf0.001 by default (SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 for
+the driver-scale check). The check is in tests/test_registered_queries.py.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from real_value_etl_spark.queries import all_queries  # noqa: F401
-from real_value_etl_spark.queries.registry import REGISTRY
+from real_value_etl_spark.queries.all_queries import REGISTRY
 
-from .oracle_compare import compare, duck_connection
+from .test_registered_queries import checked_query
 
 ORACLE_QUERIES = sorted(n for n, s in REGISTRY.items() if s.oracle)
 ROWS_ONLY_QUERIES = sorted(n for n, s in REGISTRY.items() if not s.oracle)
 
 
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    con = duck_connection(sf_dir)
-    yield con
-    con.close()
-
-
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_oracle_parity(spark, sf_dir, duck, name):
-    spec = REGISTRY[name]
-    df = spec.fn(spark, sf_dir)
-    ok, msg = compare(df, duck, spec.oracle)
-    assert ok, f"{name}: {msg}"
+    problems = checked_query(spark, sf_dir, duck, name)["parity"]
+    assert not problems, "\n".join(problems)
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_QUERIES)
-def test_rows_only_runs(spark, sf_dir, name):
-    spec = REGISTRY[name]
-    df = spec.fn(spark, sf_dir)
-    # must run and produce a stable schema; >=0 rows
-    n = df.count()
-    assert n >= 0
-    assert len(df.columns) > 0
+def test_rows_only_runs(spark, sf_dir, duck, name):
+    problems = checked_query(spark, sf_dir, duck, name)["parity"]
+    assert not problems, "\n".join(problems)

@@ -1,10 +1,14 @@
 """Every registered query, built ONCE, against every per-query check.
 
-`test_registered_query[name]` builds the query's frame from a clean cache,
-and `check_registered_query` reports every problem with it: a DecimalType
-output column, a broken plan invariant (a)-(e), or a mismatch with its
-DuckDB oracle (a rows-only query must run and have columns). Plan
-invariants, the scale properties of the executed plan:
+`check_registered_query` builds the query's frame from a clean cache and
+reports every problem with it, grouped by check: a DecimalType output
+column, a broken plan invariant (a)-(e), or a mismatch with its DuckDB
+oracle (a rows-only query must run and have columns). `checked_query`
+memoizes that verdict per query, so the per-check tests that read it
+(`test_plan_gate`, `test_oracle_parity`/`test_rows_only_runs`,
+`test_round9_ops.py::test_no_decimal_output_columns`) build each query
+once per session between them. Plan invariants, the scale properties of
+the executed plan:
 
 (a) any `Exchange SinglePartition` sits over a bounded-by-construction
     frame — scalar aggregates (one partial row per upstream partition),
@@ -23,7 +27,7 @@ invariants, the scale properties of the executed plan:
 (e) shuffle / broadcast exchange counts equal to the pinned budget.
 
 Every waiver is inline below with its justification; a new query that
-trips a rule fails this test until it is either re-planned or waived
+trips a rule fails the gate until it is either re-planned or waived
 with a reason.
 """
 
@@ -33,14 +37,13 @@ import json
 import os
 import re
 
-import pytest
 from pyspark.sql import types as T
 
 from real_value_etl_spark.operators import scan
 from real_value_etl_spark.queries.all_queries import REGISTRY
 from real_value_etl_spark.queries.registry import QuerySpec
 
-from .oracle_compare import compare, duck_connection
+from .oracle_compare import compare
 
 # ---------------------------------------------------------------------------
 # (a) Exchange SinglePartition: structurally bounded child frames
@@ -343,17 +346,20 @@ def clean_plan(spark, spec: QuerySpec, sf_dir: str) -> str:
     return _executed_plan(_clean_build(spark, spec, sf_dir))
 
 
-def check_registered_query(spark, sf_dir: str, duck, name: str) -> list[str]:
-    """Build `name` once and return every problem found with it (the
-    decimal rule, the plan gate, oracle parity); empty means it passes."""
+def check_registered_query(
+    spark, sf_dir: str, duck, name: str
+) -> dict[str, list[str]]:
+    """Build `name` once and return every problem found with it, per check:
+    "decimal" (the output schema), "plan" (the gate) and "parity" (the
+    oracle, or rows-only); empty lists mean it passes."""
     spec = REGISTRY[name]
-    problems: list[str] = []
+    problems: dict[str, list[str]] = {"decimal": [], "plan": [], "parity": []}
     try:
         df = _clean_build(spark, spec, sf_dir)
 
         offending = _decimal_paths(df.schema, "")
         if offending:
-            problems.append(
+            problems["decimal"].append(
                 f"{name}: DecimalType in output schema at {offending} — cast to "
                 "DOUBLE (or BIGINT if provably integral) on BOTH engines; see "
                 "queries/relational.py:16 and the r8 q_weighted_median driver-red"
@@ -362,7 +368,7 @@ def check_registered_query(spark, sf_dir: str, duck, name: str) -> list[str]:
         # the plan before any action: AQE re-plans once stages run
         plan = _executed_plan(df)
         if "CartesianProduct" in plan:
-            problems.append(f"{name}: CartesianProduct")
+            problems["plan"].append(f"{name}: CartesianProduct")
 
         lines = plan.splitlines()
         for i, line in enumerate(lines):
@@ -371,21 +377,23 @@ def check_registered_query(spark, sf_dir: str, duck, name: str) -> list[str]:
                 ok = any(p.search(child) for p in _BOUNDED_SINGLE_PARTITION)
                 waiver = _SINGLE_PARTITION_WAIVERS.get(name)
                 if not (ok or (waiver is not None and waiver.search(child))):
-                    problems.append(
+                    problems["plan"].append(
                         f"{name}: Exchange SinglePartition over a non-bounded "
                         f"frame:\n{child}"
                     )
 
         py_eval = _PY_EVAL.search(plan)
         if py_eval and name not in _PY_EVAL_WAIVERS:
-            problems.append(
+            problems["plan"].append(
                 f"{name}: un-sanctioned Python evaluation node ({py_eval.group()})"
             )
         arrow = _ARROW_KERNEL.search(plan)
         if arrow and name not in _ARROW_KERNEL_WAIVERS:
-            problems.append(f"{name}: un-sanctioned Arrow kernel ({arrow.group()})")
+            problems["plan"].append(
+                f"{name}: un-sanctioned Arrow kernel ({arrow.group()})"
+            )
         if "BroadcastNestedLoopJoin" in plan and name not in _BNLJ_WAIVERS:
-            problems.append(
+            problems["plan"].append(
                 f"{name}: BroadcastNestedLoopJoin without a waiver — either "
                 "re-plan as an equi/broadcast-hash join or add a waiver "
                 "documenting why the build side is bounded"
@@ -396,13 +404,13 @@ def check_registered_query(spark, sf_dir: str, duck, name: str) -> list[str]:
         # A registered query with NO pinned budget is a gate FAILURE, not a
         # skip: a silent skip would let an unbudgeted query slip in unseen.
         if budget is None:
-            problems.append(
+            problems["plan"].append(
                 f"{name}: no shuffle-budget entry for sf{sf_label} — run "
                 "`python tools/make_shuffle_budget.py` (or tools/refresh_evidence.py) "
                 "and commit tests/shuffle_budget.json"
             )
         elif count_exchanges(plan) != budget:
-            problems.append(
+            problems["plan"].append(
                 f"{name}: exchange counts changed (got {count_exchanges(plan)}, "
                 f"budget {budget}) — if the plan change is deliberate, regenerate "
                 "with `python tools/make_shuffle_budget.py` and commit"
@@ -411,28 +419,33 @@ def check_registered_query(spark, sf_dir: str, duck, name: str) -> list[str]:
         if spec.oracle:
             ok, msg = compare(df, duck, spec.oracle)
             if not ok:
-                problems.append(f"{name}: {msg}")
+                problems["parity"].append(f"{name}: {msg}")
         else:
             df.count()
             if not df.columns:
-                problems.append(f"{name}: no output columns")
+                problems["parity"].append(f"{name}: no output columns")
     finally:
         # frames the build persisted must not leak into the next test
         scan.release_rank_caches()
     return problems
 
 
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    con = duck_connection(sf_dir)
-    yield con
-    con.close()
+_CHECKED: dict[tuple[str, str], dict[str, list[str]] | Exception] = {}
 
 
-@pytest.mark.parametrize("name", sorted(REGISTRY))
-def test_registered_query(spark, sf_dir, duck, name):
-    problems = check_registered_query(spark, sf_dir, duck, name)
-    assert not problems, "\n".join(problems)
+def checked_query(spark, sf_dir: str, duck, name: str) -> dict[str, list[str]]:
+    """`check_registered_query`, run once per (scale, query) per session;
+    every later call returns (or re-raises) the first call's verdict."""
+    key = (sf_dir, name)
+    if key not in _CHECKED:
+        try:
+            _CHECKED[key] = check_registered_query(spark, sf_dir, duck, name)
+        except Exception as e:  # a build error fails every reader
+            _CHECKED[key] = e
+    verdict = _CHECKED[key]
+    if isinstance(verdict, Exception):
+        raise verdict
+    return verdict
 
 
 def test_budget_file_matches_registry(spark):
@@ -456,7 +469,7 @@ def test_check_reports_every_problem(spark, sf_dir, duck, monkeypatch):
     fn = lambda s, _: s.sql("SELECT CAST(1.5 AS DECIMAL(18,2)) AS x")  # noqa: E731
     monkeypatch.setitem(REGISTRY, name, QuerySpec(name, fn, "SELECT 2.0 AS x"))
     problems = check_registered_query(spark, sf_dir, duck, name)
-    assert len(problems) == 3, problems
-    assert "DecimalType in output schema at ['.x']" in problems[0]
-    assert "no shuffle-budget entry" in problems[1]
-    assert "value mismatch" in problems[2]
+    assert [len(v) for v in problems.values()] == [1, 1, 1], problems
+    assert "DecimalType in output schema at ['.x']" in problems["decimal"][0]
+    assert "no shuffle-budget entry" in problems["plan"][0]
+    assert "value mismatch" in problems["parity"][0]

@@ -1,8 +1,21 @@
-"""Round-9 operator tests and the SURVEY §2.13 inventory drift gate."""
+"""Round-9 operator tests, the DecimalType-output lint and the SURVEY
+§2.13 inventory drift gate."""
 
 from __future__ import annotations
 
+import pytest
+
 from real_value_etl_spark.queries.all_queries import REGISTRY
+
+from .test_registered_queries import checked_query
+
+
+@pytest.mark.parametrize("name", sorted(REGISTRY))
+def test_no_decimal_output_columns(spark, sf_dir, duck, name):
+    """No registered query exposes DecimalType anywhere in its output
+    schema (the rule and its reason: tests/test_registered_queries.py)."""
+    problems = checked_query(spark, sf_dir, duck, name)["decimal"]
+    assert not problems, "\n".join(problems)
 
 
 # ---------------------------------------------------------------------------
