@@ -7,8 +7,8 @@ uuid5-based uid. All expressions, single select, no shuffle.
 Compat decisions (SURVEY §1.4):
 - uint8 fields (rooms, floor, house_floors, placement_paid, big_card,
   pin_color, built_year_offer, platform_id): the reference's numpy cast
-  wraps mod 256 (2015 -> 223, types_transform.py:66). `uint8_wrap=True`
-  (default) replicates with pmod(x, 256); False keeps full integer values.
+  wraps mod 256 (2015 -> 223, types_transform.py:66); replicated with
+  pmod(x, 256).
 - uid is generated with a sha1-expression uuid5 (functions/ids.py), not a
   Python UDF — bit-identical to uuid.uuid5(NAMESPACE_DNS, ...).
 - The stray `merged.csv` debug dump (types_transform.py:89) is dropped.
@@ -72,11 +72,11 @@ _FILL_UNKNOWN = {
 _EMPTY_ARRAY = {"subway_distances", "subway_names"}
 
 
-# r12 optimization: the cast block is df-independent (keyed only on
-# uint8_wrap) but was rebuilt per run — same precompiled-plan-fragment
-# memoization as the transformer blocks (plans/transformers.py).
+# The cast block is df-independent, so it is built once per process — the
+# same precompiled-plan-fragment memoization as the transformer blocks
+# (plans/transformers.py).
 @lru_cache(maxsize=None)
-def _finalize_cols(uint8_wrap: bool = True) -> tuple[Column, ...]:
+def _finalize_cols() -> tuple[Column, ...]:
     out: list[Column] = []
     for field in UNIFIED_SCHEMA.fields:
         name, dtype = field.name, field.dataType.simpleString()
@@ -93,7 +93,7 @@ def _finalize_cols(uint8_wrap: bool = True) -> tuple[Column, ...]:
                 e = F.coalesce(c.try_cast("long"), F.lit(0).cast("long"))
             else:
                 e = F.coalesce(c.try_cast("double"), F.lit(0.0))
-            if name in _UINT8_FIELDS and uint8_wrap:
+            if name in _UINT8_FIELDS:
                 e = F.pmod(e.try_cast("long"), F.lit(256))
         elif name in _FILL_UNKNOWN:
             e = F.coalesce(c.cast("string"), F.lit("UNKNOWN" if name != "deal_type" and name != "discount_status" else "Unknown"))
@@ -105,6 +105,6 @@ def _finalize_cols(uint8_wrap: bool = True) -> tuple[Column, ...]:
     return tuple(out)
 
 
-def finalize_unified(df: DataFrame, uint8_wrap: bool = True) -> DataFrame:
+def finalize_unified(df: DataFrame) -> DataFrame:
     """Cast the merged frame to UNIFIED_SCHEMA semantics (one select)."""
-    return df.select(*_finalize_cols(uint8_wrap))
+    return df.select(*_finalize_cols())

@@ -4,7 +4,7 @@ Reference: DataPipeline (src/etl/datapipeline.py:60-189) — eager pandas,
 whole dataset through driver RAM, stage-by-stage materialization. Here the
 equivalent is ONE lazy DataFrame graph per run: per-platform CSV scan ->
 typed select block -> unionByName -> final cast select -> write. Catalyst
-fuses it; the only action is the sink write (plus opt-in row counts).
+fuses it; the only action is the sink write.
 
 Error semantics preserved (datapipeline.py:64-91, :127-141):
 - platform skipped when its date resolves to None / file missing / empty;
@@ -36,8 +36,6 @@ class PipelineConfig:
     output_format: str = "parquet"  # parquet | csv
     platforms: tuple[str, ...] = PLATFORMS
     test_row_limit: int | None = None  # reference test mode: 5000
-    uint8_wrap: bool = True
-    count_rows: bool = False  # opt-in: each count is an extra job (C3)
     csv_multiline: bool = False  # opt-in: unsplittable reads (csv_source)
 
 
@@ -83,17 +81,14 @@ def run_pipeline(
                 "platforms": statuses,
             }
         frames.append(transformed)
-        entry: dict[str, Any] = {"status": "ok", "date": date}
-        if config.count_rows:
-            entry["rows"] = transformed.count()
-        statuses[platform] = entry
+        statuses[platform] = {"status": "ok", "date": date}
 
     merged = merge_unified(frames)
     if merged is None:
         return {"status": "error", "stage": "merge", "message": "no data extracted",
                 "platforms": statuses}
 
-    final = finalize_unified(merged, uint8_wrap=config.uint8_wrap)
+    final = finalize_unified(merged)
     try:
         if config.output_format == "csv":
             write_csv(final, config.output_path)
@@ -103,10 +98,5 @@ def run_pipeline(
         return {"status": "error", "stage": "load", "message": str(exc),
                 "platforms": statuses}
 
-    result: dict[str, Any] = {"status": "success", "platforms": statuses,
-                              "output": config.output_path}
-    if config.count_rows:
-        result["rows"] = spark.read.format(config.output_format).load(
-            config.output_path
-        ).count()
-    return result
+    return {"status": "success", "platforms": statuses,
+            "output": config.output_path}

@@ -15,8 +15,7 @@ Faithfully replicated reference quirks (SURVEY §1.4):
 - Avito writes its computed price-per-sqm into `Price_per_sqm` and its hash
   address id into `Address_id` — column names NOT in CH_FIELD_MAPPING
   (transformation.py:408, :418 vs mapping.py) — so both are dead stores and
-  the unified output gets NULL / 0 for those fields. Set
-  `fix_avito_column_typos=True` to route them into the real columns.
+  the unified output gets NULL / 0 for those fields.
 - cian raises NotImplementedError (transformation.py:15-17).
 Deterministic deviations (documented): hash() -> xxhash64 (§1.4.1),
 eval -> from_json (§1.4.2), keep-first dedup uses an explicit order column.
@@ -286,14 +285,11 @@ def transform_yandex(df: DataFrame) -> DataFrame:
 
 
 @lru_cache(maxsize=None)
-def _avito_plan(
-    fix_avito_column_typos: bool = False,
-) -> tuple[tuple[Column, ...], Column]:
+def _avito_plan() -> tuple[tuple[Column, ...], Column]:
     """Avito select block (reference transformation.py:386-546)."""
     published = norm_ts("date_offer")
     price = to_num("price_offer")
     square = to_num("square_total_offer")
-    price_per_sqm = F.when(square.isNotNull() & (square > 0), price / square)
     address = fill_str("address_offer")
 
     exprs: dict[str, Column] = {
@@ -350,11 +346,6 @@ def _avito_plan(
         "type_house_offer": fill_str("type_house_offer"),
         "valid": F.lit(0),
     }
-    if fix_avito_column_typos:
-        # Route the reference's dead stores (Price_per_sqm / Address_id,
-        # transformation.py:408,:418) into the real unified columns.
-        exprs["Price per sqm"] = price_per_sqm
-        exprs["Address ID"] = bounded_hash(address)
     gate = (
         F.col("Price").isNotNull()
         & F.col("Area").isNotNull()
@@ -364,9 +355,9 @@ def _avito_plan(
     return _conform_cols(exprs), gate
 
 
-def transform_avito(df: DataFrame, fix_avito_column_typos: bool = False) -> DataFrame:
+def transform_avito(df: DataFrame) -> DataFrame:
     """Avito transform: keep-first dedup, then the precompiled block."""
-    cols, gate = _avito_plan(fix_avito_column_typos)
+    cols, gate = _avito_plan()
     return _keep_first(df, "url_offer").select(*cols).filter(gate)
 
 

@@ -31,10 +31,12 @@ order-independent aggregation of doubles.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import binary as B
 from ..functions import text as T
 from ..operators.scan import _persist_tracked
 from ..operators.similarity import brute_force_topk
@@ -592,11 +594,10 @@ def multimodal_header_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     blen = F.octet_length(F.col("text"))
     width = (blen % 640 + 16).cast("long")
     height = ((blen * 7) % 480 + 16).cast("long")
-    be4 = lambda c: F.unhex(F.lpad(F.hex(c), 8, "0"))  # noqa: E731
     payload = F.concat(
         F.unhex(F.lit(PNG_IHDR_PREFIX_HEX)),
-        be4(width),
-        be4(height),
+        B.be_bytes(width, 4),
+        B.be_bytes(height, 4),
         F.unhex(F.lit(PNG_TAIL_HEX)),
         F.encode(F.col("text"), "utf-8"),
     )
@@ -606,10 +607,10 @@ def multimodal_header_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         (F.hex(F.substring(p, 1, 8)) == F.lit(PNG_SIG_HEX)).alias("sig_ok"),
         F.decode(F.substring(p, 13, 4), "utf-8").alias("chunk_type"),
-        F.conv(F.hex(F.substring(p, 17, 4)), 16, 10).cast("long").alias("width"),
-        F.conv(F.hex(F.substring(p, 21, 4)), 16, 10).cast("long").alias("height"),
-        F.conv(F.hex(F.substring(p, 25, 1)), 16, 10).cast("long").alias("bit_depth"),
-        F.conv(F.hex(F.substring(p, 26, 1)), 16, 10).cast("long").alias("color_type"),
+        B.read_uint(p, 17, 4).alias("width"),
+        B.read_uint(p, 21, 4).alias("height"),
+        B.read_uint(p, 25, 1).alias("bit_depth"),
+        B.read_uint(p, 26, 1).alias("color_type"),
         (F.octet_length(p) - PNG_HEADER_LEN).cast("long").alias("data_len"),
     )
 
@@ -1763,48 +1764,25 @@ def multimodal_wav_header_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte_rate = rate * channels * (WAV_BITS // 8)
     block_align = channels * (WAV_BITS // 8)
 
-    def le(c, nbytes):
-        h = F.lpad(F.hex(c.cast("long")), 2 * nbytes, "0")
-        return F.unhex(
-            F.concat(
-                *[
-                    F.substring(h, 2 * nbytes - 1 - 2 * i, 2)
-                    for i in range(nbytes)
-                ]
-            )
-        )
-
     payload = F.concat(
         F.encode(F.lit("RIFF"), "utf-8"),
-        le(data_len + 36, 4),
+        B.le_bytes(data_len + 36, 4),
         F.encode(F.lit("WAVEfmt "), "utf-8"),
-        le(F.lit(16), 4),
-        le(F.lit(1), 2),
-        le(channels, 2),
-        le(rate, 4),
-        le(byte_rate, 4),
-        le(block_align, 2),
-        le(F.lit(WAV_BITS), 2),
+        B.le_bytes(F.lit(16), 4),
+        B.le_bytes(F.lit(1), 2),
+        B.le_bytes(channels, 2),
+        B.le_bytes(rate, 4),
+        B.le_bytes(byte_rate, 4),
+        B.le_bytes(block_align, 2),
+        B.le_bytes(F.lit(WAV_BITS), 2),
         F.encode(F.lit("data"), "utf-8"),
-        le(data_len, 4),
+        B.le_bytes(data_len, 4),
         F.encode(F.col("text"), "utf-8"),
     )
     wav = d.select("doc_id", payload.alias("payload"))
     p = F.col("payload")
 
-    def rd_le(off, nbytes):
-        h = F.hex(F.substring(p, off, nbytes))
-        return F.conv(
-            F.concat(
-                *[
-                    F.substring(h, 2 * nbytes - 1 - 2 * i, 2)
-                    for i in range(nbytes)
-                ]
-            ),
-            16,
-            10,
-        ).cast("long")
-
+    rd_le = partial(B.read_uint, p, little_endian=True)
     sr = rd_le(25, 4)
     br = rd_le(29, 4)
     dsz = rd_le(41, 4)
@@ -1872,16 +1850,6 @@ def multimodal_mp4_header_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     them FROM THE BYTES it walked to. Map-only at any scale."""
     d = table(spark, sf_dir, "documents")
 
-    def be(c, nbytes):  # big-endian unsigned int -> bytes
-        # Mask to the field width first: lpad TRUNCATES to the leftmost
-        # chars when hex(v) exceeds 2*nbytes, which would silently corrupt
-        # the low-order bytes on overflow (e.g. a >32-bit duration in a
-        # mvhd v0 field). pmod keeps the wrap well-defined; the oracle
-        # applies the same mask so builder and oracle stay bit-identical
-        # even for hypothetical >field-width inputs.
-        masked = F.pmod(c.cast("long"), F.lit(1 << (8 * nbytes)))
-        return F.unhex(F.lpad(F.hex(masked), 2 * nbytes, "0"))
-
     def zeros(nbytes):
         return F.unhex(F.lit("00" * nbytes))
 
@@ -1892,10 +1860,10 @@ def multimodal_mp4_header_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ftyp_size = F.lit(16) + F.lit(4) * n_brands
     ftyp = F.concat(
-        be(ftyp_size, 4),
+        B.be_bytes(ftyp_size, 4),
         F.encode(F.lit("ftyp"), "utf-8"),
         F.encode(F.lit("isom"), "utf-8"),  # major brand
-        be(F.lit(0), 4),  # minor version
+        B.be_bytes(F.lit(0), 4),  # minor version
         F.encode(brands, "utf-8"),
     )
     timescale = F.element_at(
@@ -1907,13 +1875,13 @@ def multimodal_mp4_header_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     next_track = F.col("doc_id") % 7 + 2
     # mvhd v0: 8-byte header + 100-byte body = 108; moov wraps it: 116
     mvhd = F.concat(
-        be(F.lit(108), 4),
+        B.be_bytes(F.lit(108), 4),
         F.encode(F.lit("mvhd"), "utf-8"),
         zeros(4),  # version + flags
-        be(F.lit(0), 4),  # creation_time
-        be(F.lit(0), 4),  # modification_time
-        be(timescale, 4),
-        be(duration, 4),
+        B.be_bytes(F.lit(0), 4),  # creation_time
+        B.be_bytes(F.lit(0), 4),  # modification_time
+        B.be_bytes(timescale, 4),
+        B.be_bytes(duration, 4),
         F.unhex(F.lit("00010000")),  # rate 1.0 (16.16 fixed)
         F.unhex(F.lit("0100")),  # volume 1.0 (8.8 fixed)
         zeros(10),  # reserved
@@ -1925,11 +1893,11 @@ def multimodal_mp4_header_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ),
         zeros(24),  # pre_defined
-        be(next_track, 4),
+        B.be_bytes(next_track, 4),
     )
-    moov = F.concat(be(F.lit(116), 4), F.encode(F.lit("moov"), "utf-8"), mvhd)
+    moov = F.concat(B.be_bytes(F.lit(116), 4), F.encode(F.lit("moov"), "utf-8"), mvhd)
     mdat = F.concat(
-        be(data_len + 8, 4),
+        B.be_bytes(data_len + 8, 4),
         F.encode(F.lit("mdat"), "utf-8"),
         F.encode(F.col("text"), "utf-8"),
     )
@@ -1940,10 +1908,7 @@ def multimodal_mp4_header_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ---- the walk: every offset below is READ from the bytes ----
     p = F.col("payload")
 
-    def rd_be(pos, nbytes):  # pos is a 1-based Column
-        return F.conv(F.hex(F.substring(p, pos, F.lit(nbytes))), 16, 10).cast(
-            "long"
-        )
+    rd_be = partial(B.read_uint, p)
 
     def rd_type(pos):
         return F.decode(F.substring(p, pos + 4, F.lit(4)), "utf-8")
@@ -2016,20 +1981,12 @@ def multimodal_tiff_exif_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     walked to. Map-only at any scale — no shuffle at all."""
     d = table(spark, sf_dir, "documents")
 
-    def behex(c, nbytes):  # big-endian hex, masked to field width
-        masked = F.pmod(c.cast("long"), F.lit(1 << (8 * nbytes)))
-        return F.lpad(F.hex(masked), 2 * nbytes, "0")
-
-    def lehex(c, nbytes):  # little-endian: byte-reversed big-endian hex
-        h = behex(c, nbytes)
-        return F.concat(
-            *[F.substring(h, 2 * i + 1, 2) for i in range(nbytes - 1, -1, -1)]
-        )
-
     little = F.col("doc_id") % 2 == 0
 
     def enc(c, nbytes):  # row's byte order
-        return F.unhex(F.when(little, lehex(c, nbytes)).otherwise(behex(c, nbytes)))
+        return F.unhex(
+            F.when(little, B.le_hex(c, nbytes)).otherwise(B.be_hex(c, nbytes))
+        )
 
     pad = (F.col("doc_id") % 5).cast("int")
     ifd_off = F.lit(8) + pad
@@ -2073,13 +2030,7 @@ def multimodal_tiff_exif_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = F.col("payload")
     is_le = F.decode(F.substring(p, 1, 2), "utf-8") == "II"
 
-    def rd(pos, nbytes):  # endian-aware unsigned read at 1-based pos
-        h = F.hex(F.substring(p, pos, F.lit(nbytes)))
-        rev = F.concat(
-            *[F.substring(h, 2 * i + 1, 2) for i in range(nbytes - 1, -1, -1)]
-        )
-        return F.conv(F.when(is_le, rev).otherwise(h), 16, 10).cast("long")
-
+    rd = partial(B.read_uint, p, little_endian=is_le)
     off = rd(F.lit(5), 4)  # IFD offset from the header pointer
     n_tags = rd(off + 1, 2)
 
@@ -2171,21 +2122,11 @@ def multimodal_exif_subifd_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     field arithmetically."""
     d = table(spark, sf_dir, "documents")
 
-    def behex(c, nbytes):
-        masked = F.pmod(c.cast("long"), F.lit(1 << (8 * nbytes)))
-        return F.lpad(F.hex(masked), 2 * nbytes, "0")
-
-    def lehex(c, nbytes):
-        h = behex(c, nbytes)
-        return F.concat(
-            *[F.substring(h, 2 * i + 1, 2) for i in range(nbytes - 1, -1, -1)]
-        )
-
     little = F.col("doc_id") % 2 == 0
 
     def enc(c, nbytes):
         return F.unhex(
-            F.when(little, lehex(c, nbytes)).otherwise(behex(c, nbytes))
+            F.when(little, B.le_hex(c, nbytes)).otherwise(B.be_hex(c, nbytes))
         )
 
     def entry(tag: int, ftype: int, value):
@@ -2242,13 +2183,7 @@ def multimodal_exif_subifd_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = F.col("payload")
     is_le = F.decode(F.substring(p, 1, 2), "utf-8") == "II"
 
-    def rd(pos, nbytes):
-        h = F.hex(F.substring(p, pos, F.lit(nbytes)))
-        rev = F.concat(
-            *[F.substring(h, 2 * i + 1, 2) for i in range(nbytes - 1, -1, -1)]
-        )
-        return F.conv(F.when(is_le, rev).otherwise(h), 16, 10).cast("long")
-
+    rd = partial(B.read_uint, p, little_endian=is_le)
     ifd0_off = rd(F.lit(5), 4)
     got_n0 = rd(ifd0_off + 1, 2)
 
@@ -2523,10 +2458,6 @@ def multimodal_jpeg_sof_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     FFD9."""
     d = table(spark, sf_dir, "documents")
 
-    def be(c, nbytes):
-        masked = F.pmod(c.cast("long"), F.lit(1 << (8 * nbytes)))
-        return F.unhex(F.lpad(F.hex(masked), 2 * nbytes, "0"))
-
     blen = F.octet_length(F.encode(F.col("text"), "utf-8")).cast("long")
     height = (blen * 7) % 480 + 16
     width = blen % 640 + 16
@@ -2534,20 +2465,20 @@ def multimodal_jpeg_sof_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     clen = (F.col("doc_id") % 17 + 1).cast("int")
     app0 = F.concat(
         F.unhex(F.lit("FFE0")),
-        be(F.lit(16), 2),
+        B.be_bytes(F.lit(16), 2),
         F.encode(F.lit("JFIF"), "utf-8"),
         F.unhex(F.lit("00")),  # NUL terminator
         F.unhex(F.lit("0102")),  # version 1.02
         F.unhex(F.lit("00")),  # density units: none
-        be(F.lit(72), 2),  # x density
-        be(F.lit(72), 2),  # y density
+        B.be_bytes(F.lit(72), 2),  # x density
+        B.be_bytes(F.lit(72), 2),  # y density
         F.unhex(F.lit("0000")),  # no thumbnail
     )
     app1 = F.when(
         F.col("doc_id") % 3 == 0,
         F.concat(
             F.unhex(F.lit("FFE1")),
-            be(F.lit(8) + elen, 2),
+            B.be_bytes(F.lit(8) + elen, 2),
             F.encode(F.lit("Exif"), "utf-8"),
             F.unhex(F.lit("0000")),
             # e filler bytes ('A'), e = doc_id % 5 in 0..4
@@ -2558,7 +2489,7 @@ def multimodal_jpeg_sof_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % 2 == 0,
         F.concat(
             F.unhex(F.lit("FFFE")),
-            be(F.lit(2) + clen, 2),
+            B.be_bytes(F.lit(2) + clen, 2),
             F.encode(
                 F.substring(F.lit("x" * 17), F.lit(1), clen), "utf-8"
             ),
@@ -2566,15 +2497,15 @@ def multimodal_jpeg_sof_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(F.unhex(F.lit("")))
     dqt = F.concat(
         F.unhex(F.lit("FFDB")),
-        be(F.lit(67), 2),
+        B.be_bytes(F.lit(67), 2),
         F.unhex(F.lit("00" + "10" * 64)),  # table 0, 8-bit, flat qtable
     )
     sof0 = F.concat(
         F.unhex(F.lit("FFC0")),
-        be(F.lit(17), 2),
+        B.be_bytes(F.lit(17), 2),
         F.unhex(F.lit("08")),  # precision
-        be(height, 2),
-        be(width, 2),
+        B.be_bytes(height, 2),
+        B.be_bytes(width, 2),
         F.unhex(F.lit("03")),  # components
         F.unhex(F.lit("011100" "021101" "031101")),  # Y, Cb, Cr
     )
@@ -2589,11 +2520,7 @@ def multimodal_jpeg_sof_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ---- the walk: marker-dispatch with stay-once-found unrolling ----
     p = F.col("payload")
 
-    def rd_be(pos, nbytes):
-        return F.conv(F.hex(F.substring(p, pos, F.lit(nbytes))), 16, 10).cast(
-            "long"
-        )
-
+    rd_be = partial(B.read_uint, p)
     off = F.lit(3).cast("long")  # first segment after SOI
     n_opt = F.lit(0).cast("long")
     for _ in range(JPEG_MAX_HOPS):
@@ -2690,10 +2617,6 @@ def multimodal_mp3_id3_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = doc_id%23+1, pad = 100+blen%300, tag_size = 11+t+pad."""
     d = table(spark, sf_dir, "documents")
 
-    def be(c, nbytes):
-        masked = F.pmod(c.cast("long"), F.lit(1 << (8 * nbytes)))
-        return F.unhex(F.lpad(F.hex(masked), 2 * nbytes, "0"))
-
     blen = F.octet_length(F.encode(F.col("text"), "utf-8")).cast("long")
     t = (F.col("doc_id") % 23 + 1).cast("int")
     pad = (F.lit(100) + blen % 300).cast("int")
@@ -2705,12 +2628,12 @@ def multimodal_mp3_id3_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     def syncsafe(c):
         # four 7-bit bytes, MSB first — each byte's high bit is 0
         return F.concat(
-            *[be(F.shiftright(c, s) % 128, 1) for s in (21, 14, 7, 0)]
+            *[B.be_bytes(F.shiftright(c, s) % 128, 1) for s in (21, 14, 7, 0)]
         )
 
     tit2 = F.concat(
         F.encode(F.lit("TIT2"), "utf-8"),
-        be(F.lit(1) + t, 4),  # v2.3 frame size: PLAIN BE32, not syncsafe
+        B.be_bytes(F.lit(1) + t, 4),  # v2.3 frame size: PLAIN BE32, not syncsafe
         F.unhex(F.lit("0000")),  # frame flags
         F.unhex(F.lit("00")),  # text encoding: latin-1
         F.encode(F.substring(F.lit(MP3_TITLE_POOL), F.lit(1), t), "utf-8"),
@@ -2727,7 +2650,7 @@ def multimodal_mp3_id3_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
             tit2,
             F.unhex(F.substring(F.lit("0" * 800), F.lit(1), pad * 2)),
             F.unhex(F.lit("FFFB")),  # sync + MPEG1 + Layer III + no CRC
-            be(byte3, 1),
+            B.be_bytes(byte3, 1),
             F.unhex(F.lit("44")),  # joint stereo, original
             F.unhex(F.lit("AB" * 8)),  # frame body filler
         ).alias("payload"),
@@ -2736,9 +2659,7 @@ def multimodal_mp3_id3_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ---- the parse: syncsafe jump, then bit-field cracking ----
     p = F.col("payload")
 
-    def rd(pos, nbytes):
-        return F.conv(F.hex(F.substring(p, pos, nbytes)), 16, 10).cast("long")
-
+    rd = partial(B.read_uint, p)
     tag_sz = (
         F.shiftleft(F.pmod(rd(7, 1), 128), 21)
         + F.shiftleft(F.pmod(rd(8, 1), 128), 14)
@@ -3153,14 +3074,6 @@ def multimodal_png_idat_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = h x (00 || pixels from the doc-text hex stream)."""
     d = table(spark, sf_dir, "documents")
 
-    def be(c, nbytes):
-        masked = F.pmod(c.cast("long"), F.lit(1 << (8 * nbytes)))
-        return F.unhex(F.lpad(F.hex(masked), 2 * nbytes, "0"))
-
-    def le16(c):
-        c = c.cast("long")
-        return F.concat(be(F.pmod(c, 256), 1), be(F.shiftright(c, 8), 1))
-
     empty = F.unhex(F.lit(""))
 
     # ---- build, stage 1: geometry + the raw scanline stream ----------
@@ -3199,9 +3112,9 @@ def multimodal_png_idat_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         len_i = F.least(F.col("cap"), F.col("total") - off0)
         bfinal = (off0 + len_i == F.col("total")).cast("long")
         blk = F.concat(
-            be(bfinal, 1),
-            le16(len_i),
-            le16(F.lit(65535) - len_i),
+            B.be_bytes(bfinal, 1),
+            B.le_bytes(len_i, 2),
+            B.le_bytes(F.lit(65535) - len_i, 2),
             F.substring(F.col("raw"), (off0 + 1).cast("int"), len_i.cast("int")),
         )
         blocks = F.concat(blocks, F.when(len_i > 0, blk).otherwise(empty))
@@ -3213,22 +3126,22 @@ def multimodal_png_idat_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # ---- build, stage 3: the full PNG byte stream --------------------
     ihdr = F.concat(
-        be(F.lit(13), 4),
+        B.be_bytes(F.lit(13), 4),
         F.encode(F.lit("IHDR"), "utf-8"),
-        be(F.col("w"), 4),
-        be(F.col("hgt"), 4),
+        B.be_bytes(F.col("w"), 4),
+        B.be_bytes(F.col("hgt"), 4),
         F.unhex(F.lit("08")),  # bit depth
         F.unhex(F.lit("00")),  # color type: grayscale
         F.unhex(F.lit("000000")),  # compression, filter, interlace
-        be((F.col("w") * 31 + F.col("hgt")) * 2654435761 % (1 << 32), 4),
+        B.be_bytes((F.col("w") * 31 + F.col("hgt")) * 2654435761 % (1 << 32), 4),
     )
     idat = F.concat(
-        be(F.col("idat_len"), 4),
+        B.be_bytes(F.col("idat_len"), 4),
         F.encode(F.lit("IDAT"), "utf-8"),
         F.unhex(F.lit("7801")),  # zlib: deflate, 32k window, no dict
         F.col("blocks"),
-        be(F.col("total") * 2654435761 % (1 << 32), 4),  # fake adler32
-        be((F.col("total") * 7 + 1) * 2654435761 % (1 << 32), 4),  # fake CRC
+        B.be_bytes(F.col("total") * 2654435761 % (1 << 32), 4),  # fake adler32
+        B.be_bytes((F.col("total") * 7 + 1) * 2654435761 % (1 << 32), 4),  # fake CRC
     )
     png = g.select(
         "doc_id",
@@ -3241,30 +3154,23 @@ def multimodal_png_idat_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # ---- parse: BE container header fields ---------------------------
-    def rd(col, pos, nbytes):
-        return F.conv(
-            F.hex(F.substring(col, pos if isinstance(pos, int) else pos.cast("int"), nbytes)),
-            16,
-            10,
-        ).cast("long")
-
     p = F.col("payload")
     st = png.select(
         "doc_id",
         "payload",
         (F.hex(F.substring(p, 1, 8)) == "89504E470D0A1A0A").alias("sig_ok"),
         (
-            (rd(p, 9, 4) == 13) & (F.hex(F.substring(p, 13, 4)) == "49484452")
+            (B.read_uint(p, 9, 4) == 13) & (F.hex(F.substring(p, 13, 4)) == "49484452")
         ).alias("ihdr_ok"),
-        rd(p, 17, 4).alias("width"),
-        rd(p, 21, 4).alias("height"),
-        rd(p, 25, 1).alias("bit_depth"),
-        rd(p, 26, 1).alias("color_type"),
+        B.read_uint(p, 17, 4).alias("width"),
+        B.read_uint(p, 21, 4).alias("height"),
+        B.read_uint(p, 25, 1).alias("bit_depth"),
+        B.read_uint(p, 26, 1).alias("color_type"),
         (
             (F.hex(F.substring(p, 38, 4)) == "49444154")
-            & (rd(p, 42, 2) == 0x7801)
+            & (B.read_uint(p, 42, 2) == 0x7801)
         ).alias("zlib_ok"),
-        rd(p, 34, 4).alias("idat_len"),
+        B.read_uint(p, 34, 4).alias("idat_len"),
         F.lit(44).cast("long").alias("off"),  # first stored-block header
         F.lit(False).alias("done"),
         F.lit(0).cast("long").alias("n_blocks"),
@@ -3284,9 +3190,9 @@ def multimodal_png_idat_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bit_depth", "color_type", "zlib_ok", "idat_len",
     ]
     for _ in range(PNG_MAX_BLOCKS):
-        hdr = rd(p, F.col("off"), 1)
-        blen = rd(p, F.col("off") + 1, 1) + rd(p, F.col("off") + 2, 1) * 256
-        bnlen = rd(p, F.col("off") + 3, 1) + rd(p, F.col("off") + 4, 1) * 256
+        hdr = B.read_uint(p, F.col("off"), 1)
+        blen = B.read_uint(p, F.col("off") + 1, 2, little_endian=True)
+        bnlen = B.read_uint(p, F.col("off") + 3, 2, little_endian=True)
         st = st.select(
             *carry,
             "off", "done", "n_blocks", "sum_len", "nlen_ok", "btype_ok",
@@ -3340,7 +3246,7 @@ def multimodal_png_idat_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         at = F.lit(j) * (F.col("width") + 1) + 1
         filters_ok = filters_ok & F.when(
             F.lit(j) >= F.col("height"), F.lit(True)
-        ).otherwise(rd(F.col("raw_out"), at, 1) == 0)
+        ).otherwise(B.read_uint(F.col("raw_out"), at, 1) == 0)
 
     return st.select(
         "doc_id",
@@ -3357,7 +3263,7 @@ def multimodal_png_idat_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("btype_ok").alias("btype_stored_ok"),
         F.col("done").alias("chain_complete"),
         filters_ok.alias("filters_ok"),
-        rd(F.col("raw_out"), F.lit(2), 1).alias("pixel0"),
+        B.read_uint(F.col("raw_out"), F.lit(2), 1).alias("pixel0"),
         "idat_len",
         F.octet_length(p).cast("long").alias("total_len"),
     )
@@ -3441,10 +3347,6 @@ def multimodal_mp3_frame_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only, zero exchanges at any scale."""
     d = table(spark, sf_dir, "documents")
 
-    def be(c, nbytes):
-        masked = F.pmod(c.cast("long"), F.lit(1 << (8 * nbytes)))
-        return F.unhex(F.lpad(F.hex(masked), 2 * nbytes, "0"))
-
     empty = F.unhex(F.lit(""))
     nf = (F.col("doc_id") % 4 + 2).cast("long")
     blen = F.octet_length(F.encode(F.col("text"), "utf-8")).cast("long")
@@ -3466,7 +3368,7 @@ def multimodal_mp3_frame_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         frame = F.concat(
             F.unhex(F.lit("FFFB")),
-            be(byte3, 1),
+            B.be_bytes(byte3, 1),
             F.unhex(F.lit("44")),
             F.unhex(
                 F.substring(
@@ -3482,13 +3384,7 @@ def multimodal_mp3_frame_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ---- walk: chained projections, stride from table lookups --------
     p = F.col("payload")
 
-    def rd(pos, nbytes):
-        return F.conv(
-            F.hex(F.substring(p, pos.cast("int") if hasattr(pos, "cast") else pos, nbytes)),
-            16,
-            10,
-        ).cast("long")
-
+    rd = partial(B.read_uint, p)
     st = mp3.select(
         "doc_id",
         "payload",
@@ -4430,9 +4326,6 @@ def multimodal_flac_streaminfo(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     total = F.pmod(blen * FLAC_SAMPLES_PER_BYTE, F.lit(1 << 36).cast("long"))
 
-    def be(c, nbytes):
-        return F.unhex(F.lpad(F.hex(c.cast("long")), 2 * nbytes, "0"))
-
     packed = (
         F.shiftleft(rate, 44)
         + F.shiftleft(ch - 1, 41)
@@ -4441,23 +4334,19 @@ def multimodal_flac_streaminfo(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     payload = F.concat(
         F.encode(F.lit("fLaC"), "utf-8"),
-        be(F.lit(0x80), 1),           # last-block flag | type 0
-        be(F.lit(34), 3),             # 3-byte BE block length
-        be(F.lit(4096), 2),           # min blocksize
-        be(F.lit(4096) + (F.col("doc_id") % 8) * 256, 2),
-        be(F.lit(1000) + F.col("doc_id") % 100, 3),
-        be(F.lit(9000) + F.col("doc_id") % 1000, 3),
-        be(packed, 8),
+        B.be_bytes(F.lit(0x80), 1),           # last-block flag | type 0
+        B.be_bytes(F.lit(34), 3),             # 3-byte BE block length
+        B.be_bytes(F.lit(4096), 2),           # min blocksize
+        B.be_bytes(F.lit(4096) + (F.col("doc_id") % 8) * 256, 2),
+        B.be_bytes(F.lit(1000) + F.col("doc_id") % 100, 3),
+        B.be_bytes(F.lit(9000) + F.col("doc_id") % 1000, 3),
+        B.be_bytes(packed, 8),
         F.unhex(F.lit("00" * 16)),    # zeroed MD5
     )
     flac = d.select("doc_id", payload.alias("payload"))
     p = F.col("payload")
 
-    def rd_be(pos, nbytes):
-        return F.conv(F.hex(F.substring(p, pos, nbytes)), 16, 10).cast(
-            "long"
-        )
-
+    rd_be = partial(B.read_uint, p)
     hdr = rd_be(5, 1)
     word = rd_be(19, 8)
     sr = F.shiftright(word, 44)
@@ -4544,17 +4433,6 @@ def multimodal_ogg_page_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rem = F.pmod(plen, 255)
     n_segs = n_full + 1
 
-    def le(c, nbytes):
-        h = F.lpad(F.hex(c.cast("long")), 2 * nbytes, "0")
-        return F.unhex(
-            F.concat(
-                *[
-                    F.substring(h, 2 * nbytes - 1 - 2 * i, 2)
-                    for i in range(nbytes)
-                ]
-            )
-        )
-
     lacing = F.unhex(
         F.concat(
             F.repeat(F.lit("ff"), n_full.cast("int")),
@@ -4565,35 +4443,19 @@ def multimodal_ogg_page_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.encode(F.lit("OggS"), "utf-8"),
         F.unhex(F.lit("00")),                      # version 0
         F.unhex(F.lit("02")),                      # header type: BOS
-        le(plen * OGG_GRANULES_PER_BYTE, 8),       # granule position LE
-        le(F.col("doc_id") % 2147483647, 4),       # serial LE
-        le(F.col("doc_id") % 1000, 4),             # page sequence LE
+        B.le_bytes(plen * OGG_GRANULES_PER_BYTE, 8),       # granule position LE
+        B.le_bytes(F.col("doc_id") % 2147483647, 4),       # serial LE
+        B.le_bytes(F.col("doc_id") % 1000, 4),             # page sequence LE
         F.unhex(F.lit("00000000")),                # CRC stub (documented)
-        le(n_segs, 1),
+        B.le_bytes(n_segs, 1),
         lacing,
         data,
     )
     ogg = d.select("doc_id", payload.alias("payload"))
     p = F.col("payload")
 
-    def rd(pos, nbytes):
-        return F.conv(F.hex(F.substring(p, pos, nbytes)), 16, 10).cast(
-            "long"
-        )
-
-    def rd_le(off, nbytes):
-        h = F.hex(F.substring(p, off, nbytes))
-        return F.conv(
-            F.concat(
-                *[
-                    F.substring(h, 2 * nbytes - 1 - 2 * i, 2)
-                    for i in range(nbytes)
-                ]
-            ),
-            16,
-            10,
-        ).cast("long")
-
+    rd = partial(B.read_uint, p)
+    rd_le = partial(B.read_uint, p, little_endian=True)
     nsg = rd(27, 1)
     lace_at = lambda i: F.conv(  # noqa: E731 — byte i of the lacing table
         F.hex(F.substring(p, (F.lit(27) + i).cast("int"), 1)), 16, 10
@@ -4691,49 +4553,38 @@ def multimodal_zip_eocd_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     fnlen = F.length(fname).cast("long")
     clen = (F.col("doc_id") % 40).cast("long")
 
-    def le(c, nbytes):
-        h = F.lpad(F.hex(c.cast("long")), 2 * nbytes, "0")
-        return F.unhex(
-            F.concat(
-                *[
-                    F.substring(h, 2 * nbytes - 1 - 2 * i, 2)
-                    for i in range(nbytes)
-                ]
-            )
-        )
-
     lfh = F.concat(
         F.unhex(F.lit("504B0304")),        # local file header signature
-        le(F.lit(20), 2),                  # version needed
-        le(F.lit(0), 2), le(F.lit(0), 2),  # flags, method (stored)
-        le(F.lit(0), 2), le(F.lit(0), 2),  # mod time, mod date
+        B.le_bytes(F.lit(20), 2),                  # version needed
+        B.le_bytes(F.lit(0), 2), B.le_bytes(F.lit(0), 2),  # flags, method (stored)
+        B.le_bytes(F.lit(0), 2), B.le_bytes(F.lit(0), 2),  # mod time, mod date
         F.unhex(F.lit("00000000")),        # CRC32 stub (documented)
-        le(dlen, 4), le(dlen, 4),          # compressed == uncompressed
-        le(fnlen, 2), le(F.lit(0), 2),     # name len, extra len
+        B.le_bytes(dlen, 4), B.le_bytes(dlen, 4),          # compressed == uncompressed
+        B.le_bytes(fnlen, 2), B.le_bytes(F.lit(0), 2),     # name len, extra len
         F.encode(fname, "utf-8"),
         data,
     )
     cd = F.concat(
         F.unhex(F.lit("504B0102")),        # central directory signature
-        le(F.lit(20), 2), le(F.lit(20), 2),
-        le(F.lit(0), 2), le(F.lit(0), 2),
-        le(F.lit(0), 2), le(F.lit(0), 2),
+        B.le_bytes(F.lit(20), 2), B.le_bytes(F.lit(20), 2),
+        B.le_bytes(F.lit(0), 2), B.le_bytes(F.lit(0), 2),
+        B.le_bytes(F.lit(0), 2), B.le_bytes(F.lit(0), 2),
         F.unhex(F.lit("00000000")),
-        le(dlen, 4), le(dlen, 4),
-        le(fnlen, 2), le(F.lit(0), 2), le(F.lit(0), 2),
-        le(F.lit(0), 2), le(F.lit(0), 2),  # disk, internal attrs
-        le(F.lit(0), 4),                   # external attrs
-        le(F.lit(0), 4),                   # local header offset
+        B.le_bytes(dlen, 4), B.le_bytes(dlen, 4),
+        B.le_bytes(fnlen, 2), B.le_bytes(F.lit(0), 2), B.le_bytes(F.lit(0), 2),
+        B.le_bytes(F.lit(0), 2), B.le_bytes(F.lit(0), 2),  # disk, internal attrs
+        B.le_bytes(F.lit(0), 4),                   # external attrs
+        B.le_bytes(F.lit(0), 4),                   # local header offset
         F.encode(fname, "utf-8"),
     )
     cd_off = F.lit(30) + fnlen + dlen
     cd_size = F.lit(46) + fnlen
     eocd = F.concat(
         F.unhex(F.lit("504B0506")),
-        le(F.lit(0), 2), le(F.lit(0), 2),  # disk numbers
-        le(F.lit(1), 2), le(F.lit(1), 2),  # entries (disk, total)
-        le(cd_size, 4), le(cd_off, 4),
-        le(clen, 2),
+        B.le_bytes(F.lit(0), 2), B.le_bytes(F.lit(0), 2),  # disk numbers
+        B.le_bytes(F.lit(1), 2), B.le_bytes(F.lit(1), 2),  # entries (disk, total)
+        B.le_bytes(cd_size, 4), B.le_bytes(cd_off, 4),
+        B.le_bytes(clen, 2),
         F.encode(F.repeat(F.lit("c"), clen.cast("int")), "utf-8"),
     )
     z = d.select(
@@ -4741,19 +4592,7 @@ def multimodal_zip_eocd_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p = F.col("payload")
 
-    def rd_le(off, nbytes):
-        h = F.hex(F.substring(p, off.cast("int"), nbytes))
-        return F.conv(
-            F.concat(
-                *[
-                    F.substring(h, 2 * nbytes - 1 - 2 * i, 2)
-                    for i in range(nbytes)
-                ]
-            ),
-            16,
-            10,
-        ).cast("long")
-
+    rd_le = partial(B.read_uint, p, little_endian=True)
     plen = F.octet_length(p).cast("long")
     tail_off = F.greatest(F.lit(1).cast("long"), plen - (ZIP_EOCD_SCAN - 1))
     tail_hex = F.hex(F.substring(p, tail_off.cast("int"), ZIP_EOCD_SCAN))
@@ -4992,51 +4831,28 @@ def multimodal_bmp_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     img = stride * h
     henc = F.when(top_down, F.lit(1 << 32).cast("long") - h).otherwise(h)
 
-    def le(c, nbytes):
-        hx = F.lpad(F.hex(c.cast("long")), 2 * nbytes, "0")
-        return F.unhex(
-            F.concat(
-                *[
-                    F.substring(hx, 2 * nbytes - 1 - 2 * i, 2)
-                    for i in range(nbytes)
-                ]
-            )
-        )
-
     payload = F.concat(
         F.encode(F.lit("BM"), "utf-8"),
-        le(F.lit(54) + img, 4),
-        le(F.lit(0), 4),
-        le(F.lit(54), 4),
-        le(F.lit(40), 4),
-        le(w, 4),
-        le(henc, 4),
-        le(F.lit(1), 2),
-        le(F.lit(24), 2),
-        le(F.lit(0), 4),
-        le(img, 4),
-        le(F.lit(2835), 4),
-        le(F.lit(2835), 4),
-        le(F.lit(0), 4),
-        le(F.lit(0), 4),
+        B.le_bytes(F.lit(54) + img, 4),
+        B.le_bytes(F.lit(0), 4),
+        B.le_bytes(F.lit(54), 4),
+        B.le_bytes(F.lit(40), 4),
+        B.le_bytes(w, 4),
+        B.le_bytes(henc, 4),
+        B.le_bytes(F.lit(1), 2),
+        B.le_bytes(F.lit(24), 2),
+        B.le_bytes(F.lit(0), 4),
+        B.le_bytes(img, 4),
+        B.le_bytes(F.lit(2835), 4),
+        B.le_bytes(F.lit(2835), 4),
+        B.le_bytes(F.lit(0), 4),
+        B.le_bytes(F.lit(0), 4),
         F.unhex(F.repeat(F.lit("00"), img.cast("int"))),
     )
     bmp = d.select("doc_id", payload.alias("payload"))
     p = F.col("payload")
 
-    def rd_le(off, nbytes):
-        hx = F.hex(F.substring(p, off, nbytes))
-        return F.conv(
-            F.concat(
-                *[
-                    F.substring(hx, 2 * nbytes - 1 - 2 * i, 2)
-                    for i in range(nbytes)
-                ]
-            ),
-            16,
-            10,
-        ).cast("long")
-
+    rd_le = partial(B.read_uint, p, little_endian=True)
     h_raw = rd_le(23, 4)
     h_signed = F.when(
         h_raw >= F.lit(1 << 31).cast("long"),
@@ -5364,15 +5180,6 @@ def multimodal_gif_frame_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     did = F.col("doc_id")
 
-    def hx(c, nbytes):  # big-endian fixed-width hex of a column
-        return F.lpad(F.hex(c.cast("long")), 2 * nbytes, "0")
-
-    def lehex(c, nbytes):  # little-endian fixed-width hex
-        h = hx(c, nbytes)
-        return F.concat(
-            *[F.substring(h, 2 * nbytes - 1 - 2 * i, 2) for i in range(nbytes)]
-        )
-
     width = did % 317 + 4
     height = did % 211 + 3
     n_bits = (did % 3).cast("long")
@@ -5385,12 +5192,12 @@ def multimodal_gif_frame_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     big_l = fw * fh
     nfull = F.call_function("div", big_l, F.lit(255).cast("long"))
     rem = big_l - F.lit(255) * nfull
-    gct_fill = hx(did % 251, 1)
-    bh = hx((did * 7 + 13) % 256, 1)
+    gct_fill = B.be_hex(did % 251, 1)
+    bh = B.be_hex((did * 7 + 13) % 256, 1)
     ext_hex = F.concat(
         F.lit("21f904"),
-        hx(did % 8, 1),
-        lehex(did % 1000, 2),
+        B.be_hex(did % 8, 1),
+        B.le_hex(did % 1000, 2),
         F.lit("00"),
         F.lit("00"),
     )
@@ -5399,27 +5206,27 @@ def multimodal_gif_frame_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(
             F.lit("ff"),
             F.repeat(bh, 255),
-            hx(rem, 1),
+            B.be_hex(rem, 1),
             F.repeat(bh, rem.cast("int")),
             F.lit("00"),
         ),
     ).otherwise(
-        F.concat(hx(big_l, 1), F.repeat(bh, big_l.cast("int")), F.lit("00"))
+        F.concat(B.be_hex(big_l, 1), F.repeat(bh, big_l.cast("int")), F.lit("00"))
     )
     frame_hex = F.concat(
         F.lit("2c"),
         F.lit("00000000"),  # left, top (LE u16 each)
-        lehex(fw, 2),
-        lehex(fh, 2),
+        B.le_hex(fw, 2),
+        B.le_hex(fh, 2),
         F.lit("00"),  # packed: no local color table
         F.lit("02"),  # LZW minimum code size
         chain_hex,
     )
     payload_hex = F.concat(
         F.lit("474946383961"),  # "GIF89a"
-        lehex(width, 2),
-        lehex(height, 2),
-        hx(F.lit(0xF0) + n_bits, 1),  # GCT flag + color res 7 + size N
+        B.le_hex(width, 2),
+        B.le_hex(height, 2),
+        B.be_hex(F.lit(0xF0) + n_bits, 1),  # GCT flag + color res 7 + size N
         F.lit("0000"),  # background index, aspect
         F.repeat(gct_fill, gct_bytes.cast("int")),
         F.repeat(ext_hex, n_ext.cast("int")),
@@ -5429,16 +5236,8 @@ def multimodal_gif_frame_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     gif = d.select("doc_id", F.unhex(payload_hex).alias("payload"))
     p = F.col("payload")
 
-    def rd(pos, nbytes=1):
-        return F.conv(
-            F.hex(F.substring(p, pos.cast("int"), nbytes)), 16, 10
-        ).cast("long")
-
-    def rd_le16(pos):
-        h = F.hex(F.substring(p, pos.cast("int"), 2))
-        return F.conv(
-            F.concat(F.substring(h, 3, 2), F.substring(h, 1, 2)), 16, 10
-        ).cast("long")
+    rd = partial(B.read_uint, p, nbytes=1)
+    rd_le16 = partial(B.read_uint, p, nbytes=2, little_endian=True)
 
     pk = rd(F.lit(11))
     st = gif.select(
@@ -5638,15 +5437,6 @@ def multimodal_ico_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     did = F.col("doc_id")
 
-    def hx(c, nbytes):
-        return F.lpad(F.hex(c.cast("long")), 2 * nbytes, "0")
-
-    def lehex(c, nbytes):
-        h = hx(c, nbytes)
-        return F.concat(
-            *[F.substring(h, 2 * nbytes - 1 - 2 * i, 2) for i in range(nbytes)]
-        )
-
     cnt = (did % 3 + 1).cast("long")
     ws = [((did + 7 * i) % 29 + 1).cast("long") for i in range(ICO_MAX_ENTRIES)]
     hs = [((did + 13 * i) % 17 + 1).cast("long") for i in range(ICO_MAX_ENTRIES)]
@@ -5659,16 +5449,16 @@ def multimodal_ico_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i in range(ICO_MAX_ENTRIES):
         offs.append(acc)
         acc = acc + sizes[i]
-    fill = hx((did * 11 + 5) % 256, 1)
+    fill = B.be_hex((did * 11 + 5) % 256, 1)
     dir_hex = F.concat(
-        F.lit("0000"), F.lit("0100"), lehex(cnt, 2),
+        F.lit("0000"), F.lit("0100"), B.le_hex(cnt, 2),
         *[
             F.when(
                 F.lit(i) < cnt,
                 F.concat(
-                    hx(ws[i], 1), hx(hs[i], 1), F.lit("0000"),
+                    B.be_hex(ws[i], 1), B.be_hex(hs[i], 1), F.lit("0000"),
                     F.lit("0100"), F.lit("2000"),
-                    lehex(sizes[i], 4), lehex(offs[i], 4),
+                    B.le_hex(sizes[i], 4), B.le_hex(offs[i], 4),
                 ),
             ).otherwise(F.lit(""))
             for i in range(ICO_MAX_ENTRIES)
@@ -5680,11 +5470,11 @@ def multimodal_ico_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(i) < cnt,
                 F.concat(
                     F.lit("28000000"),          # biSize = 40 LE
-                    lehex(ws[i], 4),            # biWidth LE
-                    lehex(2 * hs[i], 4),        # biHeight DOUBLED LE
+                    B.le_hex(ws[i], 4),            # biWidth LE
+                    B.le_hex(2 * hs[i], 4),        # biHeight DOUBLED LE
                     F.lit("0100"), F.lit("2000"),  # planes, bpp
                     F.lit("00000000"),          # compression
-                    lehex(xors[i] + ands[i], 4),  # biSizeImage
+                    B.le_hex(xors[i] + ands[i], 4),  # biSizeImage
                     F.lit("00000000" * 4),      # resolutions, colors
                     F.repeat(fill, xors[i].cast("int")),
                     F.repeat(F.lit("00"), ands[i].cast("int")),
@@ -5698,25 +5488,8 @@ def multimodal_ico_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p = F.col("payload")
 
-    def rd(pos, nbytes=1):
-        return F.conv(
-            F.hex(F.substring(p, pos.cast("int") if hasattr(pos, "cast") else pos, nbytes)),
-            16, 10,
-        ).cast("long")
-
-    def rd_le(pos, nbytes):
-        posc = pos.cast("int") if hasattr(pos, "cast") else F.lit(pos).cast("int")
-        h = F.hex(F.substring(p, posc, nbytes))
-        return F.conv(
-            F.concat(
-                *[
-                    F.substring(h, 2 * nbytes - 1 - 2 * i, 2)
-                    for i in range(nbytes)
-                ]
-            ),
-            16, 10,
-        ).cast("long")
-
+    rd = partial(B.read_uint, p, nbytes=1)
+    rd_le = partial(B.read_uint, p, little_endian=True)
     n_ent = rd_le(F.lit(5), 2)
     st = ico.select(
         "doc_id",
@@ -5897,15 +5670,11 @@ def multimodal_png_crc32(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python at any scale."""
     d = table(spark, sf_dir, "documents")
     did = F.col("doc_id")
-    tbl = F.array(*[F.lit(v).cast("long") for v in CRC32_TABLE])
-
-    def hx(c, nbytes):
-        return F.lpad(F.hex(c.cast("long")), 2 * nbytes, "0")
 
     w = (did % 317 + 1).cast("long")
     h = (did % 211 + 1).cast("long")
     ds = did.cast("string")
-    ihdr_data_hex = F.concat(hx(w, 4), hx(h, 4), F.lit("0802000000"))
+    ihdr_data_hex = F.concat(B.be_hex(w, 4), B.be_hex(h, 4), F.lit("0802000000"))
     text_data_hex = F.concat(
         F.lit("646f6300"),  # "doc" NUL
         F.lit("69643d"),    # "id="
@@ -5913,58 +5682,20 @@ def multimodal_png_crc32(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     text_len = (F.lit(7) + F.length(ds)).cast("long")
 
-    def crc_over_hex(hex_col):
-        """CRC-32 of the bytes a hex string denotes, as a fold over
-        byte positions (the hex col is only plan-side scaffolding —
-        the read path below folds over the BINARY payload)."""
-        nbytes = (F.length(hex_col) / 2).cast("long")
-        byte_at = lambda i: F.conv(  # noqa: E731
-            F.substring(hex_col, (2 * i - 1).cast("int"), 2), 16, 10
-        ).cast("long")
-        raw = F.aggregate(
-            F.sequence(F.lit(1).cast("long"), nbytes),
-            F.lit(0xFFFFFFFF).cast("long"),
-            lambda acc, i: F.element_at(
-                tbl,
-                (
-                    F.pmod(acc.bitwiseXOR(byte_at(i)), 256) + 1
-                ).cast("int"),
-            ).bitwiseXOR(F.shiftright(acc, 8)),
-        )
-        return raw.bitwiseXOR(F.lit(0xFFFFFFFF).cast("long"))
-
+    crc_hex = partial(B.crc, table=CRC32_TABLE, hex_string=True)
     ihdr_chunk_hex = F.concat(F.lit("49484452"), ihdr_data_hex)
     text_chunk_hex = F.concat(F.lit("74455874"), text_data_hex)
     payload_hex = F.concat(
         F.lit("89504e470d0a1a0a"),
-        F.lit("0000000d"), ihdr_chunk_hex, hx(crc_over_hex(ihdr_chunk_hex), 4),
-        hx(text_len, 4), text_chunk_hex, hx(crc_over_hex(text_chunk_hex), 4),
-        F.lit("00000000"), F.lit("49454e44"), hx(crc_over_hex(F.lit("49454e44")), 4),
+        F.lit("0000000d"), ihdr_chunk_hex, B.be_hex(crc_hex(ihdr_chunk_hex), 4),
+        B.be_hex(text_len, 4), text_chunk_hex, B.be_hex(crc_hex(text_chunk_hex), 4),
+        F.lit("00000000"), F.lit("49454e44"), B.be_hex(crc_hex(F.lit("49454e44")), 4),
     )
     png = d.select("doc_id", F.unhex(payload_hex).alias("payload"))
     p = F.col("payload")
 
-    def rd(pos, nbytes):
-        return F.conv(
-            F.hex(F.substring(p, pos.cast("int") if hasattr(pos, "cast") else pos, nbytes)),
-            16, 10,
-        ).cast("long")
-
-    def crc_bytes(start, length):
-        """CRC-32 fold over payload bytes [start, start+length)."""
-        byte_at = lambda i: F.conv(  # noqa: E731
-            F.hex(F.substring(p, (start + i).cast("int"), 1)), 16, 10
-        ).cast("long")
-        raw = F.aggregate(
-            F.sequence(F.lit(0).cast("long"), length - 1),
-            F.lit(0xFFFFFFFF).cast("long"),
-            lambda acc, i: F.element_at(
-                tbl,
-                (F.pmod(acc.bitwiseXOR(byte_at(i)), 256) + 1).cast("int"),
-            ).bitwiseXOR(F.shiftright(acc, 8)),
-        )
-        return raw.bitwiseXOR(F.lit(0xFFFFFFFF).cast("long"))
-
+    rd = partial(B.read_uint, p)
+    crc_bytes = partial(B.crc, p, CRC32_TABLE)
     ihdr_len = rd(F.lit(9), 4)
     ihdr_crc_stored = rd(F.lit(17) + ihdr_len, 4)
     ihdr_crc_comp = crc_bytes(F.lit(13).cast("long"), F.lit(4) + ihdr_len)
@@ -6059,19 +5790,10 @@ def multimodal_avi_idx1_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     did = F.col("doc_id")
 
-    def hx(c, nbytes):
-        return F.lpad(F.hex(c.cast("long")), 2 * nbytes, "0")
-
-    def lehex(c, nbytes):
-        h = hx(c, nbytes)
-        return F.concat(
-            *[F.substring(h, 2 * nbytes - 1 - 2 * i, 2) for i in range(nbytes)]
-        )
-
     n = (did % 4 + 1).cast("long")
     szs = [((did + 31 * i) % 97 + 1).cast("long") for i in range(AVI_MAX_FRAMES)]
     pads = [F.pmod(s, 2) for s in szs]
-    fill = hx((did * 13 + 7) % 256, 1)
+    fill = B.be_hex((did * 13 + 7) % 256, 1)
     # movi list data = "movi" + chunks (with pad bytes)
     chunk_hexes = []
     offs = []
@@ -6083,7 +5805,7 @@ def multimodal_avi_idx1_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(i) < n,
                 F.concat(
                     F.lit("30306463"),  # "00dc"
-                    lehex(szs[i], 4),
+                    B.le_hex(szs[i], 4),
                     F.repeat(fill, szs[i].cast("int")),
                     F.when(pads[i] == 1, F.lit("00")).otherwise(F.lit("")),
                 ),
@@ -6098,9 +5820,9 @@ def multimodal_avi_idx1_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(i) < n,
             F.concat(
                 F.lit("30306463"),
-                lehex(F.lit(0x10 if i % 2 == 0 else 0).cast("long"), 4),
-                lehex(offs[i], 4),
-                lehex(szs[i], 4),
+                B.le_hex(F.lit(0x10 if i % 2 == 0 else 0).cast("long"), 4),
+                B.le_hex(offs[i], 4),
+                B.le_hex(szs[i], 4),
             ),
         ).otherwise(F.lit(""))
         for i in range(AVI_MAX_FRAMES)
@@ -6108,10 +5830,10 @@ def multimodal_avi_idx1_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx_size = 16 * n
     riff_size = F.lit(4).cast("long") + 8 + movi_data_len + 8 + idx_size
     payload_hex = F.concat(
-        F.lit("52494646"), lehex(riff_size, 4), F.lit("41564920"),
-        F.lit("4c495354"), lehex(movi_data_len, 4), F.lit("6d6f7669"),
+        F.lit("52494646"), B.le_hex(riff_size, 4), F.lit("41564920"),
+        F.lit("4c495354"), B.le_hex(movi_data_len, 4), F.lit("6d6f7669"),
         *chunk_hexes,
-        F.lit("69647831"), lehex(idx_size, 4),
+        F.lit("69647831"), B.le_hex(idx_size, 4),
         *idx_entries,
     )
     avi = d.select("doc_id", F.unhex(payload_hex).alias("payload"))
@@ -6123,19 +5845,7 @@ def multimodal_avi_idx1_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "utf-8",
         )
 
-    def rd_le(pos, nbytes=4):
-        posc = pos.cast("int") if hasattr(pos, "cast") else F.lit(pos).cast("int")
-        h = F.hex(F.substring(p, posc, nbytes))
-        return F.conv(
-            F.concat(
-                *[
-                    F.substring(h, 2 * nbytes - 1 - 2 * i, 2)
-                    for i in range(nbytes)
-                ]
-            ),
-            16, 10,
-        ).cast("long")
-
+    rd_le = partial(B.read_uint, p, nbytes=4, little_endian=True)
     list_size = rd_le(F.lit(17))
     st = avi.select(
         "doc_id",
@@ -6325,17 +6035,7 @@ def multimodal_gzip_member_parse(
     multimodal family (absent in reference)."""
     d = table(spark, sf_dir, "documents")
     did = F.col("doc_id")
-    tbl = F.array(*[F.lit(v).cast("long") for v in CRC32_TABLE])
     empty = F.unhex(F.lit(""))
-
-    def hx(c, nbytes):
-        return F.lpad(F.hex(c.cast("long")), 2 * nbytes, "0")
-
-    def le_hex(c, nbytes):
-        h = hx(c, nbytes)
-        return F.concat(
-            *[F.substring(h, 2 * nbytes - 1 - 2 * i, 2) for i in range(nbytes)]
-        )
 
     # ---- build, stage 1: geometry + data + real CRC ------------------
     g = d.select(
@@ -6360,21 +6060,9 @@ def multimodal_gzip_member_parse(
         ),
     )
 
-    def crc_of(col, length):
-        byte_at = lambda i: F.conv(  # noqa: E731
-            F.hex(F.substring(col, (i + 1).cast("int"), 1)), 16, 10
-        ).cast("long")
-        raw = F.aggregate(
-            F.sequence(F.lit(0).cast("long"), length - 1),
-            F.lit(0xFFFFFFFF).cast("long"),
-            lambda acc, i: F.element_at(
-                tbl,
-                (F.pmod(acc.bitwiseXOR(byte_at(i)), 256) + 1).cast("int"),
-            ).bitwiseXOR(F.shiftright(acc, 8)),
-        )
-        return raw.bitwiseXOR(F.lit(0xFFFFFFFF).cast("long"))
-
-    g = g.select("*", crc_of(F.col("data"), F.col("dlen")).alias("crc"))
+    g = g.select(
+        "*", B.crc(F.col("data"), CRC32_TABLE, length=F.col("dlen")).alias("crc")
+    )
 
     # ---- build, stage 2: stored-block chain (PNG IDAT machinery) -----
     blocks = empty
@@ -6383,9 +6071,9 @@ def multimodal_gzip_member_parse(
         len_i = F.least(F.col("cap"), F.col("dlen") - off0)
         bfinal = (off0 + len_i == F.col("dlen")).cast("long")
         blk = F.concat(
-            F.unhex(hx(bfinal, 1)),
-            F.unhex(le_hex(len_i, 2)),
-            F.unhex(le_hex(F.lit(65535) - len_i, 2)),
+            B.be_bytes(bfinal, 1),
+            B.le_bytes(len_i, 2),
+            B.le_bytes(F.lit(65535) - len_i, 2),
             F.substring(
                 F.col("data"), (off0 + 1).cast("int"), len_i.cast("int")
             ),
@@ -6402,13 +6090,13 @@ def multimodal_gzip_member_parse(
     ).cast("long")
     header = F.concat(
         F.unhex(F.lit("1F8B08")),
-        F.unhex(hx(flg, 1)),
-        F.unhex(le_hex(F.col("mtime"), 4)),
+        B.be_bytes(flg, 1),
+        B.le_bytes(F.col("mtime"), 4),
         F.unhex(F.lit("00FF")),  # XFL, OS=unknown
         F.when(
             F.col("has_extra"),
             F.concat(
-                F.unhex(le_hex(F.col("xlen"), 2)),
+                B.le_bytes(F.col("xlen"), 2),
                 F.unhex(F.repeat(F.lit("AB"), F.col("xlen").cast("int"))),
             ),
         ).otherwise(empty),
@@ -6427,8 +6115,8 @@ def multimodal_gzip_member_parse(
         ).otherwise(empty),
     )
     trailer = F.concat(
-        F.unhex(le_hex(F.col("crc"), 4)),
-        F.unhex(le_hex(F.pmod(F.col("dlen"), F.lit(1 << 32)), 4)),
+        B.le_bytes(F.col("crc"), 4),
+        B.le_bytes(F.pmod(F.col("dlen"), F.lit(1 << 32)), 4),
     )
     gz = g.select(
         "doc_id",
@@ -6438,26 +6126,8 @@ def multimodal_gzip_member_parse(
     )
     p = F.col("payload")
 
-    def rd(pos, nbytes):
-        return F.conv(
-            F.hex(
-                F.substring(
-                    p,
-                    pos.cast("int") if hasattr(pos, "cast") else pos,
-                    nbytes,
-                )
-            ),
-            16,
-            10,
-        ).cast("long")
-
-    def rd_le(pos, nbytes):
-        b = [rd(pos + i, 1) for i in range(nbytes)]
-        out = b[0]
-        for i in range(1, nbytes):
-            out = out + b[i] * (1 << (8 * i))
-        return out
-
+    rd = partial(B.read_uint, p)
+    rd_le = partial(B.read_uint, p, little_endian=True)
     # ---- parse, stage 1: fixed header + FLG bit gates -----------------
     flg_p = rd(4, 1)
     st = gz.select(
@@ -6631,9 +6301,7 @@ def multimodal_gzip_member_parse(
         "*",
         rd_le(F.col("off"), 4).alias("crc_stored"),
         rd_le(F.col("off") + 4, 4).alias("isize"),
-        crc_of(F.col("raw_out"), F.octet_length(F.col("raw_out")).cast("long")).alias(
-            "crc_recomputed"
-        ),
+        B.crc(F.col("raw_out"), CRC32_TABLE).alias("crc_recomputed"),
     )
     return st.select(
         "doc_id",
@@ -6738,20 +6406,17 @@ def multimodal_midi_track_walk(
     did = F.col("doc_id")
     empty = F.unhex(F.lit(""))
 
-    def hx(c, nbytes):
-        return F.lpad(F.hex(c.cast("long")), 2 * nbytes, "0")
-
     # ---- build: varint encoding (1-3 bytes for < 2^21) ---------------
     def varint_hex(v):
         b2 = F.pmod(v, 128)  # low 7 bits (last byte, MSB clear)
         b1 = F.pmod(F.shiftright(v, 7), 128)
         b0 = F.pmod(F.shiftright(v, 14), 128)
         return F.when(
-            v < 128, hx(b2, 1)
+            v < 128, B.be_hex(b2, 1)
         ).when(
-            v < 16384, F.concat(hx(b1 + 128, 1), hx(b2, 1))
+            v < 16384, F.concat(B.be_hex(b1 + 128, 1), B.be_hex(b2, 1))
         ).otherwise(
-            F.concat(hx(b0 + 128, 1), hx(b1 + 128, 1), hx(b2, 1))
+            F.concat(B.be_hex(b0 + 128, 1), B.be_hex(b1 + 128, 1), B.be_hex(b2, 1))
         )
 
     g = d.select(
@@ -6769,7 +6434,7 @@ def multimodal_midi_track_walk(
         blen = (F.length(body_hex) / 2).cast("long")
         chunk = F.concat(
             F.encode(F.lit("MTrk"), "utf-8"),
-            F.unhex(hx(blen, 4)),
+            B.be_bytes(blen, 4),
             F.unhex(body_hex),
         )
         tracks = F.concat(
@@ -6780,27 +6445,15 @@ def multimodal_midi_track_walk(
         F.encode(F.lit("MThd"), "utf-8"),
         F.unhex(F.lit("00000006")),
         F.unhex(F.lit("0001")),
-        F.unhex(hx(F.col("ntrks"), 2)),
-        F.unhex(hx(F.lit(MIDI_DIVISION).cast("long"), 2)),
+        B.be_bytes(F.col("ntrks"), 2),
+        B.be_bytes(F.lit(MIDI_DIVISION).cast("long"), 2),
     )
     smf = g.select(
         "doc_id", "ntrks", F.concat(mthd, tracks).alias("payload")
     )
     p = F.col("payload")
 
-    def rd(pos, nbytes):
-        return F.conv(
-            F.hex(
-                F.substring(
-                    p,
-                    pos.cast("int") if hasattr(pos, "cast") else pos,
-                    nbytes,
-                )
-            ),
-            16,
-            10,
-        ).cast("long")
-
+    rd = partial(B.read_uint, p)
     # ---- parse: MThd ---------------------------------------------------
     st = smf.select(
         "doc_id",
@@ -6990,18 +6643,6 @@ def multimodal_elf_section_walk(
     did = F.col("doc_id")
     empty = F.unhex(F.lit(""))
 
-    def hx(c, nbytes):
-        return F.lpad(F.hex(c.cast("long")), 2 * nbytes, "0")
-
-    def le_hex(c, nbytes):
-        h = hx(c, nbytes)
-        return F.concat(
-            *[
-                F.substring(h, 2 * nbytes - 1 - 2 * i, 2)
-                for i in range(nbytes)
-            ]
-        )
-
     # ---- build: geometry ------------------------------------------------
     g = d.select(
         "doc_id",
@@ -7062,13 +6703,13 @@ def multimodal_elf_section_walk(
 
     def sh_entry(name_off, sh_type, sh_off, sh_size):
         return F.concat(
-            F.unhex(le_hex(name_off, 4)),
-            F.unhex(le_hex(sh_type, 4)),
+            B.le_bytes(name_off, 4),
+            B.le_bytes(sh_type, 4),
             F.unhex(F.lit("00" * 16)),  # flags, addr
-            F.unhex(le_hex(sh_off, 8)),
-            F.unhex(le_hex(sh_size, 8)),
+            B.le_bytes(sh_off, 8),
+            B.le_bytes(sh_size, 8),
             F.unhex(F.lit("00" * 8)),  # link, info
-            F.unhex(le_hex(F.lit(1).cast("long"), 8)),  # addralign
+            B.le_bytes(F.lit(1).cast("long"), 8),  # addralign
             F.unhex(F.lit("00" * 8)),  # entsize
         )
 
@@ -7095,18 +6736,18 @@ def multimodal_elf_section_walk(
 
     ehdr = F.concat(
         F.unhex(F.lit("7F454C46020101" + "00" * 9)),  # ident
-        F.unhex(le_hex(F.lit(2).cast("long"), 2)),    # e_type EXEC
-        F.unhex(le_hex(F.lit(62).cast("long"), 2)),   # e_machine x86-64
-        F.unhex(le_hex(F.lit(1).cast("long"), 4)),    # e_version
-        F.unhex(le_hex(F.col("entry"), 8)),
+        B.le_bytes(F.lit(2).cast("long"), 2),    # e_type EXEC
+        B.le_bytes(F.lit(62).cast("long"), 2),   # e_machine x86-64
+        B.le_bytes(F.lit(1).cast("long"), 4),    # e_version
+        B.le_bytes(F.col("entry"), 8),
         F.unhex(F.lit("00" * 8)),                     # e_phoff
-        F.unhex(le_hex(shoff, 8)),
+        B.le_bytes(shoff, 8),
         F.unhex(F.lit("00000000")),                   # e_flags
-        F.unhex(le_hex(F.lit(64).cast("long"), 2)),   # e_ehsize
+        B.le_bytes(F.lit(64).cast("long"), 2),   # e_ehsize
         F.unhex(F.lit("00000000")),                   # phentsize, phnum
-        F.unhex(le_hex(F.lit(64).cast("long"), 2)),   # e_shentsize
-        F.unhex(le_hex(F.col("k") + 2, 2)),           # e_shnum
-        F.unhex(le_hex(F.col("k") + 1, 2)),           # e_shstrndx
+        B.le_bytes(F.lit(64).cast("long"), 2),   # e_shentsize
+        B.le_bytes(F.col("k") + 2, 2),           # e_shnum
+        B.le_bytes(F.col("k") + 1, 2),           # e_shstrndx
     )
     elf = g.select(
         "doc_id",
@@ -7115,28 +6756,7 @@ def multimodal_elf_section_walk(
     )
     p = F.col("payload")
 
-    def rd_le(pos, nbytes):
-        b = [
-            F.conv(
-                F.hex(
-                    F.substring(
-                        p,
-                        (pos + i).cast("int")
-                        if hasattr(pos, "cast")
-                        else pos + i,
-                        1,
-                    )
-                ),
-                16,
-                10,
-            ).cast("long")
-            for i in range(nbytes)
-        ]
-        out = b[0]
-        for i in range(1, nbytes):
-            out = out + b[i] * (1 << (8 * i))
-        return out
-
+    rd_le = partial(B.read_uint, p, little_endian=True)
     # ---- parse: ehdr -----------------------------------------------------
     st = elf.select(
         "doc_id",
@@ -7370,18 +6990,6 @@ def multimodal_webp_vp8l_parse(
     did = F.col("doc_id")
     empty = F.unhex(F.lit(""))
 
-    def hx(c, nbytes):
-        return F.lpad(F.hex(c.cast("long")), 2 * nbytes, "0")
-
-    def le_hex(c, nbytes):
-        h = hx(c, nbytes)
-        return F.concat(
-            *[
-                F.substring(h, 2 * nbytes - 1 - 2 * i, 2)
-                for i in range(nbytes)
-            ]
-        )
-
     g = d.select(
         "doc_id",
         ((did * 2654435761) % 16384 + 1).cast("long").alias("w"),
@@ -7396,9 +7004,9 @@ def multimodal_webp_vp8l_parse(
     )  # version bits 29..31 = 0
     chunk = F.concat(
         F.encode(F.lit("VP8L"), "utf-8"),
-        F.unhex(le_hex(F.col("chunk_size"), 4)),
+        B.le_bytes(F.col("chunk_size"), 4),
         F.unhex(F.lit("2F")),
-        F.unhex(le_hex(packed, 4)),
+        B.le_bytes(packed, 4),
         F.unhex(F.repeat(F.lit("5A"), F.col("fill").cast("int"))),
         F.when(
             F.pmod(F.col("chunk_size"), 2) == 1, F.unhex(F.lit("00"))
@@ -7411,23 +7019,14 @@ def multimodal_webp_vp8l_parse(
         "doc_id",
         F.concat(
             F.encode(F.lit("RIFF"), "utf-8"),
-            F.unhex(le_hex(riff_size, 4)),
+            B.le_bytes(riff_size, 4),
             F.encode(F.lit("WEBP"), "utf-8"),
             chunk,
         ).alias("payload"),
     )
     p = F.col("payload")
 
-    def rd_le(pos, nbytes):
-        b = [
-            F.conv(F.hex(F.substring(p, pos + i, 1)), 16, 10).cast("long")
-            for i in range(nbytes)
-        ]
-        out = b[0]
-        for i in range(1, nbytes):
-            out = out + b[i] * (1 << (8 * i))
-        return out
-
+    rd_le = partial(B.read_uint, p, little_endian=True)
     u32 = rd_le(22, 4)
     csize = rd_le(17, 4)
     return webp.select(
@@ -7536,9 +7135,6 @@ def multimodal_ebml_vint_walk(
     did = F.col("doc_id")
     empty = F.unhex(F.lit(""))
 
-    def hx(c, nbytes):
-        return F.lpad(F.hex(c.cast("long")), 2 * nbytes, "0")
-
     def vint_hex(v, w):
         """EBML vint of value v encoded w bytes wide (v < 2^(7w)-1)."""
         # first byte: (0x80 >> (w-1)) | top bits of v
@@ -7547,7 +7143,7 @@ def multimodal_ebml_vint_walk(
             F.pmod(F.shiftright(v, 8 * (w - 1 - i)), 256)
             for i in range(1, w)
         ]
-        return F.concat(hx(first, 1), *[hx(b, 1) for b in rest])
+        return F.concat(B.be_hex(first, 1), *[B.be_hex(b, 1) for b in rest])
 
     g = d.select(
         "doc_id",
@@ -7561,9 +7157,9 @@ def multimodal_ebml_vint_walk(
         cid = F.lit(0x80 + k).cast("long")  # 1-byte class-bit IDs
         # width is data-dependent -> emit the three encodings guarded
         enc = (
-            F.when(wk == 1, F.unhex(F.concat(hx(cid, 1), vint_hex(sk, 1))))
-            .when(wk == 2, F.unhex(F.concat(hx(cid, 1), vint_hex(sk, 2))))
-            .otherwise(F.unhex(F.concat(hx(cid, 1), vint_hex(sk, 3))))
+            F.when(wk == 1, F.unhex(F.concat(B.be_hex(cid, 1), vint_hex(sk, 1))))
+            .when(wk == 2, F.unhex(F.concat(B.be_hex(cid, 1), vint_hex(sk, 2))))
+            .otherwise(F.unhex(F.concat(B.be_hex(cid, 1), vint_hex(sk, 3))))
         )
         payload = F.unhex(
             F.repeat(F.lit(format(0x40 + k, "02X")), sk.cast("int"))
@@ -7588,18 +7184,7 @@ def multimodal_ebml_vint_walk(
     )
     p = F.col("payload")
 
-    def rd(pos, nbytes=1):
-        return F.conv(
-            F.hex(
-                F.substring(
-                    p,
-                    pos.cast("int") if hasattr(pos, "cast") else pos,
-                    nbytes,
-                )
-            ),
-            16,
-            10,
-        ).cast("long")
+    rd = partial(B.read_uint, p, nbytes=1)
 
     def vint_width(b):
         """CLZ decode: 1 + number of leading zero bits of the first
@@ -7785,18 +7370,6 @@ def multimodal_bson_doc_walk(
     did = F.col("doc_id")
     empty = F.unhex(F.lit(""))
 
-    def hx(c, nbytes):
-        return F.lpad(F.hex(c.cast("long")), 2 * nbytes, "0")
-
-    def le_hex(c, nbytes):
-        h = hx(c, nbytes)
-        return F.concat(
-            *[
-                F.substring(h, 2 * nbytes - 1 - 2 * i, 2)
-                for i in range(nbytes)
-            ]
-        )
-
     def cstr(text_col):
         return F.concat(F.encode(text_col, "utf-8"), F.unhex(F.lit("00")))
 
@@ -7810,20 +7383,20 @@ def multimodal_bson_doc_walk(
     )
     e_id = F.concat(
         F.unhex(F.lit("12")), cstr(F.lit("id")),
-        F.unhex(le_hex(F.col("id_val"), 8)),
+        B.le_bytes(F.col("id_val"), 8),
     )
     e_flag = F.concat(
         F.unhex(F.lit("08")), cstr(F.lit("flag")),
-        F.unhex(hx(F.col("flag_val"), 1)),
+        B.be_bytes(F.col("flag_val"), 1),
     )
     slen = F.length(F.col("name_val")).cast("long") + 1
     e_name = F.concat(
         F.unhex(F.lit("02")), cstr(F.lit("name")),
-        F.unhex(le_hex(slen, 4)), cstr(F.col("name_val")),
+        B.le_bytes(slen, 4), cstr(F.col("name_val")),
     )
     e_n = F.concat(
         F.unhex(F.lit("10")), cstr(F.lit("n")),
-        F.unhex(le_hex(F.col("n_val"), 4)),
+        B.le_bytes(F.col("n_val"), 4),
     )
     elems = [e_id, e_flag, e_name, e_n]
     body = empty
@@ -7837,32 +7410,12 @@ def multimodal_bson_doc_walk(
         "doc_id",
         "rot",
         F.concat(
-            F.unhex(le_hex(total, 4)), body, F.unhex(F.lit("00"))
+            B.le_bytes(total, 4), body, F.unhex(F.lit("00"))
         ).alias("payload"),
     )
     p = F.col("payload")
 
-    def rd_le(pos, nbytes):
-        b = [
-            F.conv(
-                F.hex(
-                    F.substring(
-                        p,
-                        (pos + i).cast("int")
-                        if hasattr(pos, "cast")
-                        else pos + i,
-                        1,
-                    )
-                ),
-                16,
-                10,
-            ).cast("long")
-            for i in range(nbytes)
-        ]
-        out = b[0]
-        for i in range(1, nbytes):
-            out = out + b[i] * (1 << (8 * i))
-        return out
+    rd_le = partial(B.read_uint, p, little_endian=True)
 
     def name_at(pos):
         return F.substring_index(
@@ -8041,28 +7594,6 @@ def _pngfull_build(d: DataFrame) -> DataFrame:
     an independent pure-Python encoder + stdlib zlib."""
     did = F.col("doc_id")
     zero = F.lit(0).cast("long")
-    tbl = F.array(*[F.lit(v).cast("long") for v in CRC32_TABLE])
-
-    def hx(c, nbytes):
-        return F.lpad(F.hex(c.cast("long")), 2 * nbytes, "0")
-
-    def le16hex(c):
-        c = c.cast("long")
-        return F.concat(hx(F.pmod(c, 256), 1), hx(F.shiftright(c, 8), 1))
-
-    def crc_over_hex(hex_col):
-        nbytes = (F.length(hex_col) / 2).cast("long")
-        byte_at = lambda i: F.conv(  # noqa: E731
-            F.substring(hex_col, (2 * i - 1).cast("int"), 2), 16, 10
-        ).cast("long")
-        raw = F.aggregate(
-            F.sequence(F.lit(1).cast("long"), nbytes),
-            F.lit(0xFFFFFFFF).cast("long"),
-            lambda acc, i: F.element_at(
-                tbl, (F.pmod(acc.bitwiseXOR(byte_at(i)), 256) + 1).cast("int")
-            ).bitwiseXOR(F.shiftright(acc, 8)),
-        )
-        return raw.bitwiseXOR(F.lit(0xFFFFFFFF).cast("long"))
 
     adler_over_hex = _pngfull_adler
 
@@ -8128,11 +7659,11 @@ def _pngfull_build(d: DataFrame) -> DataFrame:
             )
 
         rowhex = F.concat(
-            hx(f_r, 1),
+            B.be_hex(f_r, 1),
             F.aggregate(
                 F.sequence(F.lit(0), (F.col("w") - 1).cast("int")),
                 F.lit(""),
-                lambda s, i: F.concat(s, hx(F.pmod(enc_at(i), F.lit(256)), 1)),
+                lambda s, i: F.concat(s, B.be_hex(F.pmod(enc_at(i), F.lit(256)), 1)),
             ),
         )
         rows.append(
@@ -8150,9 +7681,9 @@ def _pngfull_build(d: DataFrame) -> DataFrame:
         len_i = F.least(F.col("cap"), F.col("total") - off0)
         bfinal = (off0 + len_i == F.col("total")).cast("long")
         blk = F.concat(
-            hx(bfinal, 1),
-            le16hex(len_i),
-            le16hex(F.lit(65535) - len_i),
+            B.be_hex(bfinal, 1),
+            B.le_hex(len_i, 2),
+            B.le_hex(F.lit(65535) - len_i, 2),
             F.substring(
                 "rawhex", (off0 * 2 + 1).cast("int"), (len_i * 2).cast("int")
             ),
@@ -8173,12 +7704,12 @@ def _pngfull_build(d: DataFrame) -> DataFrame:
     b3 = b2.select(
         "doc_id", "idat_len",
         F.concat(
-            F.lit("49484452"), hx(F.col("w"), 4), hx(F.col("h"), 4),
+            F.lit("49484452"), B.be_hex(F.col("w"), 4), B.be_hex(F.col("h"), 4),
             F.lit("0800000000"),
         ).alias("ihdr_chunk"),
         F.concat(
             F.lit("49444154"), F.lit("7801"), F.col("blockshex"),
-            hx(F.col("adler"), 4),
+            B.be_hex(F.col("adler"), 4),
         ).alias("idat_chunk"),
     )
     b4 = b3.select(
@@ -8187,10 +7718,10 @@ def _pngfull_build(d: DataFrame) -> DataFrame:
             F.lit("89504E470D0A1A0A"),
             F.lit("0000000D"),
             F.col("ihdr_chunk"),
-            hx(crc_over_hex(F.col("ihdr_chunk")), 4),
-            hx(F.col("idat_len"), 4),
+            B.be_hex(B.crc(F.col("ihdr_chunk"), CRC32_TABLE, hex_string=True), 4),
+            B.be_hex(F.col("idat_len"), 4),
             F.col("idat_chunk"),
-            hx(crc_over_hex(F.col("idat_chunk")), 4),
+            B.be_hex(B.crc(F.col("idat_chunk"), CRC32_TABLE, hex_string=True), 4),
             F.lit("0000000049454E44AE426082"),
         ).alias("payloadhex"),
     )
@@ -8291,7 +7822,6 @@ def multimodal_png_decode_gray(spark: SparkSession, sf_dir: str) -> DataFrame:
     png = _pngfull_build(table(spark, sf_dir, "documents")).localCheckpoint(
         eager=False
     )
-    tbl = F.array(*[F.lit(v).cast("long") for v in CRC32_TABLE])
 
     # ---- parse: fold-based, 6 projections total -----------------------
     # The first cut walked blocks and scanlines as ~30 CHAINED narrow
@@ -8307,21 +7837,7 @@ def multimodal_png_decode_gray(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = F.col("payload")
     rd = _zfh_rd
 
-    def crc_bytes(start, length):
-        """CRC-32 fold over payload bytes [start, start+length), start
-        1-based into the BINARY payload — the read-side recomputation."""
-        byte_at = lambda i: F.conv(  # noqa: E731
-            F.hex(F.substring(p, (start + i).cast("int"), 1)), 16, 10
-        ).cast("long")
-        raw = F.aggregate(
-            F.sequence(F.lit(0).cast("long"), length.cast("long") - 1),
-            F.lit(0xFFFFFFFF).cast("long"),
-            lambda acc, i: F.element_at(
-                tbl, (F.pmod(acc.bitwiseXOR(byte_at(i)), 256) + 1).cast("int")
-            ).bitwiseXOR(F.shiftright(acc, 8)),
-        )
-        return raw.bitwiseXOR(F.lit(0xFFFFFFFF).cast("long"))
-
+    crc_bytes = partial(B.crc, p, CRC32_TABLE)
     ihdr_len = rd(p, 9, 4)
     st = png.select(
         "doc_id",
@@ -9618,21 +9134,8 @@ def multimodal_png_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     p, rd = F.col("payload"), _zfh_rd
     zero = F.lit(0).cast("long")
-    tbl = F.array(*[F.lit(v).cast("long") for v in CRC32_TABLE])
 
-    def crc_bytes(start, length):
-        byte_at = lambda i: F.conv(  # noqa: E731
-            F.hex(F.substring(p, (start + i).cast("int"), 1)), 16, 10
-        ).cast("long")
-        raw = F.aggregate(
-            F.sequence(F.lit(0).cast("long"), length.cast("long") - 1),
-            F.lit(0xFFFFFFFF).cast("long"),
-            lambda acc, i: F.element_at(
-                tbl, (F.pmod(acc.bitwiseXOR(byte_at(i)), 256) + 1).cast("int")
-            ).bitwiseXOR(F.shiftright(acc, 8)),
-        )
-        return raw.bitwiseXOR(F.lit(0xFFFFFFFF).cast("long"))
-
+    crc_bytes = partial(B.crc, p, CRC32_TABLE)
     idat_len = rd(p, 34, 4)
     st = png.select(
         "doc_id",
@@ -9817,25 +9320,6 @@ def multimodal_png_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 # path. multimodal_gzip_member_parse walked the framing; this query decodes
 # the CONTENT.
 # ---------------------------------------------------------------------------
-def _zdh_crc32_hex(s):
-    """Table-driven CRC-32 (the gzip/PNG polynomial) over a hex-string
-    column — the trailer check every gunzip performs on the recovered
-    bytes."""
-    tbl = F.array(*[F.lit(v).cast("long") for v in CRC32_TABLE])
-    nbytes = (F.length(s) / 2).cast("long")
-    raw = F.aggregate(
-        F.sequence(F.lit(1), nbytes),
-        F.lit(0xFFFFFFFF).cast("long"),
-        lambda acc, i: F.element_at(
-            tbl,
-            (F.pmod(acc.bitwiseXOR(_zdh_hexbyte1(s, i)), 256) + 1).cast(
-                "int"
-            ),
-        ).bitwiseXOR(F.shiftright(acc, 8)),
-    )
-    return raw.bitwiseXOR(F.lit(0xFFFFFFFF).cast("long"))
-
-
 def _zdh_rd_le_hex(s, pos, nbytes):
     """LITTLE-endian nbytes read at 1-based BYTE position pos of a
     hex-string column (gzip trailers are LE, unlike PNG's BE fields)."""
@@ -9939,9 +9423,10 @@ def catalyst_gunzip_hex(gz: DataFrame) -> DataFrame:
         "single_block_ok",
         "lens_ok",
         "inflate_ok",
-        (_zdh_crc32_hex(F.col("out_hex")) == F.col("crc_stored")).alias(
-            "crc32_ok"
-        ),
+        (
+            B.crc(F.col("out_hex"), CRC32_TABLE, hex_string=True)
+            == F.col("crc_stored")
+        ).alias("crc32_ok"),
         (F.pmod(n_bytes, F.lit(4294967296)) == F.col("isize_stored")).alias(
             "isize_ok"
         ),
@@ -10131,9 +9616,10 @@ def catalyst_unzip(zp: DataFrame) -> DataFrame:
         "names_match",
         (F.col("eocd_arith_ok") & (n_bytes == F.col("usz"))).alias("sizes_ok"),
         "inflate_ok",
-        (_zdh_crc32_hex(F.col("out_hex")) == F.col("crc_stored")).alias(
-            "crc32_ok"
-        ),
+        (
+            B.crc(F.col("out_hex"), CRC32_TABLE, hex_string=True)
+            == F.col("crc_stored")
+        ).alias("crc32_ok"),
         n_bytes.alias("n_bytes"),
         stats.alias("byte_sum"),
         F.md5(F.unhex(F.col("out_hex"))).alias("out_md5"),
@@ -10248,27 +9734,6 @@ def multimodal_warc_gzip_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the wire), and integrity is TWO real checksums per record under TFRecord's
 # rotate-15-plus-constant masking.
 # ---------------------------------------------------------------------------
-def _tfr_crc32c_slice(s, start, nbytes):
-    """Table-driven CRC-32C (Castagnoli) over `nbytes` bytes of hex-string
-    column `s` beginning at 1-based BYTE offset `start` — both offsets may
-    be data-dependent Columns."""
-    from ..operators.multimodal import CRC32C_TABLE
-
-    tbl = F.array(*[F.lit(v).cast("long") for v in CRC32C_TABLE])
-    raw = F.aggregate(
-        F.sequence(F.lit(1).cast("long"), nbytes),
-        F.lit(0xFFFFFFFF).cast("long"),
-        lambda acc, i: F.element_at(
-            tbl,
-            (
-                F.pmod(acc.bitwiseXOR(_zdh_hexbyte1(s, start + i - 1)), 256)
-                + 1
-            ).cast("int"),
-        ).bitwiseXOR(F.shiftright(acc, 8)),
-    )
-    return raw.bitwiseXOR(F.lit(0xFFFFFFFF).cast("long"))
-
-
 def _tfr_mask(crc):
     """TFRecord CRC masking: rotate right 15 within 32 bits, then add the
     mask constant mod 2^32. The rotate's two halves occupy disjoint bit
@@ -10341,10 +9806,11 @@ def catalyst_tfrecord_walk(tfr: DataFrame) -> DataFrame:
     struct fold: (doc_id, payload) -> framing + double-CRC verdicts +
     body stats. The composition surface the registered query and the
     third-engine unit test share."""
-    from ..operators.multimodal import TFRECORD_MAX_RECORDS
+    from ..operators.multimodal import CRC32C_TABLE, TFRECORD_MAX_RECORDS
 
     p = F.col("payload")
     gh = F.hex(p)
+    gh_crc = partial(B.crc, gh, CRC32C_TABLE, hex_string=True)
     plen = F.octet_length(p).cast("long")
     zero = F.lit(0).cast("long")
 
@@ -10352,9 +9818,13 @@ def catalyst_tfrecord_walk(tfr: DataFrame) -> DataFrame:
         off = acc.getField("off")  # 1-based byte offset of the record
         active = ~acc.getField("done")
         bl = _zdh_rd_le_hex(gh, off, 8)
-        len_crc_ok = _tfr_mask(_tfr_crc32c_slice(gh, off, F.lit(8).cast("long"))) == _zdh_rd_le_hex(gh, off + 8, 4)
+        len_crc_ok = _tfr_mask(gh_crc(off, F.lit(8).cast("long"))) == _zdh_rd_le_hex(
+            gh, off + 8, 4
+        )
         data_at = off + 12
-        data_crc_ok = _tfr_mask(_tfr_crc32c_slice(gh, data_at, bl)) == _zdh_rd_le_hex(gh, data_at + bl, 4)
+        data_crc_ok = _tfr_mask(gh_crc(data_at, bl)) == _zdh_rd_le_hex(
+            gh, data_at + bl, 4
+        )
         nxt = off + 16 + bl
         return F.struct(
             F.when(active, nxt).otherwise(off).alias("off"),

@@ -8,13 +8,11 @@ strongest correctness statement available for the streaming path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
 from ..streaming import jobs
 from .registry import register
 
 
-@register(
+register(
     "stream_tumbling_agg",
     oracle="""
     SELECT date_trunc('hour', ts) AS window_start,
@@ -25,23 +23,17 @@ from .registry import register
     GROUP BY 1, 2
     """,
     tags=("stream", "window", "agg"),
-)
-def stream_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked tumbling-window aggregation, streaming == batch."""
-    return jobs.stream_tumbling_agg(spark, sf_dir)
+)(jobs.stream_tumbling_agg)
 
 
-@register(
+register(
     "stream_dedup_keys",
     oracle="SELECT DISTINCT user_id, event_type FROM events",
     tags=("stream", "dedup"),
-)
-def stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming stateful dedup — emitted key set equals batch DISTINCT."""
-    return jobs.stream_dedup_keys(spark, sf_dir)
+)(jobs.stream_dedup_keys)
 
 
-@register(
+register(
     "stream_stream_join",
     oracle="""
     SELECT p.event_id AS purchase_id,
@@ -56,14 +48,10 @@ def stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND c.ts >= p.ts - INTERVAL 1 HOUR
     """,
     tags=("stream", "join"),
-)
-def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked stream-stream join with a time-range condition (bounded
-    state on both sides) — drained result equals the batch range join."""
-    return jobs.stream_stream_join(spark, sf_dir)
+)(jobs.stream_stream_join)
 
 
-@register(
+register(
     "stream_user_totals",
     oracle="""
     SELECT user_id,
@@ -72,14 +60,10 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events GROUP BY user_id
     """,
     tags=("stream", "stateful", "pandas_udf"),
-)
-def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """applyInPandasWithState running totals — final state equals batch
-    groupBy (exact-cents state => bit-exact doubles)."""
-    return jobs.stream_user_totals(spark, sf_dir)
+)(jobs.stream_user_totals)
 
 
-@register(
+register(
     "stream_session_window",
     oracle="""
     WITH flagged AS (
@@ -102,13 +86,10 @@ def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sess GROUP BY user_id, session_seq
     """,
     tags=("stream", "session", "window"),
-)
-def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming merging session windows == batch sessionization oracle."""
-    return jobs.stream_session_window(spark, sf_dir)
+)(jobs.stream_session_window)
 
 
-@register(
+register(
     "stream_sliding_agg",
     oracle="""
     WITH slid AS (
@@ -126,25 +107,17 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM slid GROUP BY 1
     """,
     tags=("stream", "window", "sliding"),
-)
-def stream_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming sliding windows == batch sliding aggregation oracle."""
-    return jobs.stream_sliding_agg(spark, sf_dir)
+)(jobs.stream_sliding_agg)
 
 
-@register(
+register(
     "stream_dedup_watermark",
     oracle="SELECT DISTINCT user_id, event_type FROM events",
     tags=("streaming", "dedup", "stateful"),
-)
-def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-state streaming dedup (dropDuplicatesWithinWatermark): state
-    for a key is dropped once the watermark passes it, so the store size
-    tracks the watermark delay, not stream history."""
-    return jobs.stream_dedup_within_watermark(spark, sf_dir)
+)(jobs.stream_dedup_within_watermark)
 
 
-@register(
+register(
     "stream_static_enrich",
     oracle="""
     SELECT date_trunc('hour', e.ts) AS window_start,
@@ -155,13 +128,10 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     """,
     tags=("stream", "join", "agg"),
-)
-def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static dimension enrichment + windowed agg, streaming == batch."""
-    return jobs.stream_static_enrich(spark, sf_dir)
+)(jobs.stream_static_enrich)
 
 
-@register(
+register(
     "stream_incremental_mv",
     oracle="""
     SELECT user_id, event_type,
@@ -174,16 +144,10 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     """,
     tags=("stream", "incremental", "mv"),
-)
-def stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """foreachBatch incremental MV maintenance: every micro-batch is
-    folded into persisted mergeable state (no history rescan, exactly-once
-    via the stream checkpoint); the finalized view must equal a full batch
-    recompute bit-exactly regardless of how arrivals were batched."""
-    return jobs.stream_incremental_mv(spark, sf_dir)
+)(jobs.stream_incremental_mv)
 
 
-@register(
+register(
     "stream_cdc_apply",
     oracle="""
     WITH ranked AS (
@@ -198,16 +162,10 @@ def stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rn = 1 AND event_type <> 'error'
     """,
     tags=("stream", "cdc", "upsert"),
-)
-def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming CDC apply via foreachBatch: per-key latest-wins merge
-    with delete tombstones, persisted state, associative so the final
-    snapshot is batching-independent — must equal the batch CDC replay
-    (same oracle as events_cdc_apply) bit-exactly."""
-    return jobs.stream_cdc_apply(spark, sf_dir)
+)(jobs.stream_cdc_apply)
 
 
-@register(
+register(
     "stream_holt_forecast",
     oracle=f"""
     SELECT user_id,
@@ -230,15 +188,10 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) s(user_id, n_events, st)
     """,
     tags=("stream", "stateful", "recursive", "forecast", "pandas_udf"),
-)
-def stream_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming 2-state Holt forecast (applyInPandasWithState) — final
-    per-user state equals the batch events_holt_linear fold bit-exactly
-    (plain-float64 kernel arithmetic == Catalyst fold == list_reduce)."""
-    return jobs.stream_holt_forecast(spark, sf_dir)
+)(jobs.stream_holt_forecast)
 
 
-@register(
+register(
     "stream_kmv_distinct",
     oracle=f"""
     WITH hv AS (
@@ -263,14 +216,7 @@ def stream_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM kept GROUP BY event_type
     """,
     tags=("stream", "stateful", "sketch", "cardinality", "pandas_udf"),
-)
-def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming per-type distinct-user KMV sketch
-    (applyInPandasWithState): union + keep-k-smallest state transitions
-    are order- AND batching-independent, so the drained sketch equals
-    the batch SQL replay bit-for-bit — deterministic "approximate"
-    cardinality on a live stream with constant per-group state."""
-    return jobs.stream_kmv_distinct(spark, sf_dir)
+)(jobs.stream_kmv_distinct)
 
 
 def _stream_hll_oracle() -> str:
@@ -330,23 +276,14 @@ def _stream_hll_oracle() -> str:
     """
 
 
-@register(
+register(
     "stream_hll_distinct",
     oracle=_stream_hll_oracle(),
     tags=("stream", "stateful", "sketch", "cardinality", "pandas_udf"),
-)
-def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming per-type distinct-user HyperLogLog register file
-    (applyInPandasWithState): register MAX-merge is order-, batching-
-    and duplicate-independent, so the drained sketch — register file,
-    integer geometric sum, raw AND linear-counting-corrected estimates —
-    equals the batch SQL replay bit-for-bit. Constant 64-long state per
-    group; the streaming twin of text_hll_registers, demonstrating that
-    the same sketch algebra serves batch and stream."""
-    return jobs.stream_hll_distinct(spark, sf_dir)
+)(jobs.stream_hll_distinct)
 
 
-@register(
+register(
     "stream_priority_sample",
     oracle=f"""
     WITH pri AS (
@@ -381,19 +318,10 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM samp GROUP BY event_type
     """,
     tags=("stream", "stateful", "sketch", "sampling", "pandas_udf"),
-)
-def stream_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming per-type PRIORITY SAMPLE with Horvitz-Thompson total
-    estimate (applyInPandasWithState): merge-by-id + keep-top-(k+1) is
-    order-, batching- and duplicate-independent, so the drained sample
-    ids, tau and estimate equal the batch SQL replay bit-for-bit — the
-    streaming twin of q_priority_sample_sum, and the third mergeable
-    sketch family (after KMV and HLL) served live with constant
-    per-group state."""
-    return jobs.stream_priority_sample(spark, sf_dir)
+)(jobs.stream_priority_sample)
 
 
-@register(
+register(
     "stream_countmin",
     oracle=f"""
     WITH ex AS (
@@ -430,20 +358,10 @@ def stream_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY p.user_id
     """,
     tags=("stream", "stateful", "sketch", "pandas_udf"),
-)
-def stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Count-Min sketch of per-user event counts — the FOURTH
-    mergeable streaming sketch family: state merge is elementwise
-    counter addition (batching-independent; exactly-once delivery is
-    part of the contract and is what availableNow + the checkpointed
-    state store provide, unlike the idempotent KMV/HLL merges). The
-    drained {jobs.SCM_D}x{jobs.SCM_W} counter table answers top-user
-    frequency probes with the classic one-sided overcount, bit-equal to
-    the batch SQL replay."""
-    return jobs.stream_countmin(spark, sf_dir)
+)(jobs.stream_countmin)
 
 
-@register(
+register(
     "stream_hdr_quantile",
     oracle=f"""
     WITH cells AS (
@@ -511,21 +429,10 @@ def stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN ranked r ON r.event_type = p.event_type AND r.rn = p.target
     """,
     tags=("stream", "stateful", "sketch", "histogram", "pandas_udf"),
-)
-def stream_hdr_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming HDR-histogram quantiles — the FIFTH mergeable streaming
-    sketch family: an exponential (bit-length x sub-bucket) value
-    histogram per event type held in applyInPandasWithState state,
-    merged by elementwise counter ADDITION (the Count-Min merge law on
-    a histogram — batching-independent, exactly-once by availableNow +
-    checkpointed state). p50/p90/p99 are rank lookups over the drained
-    cumulative counts; the exact target-rank value from a batch replay
-    must land inside the reported cell — the constant-relative-error
-    guarantee, checked bit-for-bit against this SQL replay."""
-    return jobs.stream_hdr_quantile(spark, sf_dir)
+)(jobs.stream_hdr_quantile)
 
 
-@register(
+register(
     "stream_bitmap_distinct",
     oracle="""
     WITH bm AS (
@@ -549,19 +456,10 @@ def stream_hdr_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s JOIN ex e ON e.event_type = s.event_type
     """,
     tags=("stream", "stateful", "bitmap", "distinct", "pandas_udf"),
-)
-def stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming EXACT distinct users via sparse packed-bitmap state —
-    the SIXTH streaming state family and the first with an IDEMPOTENT
-    merge (bitwise OR): replayed/duplicated batches are no-ops, so the
-    result survives AT-LEAST-ONCE delivery where the counter sketches
-    (Count-Min, HDR histogram) require exactly-once. The drained
-    popcount sums must EQUAL batch COUNT(DISTINCT) — verified
-    bit-for-bit against this SQL replay."""
-    return jobs.stream_bitmap_distinct(spark, sf_dir)
+)(jobs.stream_bitmap_distinct)
 
 
-@register(
+register(
     "stream_minmax_witness",
     oracle="""
     WITH m AS (
@@ -587,20 +485,10 @@ def stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
            JOIN wx ON wx.event_type = m.event_type
     """,
     tags=("stream", "stateful", "extrema", "pandas_udf"),
-)
-def stream_minmax_witness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming running extrema with WITNESS event ids — the SEVENTH
-    streaming state family and the second idempotent one (after the
-    bitmap OR), but at O(1) state per key: lexicographic (value, id)
-    min/max means replayed batches are no-ops, so at-least-once
-    delivery is safe. Witness rule: smallest event_id among rows
-    attaining the extreme value. The drained state must equal the
-    batch MIN/MAX + witness recovery bit-for-bit (doubles compare
-    exactly — no arithmetic ever touches the carried values)."""
-    return jobs.stream_minmax_witness(spark, sf_dir)
+)(jobs.stream_minmax_witness)
 
 
-@register(
+register(
     "stream_moments",
     oracle="""
     WITH c AS (
@@ -649,24 +537,10 @@ def stream_minmax_witness(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM m
     """,
     tags=("stream", "stateful", "moments", "pandas_udf"),
-)
-def stream_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming exact MOMENTS per event type — the EIGHTH streaming
-    state family: the state is the merge-by-addition power-sum vector
-    (n, sum c, sum c^2..c^4) over integer cents, held as
-    arbitrary-precision strings so it NEVER saturates (cents^4 alone
-    breaks int64); any point-in-time drain yields exact mean /
-    population variance / skewness / excess kurtosis with one
-    identically-shaped double expression per statistic (the exact
-    sums render to double through strings — the VARCHAR doctrine).
-    Counter-family merge law (like Count-Min / HDR): needs
-    exactly-once delivery, provided by availableNow + checkpointed
-    state. The drained sums must equal a batch SQL replay
-    bit-for-bit, strings included."""
-    return jobs.stream_moments(spark, sf_dir)
+)(jobs.stream_moments)
 
 
-@register(
+register(
     "stream_ams_f2",
     oracle=f"""
     WITH cnt AS (
@@ -702,18 +576,10 @@ def stream_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sk JOIN ex ON ex.event_type = sk.event_type
     """.replace("{R}", str(jobs.AMS_R)),
     tags=("stream", "stateful", "sketch", "pandas_udf"),
-)
-def stream_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming AMS (tug-of-war) F2 sketch per event type — the NINTH
-    streaming state family: R signed counters merged by pure addition
-    (batching/order independent; the sketch is a pure function of the
-    multiset, so the oracle replays the identical signed sums and the
-    drained state is bit-equal). mean(z_r^2) estimates the self-join
-    size F2; the exact F2 rides along for the error witness."""
-    return jobs.stream_ams_f2(spark, sf_dir)
+)(jobs.stream_ams_f2)
 
 
-@register(
+register(
     "stream_pattern_match",
     oracle="""
     WITH c AS (
@@ -743,10 +609,4 @@ def stream_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM j
     """,
     tags=("stream", "sequence", "state"),
-)
-def stream_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming CEP pattern matching (custom arbitrary-stateful
-    operator): per-user journey state + live regex funnel metrics; the
-    final emission equals the batch events_pattern_match — streaming ==
-    batch == oracle, the §2.9 contract."""
-    return jobs.stream_pattern_match(spark, sf_dir)
+)(jobs.stream_pattern_match)

@@ -16,7 +16,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from real_value_etl_spark.queries import all_queries  # noqa: F401
-from real_value_etl_spark.queries.registry import REGISTRY
+from real_value_etl_spark.queries.registry import REGISTRY, table
+
+from .test_registered_queries import checked_plan
 
 
 def plan_of(df) -> str:
@@ -87,9 +89,7 @@ def test_partition_pruning(spark, sf_dir, tmp_path):
     """Partitioned layout + partition-column filter => pruned scan."""
     from real_value_etl_spark.sinks.writers import write_partitioned_parquet
 
-    ev = REGISTRY["events_tumbling_agg"].fn.__globals__["table"](
-        spark, sf_dir, "events"
-    ).withColumn("day", F.to_date("ts"))
+    ev = table(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
     out = str(tmp_path / "events_part")
     write_partitioned_parquet(ev, out, ["event_type"])
     back = spark.read.parquet(out).filter(F.col("event_type") == "click")
@@ -111,7 +111,6 @@ def test_bucketed_join_elides_shuffle(spark, sf_dir):
     """Co-bucketed tables joined on the bucket column need NO exchange —
     the write-time bucketing IS the shuffle, amortized across every later
     join (the 100 TB pattern for repeatedly-joined fact tables)."""
-    from real_value_etl_spark.queries.registry import table
     from real_value_etl_spark.sinks.writers import write_bucketed_table
 
     import shutil
@@ -391,12 +390,12 @@ def test_gapfill_interp_grid_cross_join_is_broadcast(spark, sf_dir):
         "events_scd2_pointintime",
     ],
 )
-def test_round2_additions_scale_safe_plans(spark, sf_dir, name):
+def test_round2_additions_scale_safe_plans(spark, sf_dir, duck, name):
     """The round-2/3 additions keep the engine's standing plan promises:
     no cartesian/nested-loop pair explosion anywhere, and no Python
     row-at-a-time eval on any hot path (every kernel is Catalyst
     expressions)."""
-    plan = plan_of(REGISTRY[name].fn(spark, sf_dir))
+    plan = checked_plan(spark, sf_dir, duck, name)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan
@@ -446,7 +445,7 @@ def test_round2_additions_scale_safe_plans(spark, sf_dir, name):
         "sim_nprobe_recall_curve",
     ],
 )
-def test_bounded_broadcast_nlj_only(spark, sf_dir, name):
+def test_bounded_broadcast_nlj_only(spark, sf_dir, duck, name):
     """The query-set-x-corpus similarity queries and the divergence
     query's scalar-totals join DO use nested-loop joins — but every one
     must build from a BROADCAST side that is bounded by construction (the
@@ -455,7 +454,7 @@ def test_bounded_broadcast_nlj_only(spark, sf_dir, name):
     BroadcastNestedLoopJoin builds from a BroadcastExchange, no
     CartesianProduct node exists, and nothing falls back to Python
     eval."""
-    plan = plan_of(REGISTRY[name].fn(spark, sf_dir))
+    plan = checked_plan(spark, sf_dir, duck, name)
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastNestedLoopJoin") <= plan.count(
         "BroadcastExchange"
@@ -529,8 +528,6 @@ def test_cbo_table_stats_inform_the_optimizer(spark, sf_dir):
     compressed columnar data)."""
     import shutil
 
-    from real_value_etl_spark.queries.registry import table
-
     spark.sql("DROP TABLE IF EXISTS stats_nation")
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     shutil.rmtree(os.path.join(wh, "stats_nation"), ignore_errors=True)
@@ -559,8 +556,6 @@ def test_join_strategy_hints_are_honored(spark, sf_dir):
     SortMergeJoin on the same query — the escape hatch when stats mislead
     the planner at scale (e.g. a filtered build side the optimizer
     over-estimates)."""
-    from real_value_etl_spark.queries.registry import table
-
     li = table(spark, sf_dir, "lineitem")
     orders = table(spark, sf_dir, "orders")
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -588,8 +583,6 @@ def test_sorted_writes_compress_better(spark, sf_dir, tmp_path):
     RLE/dictionary encoding bite — the sorted copy of lineitem must be
     measurably smaller than the shuffled copy (the cheap storage win
     every 100 TB table layout should take)."""
-    from real_value_etl_spark.queries.registry import table
-
     li = table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_linestatus", "l_shipdate", "l_quantity"
     )
@@ -641,7 +634,6 @@ def test_ivf_pq_codes_partitioned_by_cluster_prune_probe_scan(spark, sf_dir, tmp
     the probe scan touches lives under a probed cluster's directory."""
     from real_value_etl_spark.operators.similarity import ivf_assign
     from real_value_etl_spark.queries.feature_ops import IVFPQ_CENT_MOD
-    from real_value_etl_spark.queries.registry import table
 
     emb = table(spark, sf_dir, "embeddings")
     cents = emb.filter(F.col("vec_id") % IVFPQ_CENT_MOD == 0)

@@ -3,11 +3,13 @@
 `check_registered_query` builds the query's frame from a clean cache and
 reports every problem with it, grouped by check: a DecimalType output
 column, a broken plan invariant (a)-(e), or a mismatch with its DuckDB
-oracle (a rows-only query must run and have columns). `checked_query`
-memoizes that verdict per query, so the per-check tests that read it
-(`test_plan_gate`, `test_oracle_parity`/`test_rows_only_runs`,
-`test_round9_ops.py::test_no_decimal_output_columns`) build each query
-once per session between them. Plan invariants, the scale properties of
+oracle (a rows-only query must run and have columns), and keeps the
+executed plan it checked. `checked_query` / `checked_plan` memoize that
+verdict per query, so the per-check tests that read it (`test_plan_gate`,
+`test_oracle_parity`/`test_rows_only_runs`,
+`test_round9_ops.py::test_no_decimal_output_columns`, and the plan-shape
+tests in `test_plans.py`) build each query once per session between
+them. Plan invariants, the scale properties of
 the executed plan:
 
 (a) any `Exchange SinglePartition` sits over a bounded-by-construction
@@ -36,6 +38,7 @@ from __future__ import annotations
 import json
 import os
 import re
+from typing import NamedTuple
 
 from pyspark.sql import types as T
 
@@ -346,12 +349,15 @@ def clean_plan(spark, spec: QuerySpec, sf_dir: str) -> str:
     return _executed_plan(_clean_build(spark, spec, sf_dir))
 
 
-def check_registered_query(
-    spark, sf_dir: str, duck, name: str
-) -> dict[str, list[str]]:
+class Verdict(NamedTuple):
+    problems: dict[str, list[str]]  # per check; empty lists mean it passes
+    plan: str  # the executed plan the gate read
+
+
+def check_registered_query(spark, sf_dir: str, duck, name: str) -> Verdict:
     """Build `name` once and return every problem found with it, per check:
     "decimal" (the output schema), "plan" (the gate) and "parity" (the
-    oracle, or rows-only); empty lists mean it passes."""
+    oracle, or rows-only), with the executed plan it checked."""
     spec = REGISTRY[name]
     problems: dict[str, list[str]] = {"decimal": [], "plan": [], "parity": []}
     try:
@@ -427,13 +433,13 @@ def check_registered_query(
     finally:
         # frames the build persisted must not leak into the next test
         scan.release_rank_caches()
-    return problems
+    return Verdict(problems, plan)
 
 
-_CHECKED: dict[tuple[str, str], dict[str, list[str]] | Exception] = {}
+_CHECKED: dict[tuple[str, str], Verdict | Exception] = {}
 
 
-def checked_query(spark, sf_dir: str, duck, name: str) -> dict[str, list[str]]:
+def _checked(spark, sf_dir: str, duck, name: str) -> Verdict:
     """`check_registered_query`, run once per (scale, query) per session;
     every later call returns (or re-raises) the first call's verdict."""
     key = (sf_dir, name)
@@ -446,6 +452,16 @@ def checked_query(spark, sf_dir: str, duck, name: str) -> dict[str, list[str]]:
     if isinstance(verdict, Exception):
         raise verdict
     return verdict
+
+
+def checked_query(spark, sf_dir: str, duck, name: str) -> dict[str, list[str]]:
+    """The memoized problems of `name`, per check."""
+    return _checked(spark, sf_dir, duck, name).problems
+
+
+def checked_plan(spark, sf_dir: str, duck, name: str) -> str:
+    """The memoized executed plan of `name`."""
+    return _checked(spark, sf_dir, duck, name).plan
 
 
 def test_budget_file_matches_registry(spark):
@@ -468,7 +484,7 @@ def test_check_reports_every_problem(spark, sf_dir, duck, monkeypatch):
     name = "_decimal_unbudgeted_wrong"
     fn = lambda s, _: s.sql("SELECT CAST(1.5 AS DECIMAL(18,2)) AS x")  # noqa: E731
     monkeypatch.setitem(REGISTRY, name, QuerySpec(name, fn, "SELECT 2.0 AS x"))
-    problems = check_registered_query(spark, sf_dir, duck, name)
+    problems = check_registered_query(spark, sf_dir, duck, name).problems
     assert [len(v) for v in problems.values()] == [1, 1, 1], problems
     assert "DecimalType in output schema at ['.x']" in problems["decimal"][0]
     assert "no shuffle-budget entry" in problems["plan"][0]
