@@ -85,10 +85,12 @@ def crc(
     `hex_string` is set.
 
     The fold crc = T[(crc ^ b) & 255] ^ (crc >> 8) runs as one `aggregate`
-    over byte indices, with the table as plan literals."""
+    over byte indices, with the table as plan literals. A region of length
+    0 or less folds no byte, so its CRC is 0."""
     tbl = F.array(*[F.lit(v).cast("long") for v in table])
     if length is None:
         length = (F.length(data) / 2).cast("long") if hex_string else F.length(data)
+    n = F.lit(length).cast("long")
 
     def byte_at(i):  # i is the 0-based index from `start`
         if hex_string:
@@ -97,8 +99,12 @@ def crc(
             h = F.hex(F.substring(data, (start + i).cast("int"), 1))
         return F.conv(h, 16, 10).cast("long")
 
+    # sequence(0, -1) is [0, -1], not empty
+    indices = F.when(n <= 0, F.array().cast("array<bigint>")).otherwise(
+        F.sequence(F.lit(0).cast("long"), n - 1)
+    )
     raw = F.aggregate(
-        F.sequence(F.lit(0).cast("long"), F.lit(length).cast("long") - 1),
+        indices,
         F.lit(0xFFFFFFFF).cast("long"),
         lambda acc, i: F.element_at(
             tbl, (F.pmod(acc.bitwiseXOR(byte_at(i)), 256) + 1).cast("int")

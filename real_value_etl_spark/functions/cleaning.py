@@ -22,16 +22,11 @@ def to_num(col: Column | str) -> Column:
     return c.try_cast("double")
 
 
-def floor_long(col: Column | str) -> Column:
-    """np.floor(to_numeric(...)).astype('Int64')
-    (reference transformation.py:33-35, :60-62)."""
-    return F.floor(to_num(col)).cast("long")
-
-
 def to_int(col: Column | str) -> Column:
-    """to_numeric(...).astype('Int64') for already-integral payloads
-    (reference transformation.py:51-53, :264-266 etc). Floors the double
-    first so '7.0' -> 7 like pandas' Int64 cast of a float."""
+    """to_numeric(...).astype('Int64') and np.floor(to_numeric(...))
+    .astype('Int64') (reference transformation.py:33-35, :51-53, :60-62,
+    :264-266 etc). Floors the double first so '7.0' -> 7 like pandas'
+    Int64 cast of a float."""
     return F.floor(to_num(col)).cast("long")
 
 

@@ -37,7 +37,6 @@ from ..functions.cleaning import (
     extract_offer_id,
     fill_num,
     fill_str,
-    floor_long,
     norm_ts,
     parse_str_list,
     prefix_each,
@@ -146,7 +145,7 @@ def _domclick_plan() -> tuple[tuple[Column, ...], Column]:
     base_image = "https://img.dmclk.ru/"
     base_sale = "https://domclick.ru/card/sale__flat__"
 
-    object_id = floor_long("Object ID")
+    object_id = to_int("Object ID")
     company_name = fill_str("Company Name")
     cols = _conform_cols(
         {
@@ -159,7 +158,7 @@ def _domclick_plan() -> tuple[tuple[Column, ...], Column]:
             "Address ID": to_int("Address ID"),
             "Area": to_num("Area"),
             "Rooms": to_num("Rooms"),
-            "Floor": floor_long("Floor"),
+            "Floor": to_int("Floor"),
             "Description": fill_str("Description"),
             "Published Date": norm_ts("Published Date"),
             "Updated Date": norm_ts("Updated Date"),

@@ -25,6 +25,36 @@ from .registry import register, table
 SESSION_GAP_SEC = 1800  # 30 min
 
 
+def _hourly_counts(ev: DataFrame) -> DataFrame:
+    """Events per (event_type, hour) as `(event_type, h, c)`: `h` is the
+    hour's start in epoch seconds, `c` the count. Hours with no event of a
+    type have no row."""
+    return ev.groupBy(
+        "event_type",
+        F.unix_timestamp(F.date_trunc("hour", "ts")).alias("h"),
+    ).agg(F.count("*").alias("c"))
+
+
+def _dense_hourly_counts(ev: DataFrame) -> DataFrame:
+    """`_hourly_counts` with every hour between a type's first and last
+    hour present, `c` = 0 where the type had no event: a per-type
+    `sequence(lo, hi, 3600)` spine left-joined to the counts. Lags,
+    differences and block statistics need this dense series; an absent
+    hour is an observation of zero, and skipping it would splice
+    non-adjacent samples."""
+    hc = _hourly_counts(ev)
+    b = hc.groupBy("event_type").agg(
+        F.min("h").alias("lo"), F.max("h").alias("hi")
+    )
+    spine = b.select(
+        "event_type",
+        F.explode(F.sequence("lo", "hi", F.lit(3600))).alias("h"),
+    )
+    return spine.join(hc, ["event_type", "h"], "left").select(
+        "event_type", "h", F.coalesce(F.col("c"), F.lit(0)).alias("c")
+    )
+
+
 # ---------------------------------------------------------------------------
 # Tumbling window aggregation (1 hour)
 # ---------------------------------------------------------------------------
@@ -2307,14 +2337,10 @@ def events_xcorr_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     the end. The two hourly series are bounded (corpus span in hours),
     so the 13-row lag spine and both series broadcast; the heavy step
     is the one map-side-combinable hourly aggregation."""
-    ev = table(spark, sf_dir, "events")
-    hc = (
-        ev.filter(F.col("event_type").isin("click", "purchase"))
-        .groupBy(
-            "event_type",
-            F.unix_timestamp(F.date_trunc("hour", "ts")).alias("h"),
+    hc = _hourly_counts(
+        table(spark, sf_dir, "events").filter(
+            F.col("event_type").isin("click", "purchase")
         )
-        .agg(F.count("*").alias("c"))
     )
     a = hc.filter(F.col("event_type") == "click").select(
         F.col("h").alias("ha"), F.col("c").alias("x")
@@ -2385,10 +2411,7 @@ def events_fano_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned double divisions; ACTIVE hours only (the zero-truncated
     convention, mirrored exactly in the oracle). One map-side-combinable
     hourly aggregation + a per-type roll-up of bounded size."""
-    ev = table(spark, sf_dir, "events")
-    hc = ev.groupBy(
-        "event_type", F.unix_timestamp(F.date_trunc("hour", "ts")).alias("h")
-    ).agg(F.count("*").alias("c"))
+    hc = _hourly_counts(table(spark, sf_dir, "events"))
     sums = hc.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.sum("c").alias("s1"),
@@ -2520,11 +2543,7 @@ def events_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-group window here can never concentrate data-scale rows on one
     task, unlike raw-event windows (see the two-phase rank family for
     those)."""
-    ev = table(spark, sf_dir, "events")
-    hc = ev.groupBy(
-        "event_type",
-        F.unix_timestamp(F.date_trunc("hour", "ts")).alias("h"),
-    ).agg(F.count("*").alias("c"))
+    hc = _hourly_counts(table(spark, sf_dir, "events"))
     tot = hc.groupBy("event_type").agg(
         F.count("*").alias("n"), F.sum("c").alias("total")
     )
@@ -2673,11 +2692,7 @@ def events_max_burst_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ALREADY-AGGREGATED hourly series (bounded per type-year), and
     the two recovery joins touch type-count-sized frames — nothing
     data-scale ever crosses one task."""
-    ev = table(spark, sf_dir, "events")
-    hc = ev.groupBy(
-        "event_type",
-        F.unix_timestamp(F.date_trunc("hour", "ts")).alias("h"),
-    ).agg(F.count("*").alias("c"))
+    hc = _hourly_counts(table(spark, sf_dir, "events"))
     tot = hc.groupBy("event_type").agg(
         F.count("*").alias("n"), F.sum("c").alias("total")
     )
@@ -2965,11 +2980,7 @@ def events_stl_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly sequence (documented: a missing hour shifts neighbors in,
     identically on both engines). Reference basis: SURVEY.md §2.5
     window family (absent in reference)."""
-    ev = table(spark, sf_dir, "events")
-    hc = ev.groupBy(
-        "event_type",
-        F.unix_timestamp(F.date_trunc("hour", "ts")).alias("h"),
-    ).agg(F.count("*").alias("c"))
+    hc = _hourly_counts(table(spark, sf_dir, "events"))
     w_ord = Window.partitionBy("event_type").orderBy("h")
     w_all = Window.partitionBy("event_type")
     seq = hc.select(
@@ -3080,11 +3091,7 @@ def events_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate is the only thing that grows, and it grows with TIME, not
     traffic. Reference basis: SURVEY.md §2.5 window family (absent in
     reference)."""
-    ev = table(spark, sf_dir, "events")
-    hc = ev.groupBy(
-        "event_type",
-        F.unix_timestamp(F.date_trunc("hour", "ts")).alias("h"),
-    ).agg(F.count("*").alias("c"))
+    hc = _hourly_counts(table(spark, sf_dir, "events"))
     w_c = Window.partitionBy("event_type").orderBy("c", "h")
     w_n = Window.partitionBy("event_type")
     med = (
@@ -3391,21 +3398,7 @@ def events_allan_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a per-type bounded window — nothing after the hourly aggregate
     is data-sized (the events_gapfill_hourly argument). Reference
     basis: SURVEY.md §2.4 stats family (absent in reference)."""
-    ev = table(spark, sf_dir, "events")
-    hc = ev.groupBy(
-        "event_type",
-        F.unix_timestamp(F.date_trunc("hour", "ts")).alias("h"),
-    ).agg(F.count("*").alias("c"))
-    b = hc.groupBy("event_type").agg(
-        F.min("h").alias("lo"), F.max("h").alias("hi")
-    )
-    spine = b.select(
-        "event_type",
-        F.explode(F.sequence("lo", "hi", F.lit(3600))).alias("h"),
-    )
-    f = spine.join(hc, ["event_type", "h"], "left").select(
-        "event_type", "h", F.coalesce(F.col("c"), F.lit(0)).alias("c")
-    )
+    f = _dense_hourly_counts(table(spark, sf_dir, "events"))
     w = Window.partitionBy("event_type").orderBy("h")
     d = f.select(
         "event_type", (F.col("c") - F.lag("c").over(w)).alias("dd")
@@ -3505,21 +3498,7 @@ def events_quartile_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
     final count — nothing data-sized past the first aggregate.
     Reference basis: SURVEY.md §2.5 window family (absent in
     reference)."""
-    ev = table(spark, sf_dir, "events")
-    hc = ev.groupBy(
-        "event_type",
-        F.unix_timestamp(F.date_trunc("hour", "ts")).alias("h"),
-    ).agg(F.count("*").alias("c"))
-    b = hc.groupBy("event_type").agg(
-        F.min("h").alias("lo"), F.max("h").alias("hi")
-    )
-    spine = b.select(
-        "event_type",
-        F.explode(F.sequence("lo", "hi", F.lit(3600))).alias("h"),
-    )
-    f = spine.join(hc, ["event_type", "h"], "left").select(
-        "event_type", "h", F.coalesce(F.col("c"), F.lit(0)).alias("c")
-    )
+    f = _dense_hourly_counts(table(spark, sf_dir, "events"))
     w_rank = Window.partitionBy("event_type").orderBy("c", "h")
     w_all = Window.partitionBy("event_type")
     r = f.select(
@@ -3660,21 +3639,7 @@ def events_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality, two bounded per-type windows (rank, lag), a per-type
     reduce — nothing data-sized past the first aggregate. Reference
     basis: SURVEY.md §2.4 stats family (absent in reference)."""
-    ev = table(spark, sf_dir, "events")
-    hc = ev.groupBy(
-        "event_type",
-        F.unix_timestamp(F.date_trunc("hour", "ts")).alias("h"),
-    ).agg(F.count("*").alias("c"))
-    b = hc.groupBy("event_type").agg(
-        F.min("h").alias("lo"), F.max("h").alias("hi")
-    )
-    spine = b.select(
-        "event_type",
-        F.explode(F.sequence("lo", "hi", F.lit(3600))).alias("h"),
-    )
-    f = spine.join(hc, ["event_type", "h"], "left").select(
-        "event_type", "h", F.coalesce(F.col("c"), F.lit(0)).alias("c")
-    )
+    f = _dense_hourly_counts(table(spark, sf_dir, "events"))
     w_rank = Window.partitionBy("event_type").orderBy("c", "h")
     w_all = Window.partitionBy("event_type")
     r = f.select(
@@ -3823,21 +3788,7 @@ def events_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality work, nothing data-sized past the first (type, hour)
     count; the per-type rank window runs over {B} rows. Reference
     basis: SURVEY.md §2.4 stats family (absent in reference)."""
-    ev = table(spark, sf_dir, "events")
-    hc = ev.groupBy(
-        "event_type",
-        F.unix_timestamp(F.date_trunc("hour", "ts")).alias("h"),
-    ).agg(F.count("*").alias("c"))
-    b = hc.groupBy("event_type").agg(
-        F.min("h").alias("lo"), F.max("h").alias("hi")
-    )
-    spine = b.select(
-        "event_type",
-        F.explode(F.sequence("lo", "hi", F.lit(3600))).alias("h"),
-    )
-    f = spine.join(hc, ["event_type", "h"], "left").select(
-        "event_type", "h", F.coalesce(F.col("c"), F.lit(0)).alias("c")
-    )
+    f = _dense_hourly_counts(table(spark, sf_dir, "events"))
     w_ord = Window.partitionBy("event_type").orderBy("h")
     w_all = Window.partitionBy("event_type")
     r = f.select(
@@ -4106,21 +4057,7 @@ def events_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     hour) count; the per-type rank window is bounded by the same
     span^2 (the runs-test precedent). Reference basis: SURVEY.md §2.5
     robust-statistics family (absent in reference)."""
-    ev = table(spark, sf_dir, "events")
-    hc = ev.groupBy(
-        "event_type",
-        F.unix_timestamp(F.date_trunc("hour", "ts")).alias("h"),
-    ).agg(F.count("*").alias("c"))
-    b = hc.groupBy("event_type").agg(
-        F.min("h").alias("lo"), F.max("h").alias("hi")
-    )
-    spine = b.select(
-        "event_type",
-        F.explode(F.sequence("lo", "hi", F.lit(3600))).alias("h"),
-    )
-    f = spine.join(hc, ["event_type", "h"], "left").select(
-        "event_type", "h", F.coalesce(F.col("c"), F.lit(0)).alias("c")
-    )
+    f = _dense_hourly_counts(table(spark, sf_dir, "events"))
     a = f.select("event_type", F.col("h").alias("ha"), F.col("c").alias("ca"))
     bb = f.select("event_type", F.col("h").alias("hb"), F.col("c").alias("cb"))
     pairs = (
@@ -4242,21 +4179,7 @@ def events_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded keys; everything downstream of the first aggregate is
     span-sized. Reference basis: SURVEY.md §2.4 stats family (absent
     in reference)."""
-    ev = table(spark, sf_dir, "events")
-    hc = ev.groupBy(
-        "event_type",
-        F.unix_timestamp(F.date_trunc("hour", "ts")).alias("h"),
-    ).agg(F.count("*").alias("c"))
-    b = hc.groupBy("event_type").agg(
-        F.min("h").alias("lo"), F.max("h").alias("hi")
-    )
-    spine = b.select(
-        "event_type",
-        F.explode(F.sequence("lo", "hi", F.lit(3600))).alias("h"),
-    )
-    f = spine.join(hc, ["event_type", "h"], "left").select(
-        "event_type", "h", F.coalesce(F.col("c"), F.lit(0)).alias("c")
-    )
+    f = _dense_hourly_counts(table(spark, sf_dir, "events"))
     x = f.select(F.col("event_type").alias("ta"), "h", F.col("c").alias("xa"))
     y = f.select(
         F.col("event_type").alias("tb"),
@@ -4580,21 +4503,7 @@ def events_granger_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     Theil-Sen argument); one reduce per ordered pair — nothing
     data-sized past the first aggregate. Reference basis: SURVEY.md
     §2.5 time-series family (absent in reference)."""
-    ev = table(spark, sf_dir, "events")
-    hc = ev.groupBy(
-        "event_type",
-        F.unix_timestamp(F.date_trunc("hour", "ts")).alias("h"),
-    ).agg(F.count("*").alias("c"))
-    b = hc.groupBy("event_type").agg(
-        F.min("h").alias("lo"), F.max("h").alias("hi")
-    )
-    spine = b.select(
-        "event_type",
-        F.explode(F.sequence("lo", "hi", F.lit(3600))).alias("h"),
-    )
-    f = spine.join(hc, ["event_type", "h"], "left").select(
-        "event_type", "h", F.coalesce(F.col("c"), F.lit(0)).alias("c")
-    )
+    f = _dense_hourly_counts(table(spark, sf_dir, "events"))
     x = f.select(F.col("event_type").alias("tx"), "h", F.col("c").alias("xv"))
     y = f.select(
         F.col("event_type").alias("ty"),
@@ -4779,21 +4688,7 @@ def events_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     lags over the wall-clock-sized spine; one reduce per type.
     Reference basis: SURVEY.md §2.4 stats family (absent in
     reference)."""
-    ev = table(spark, sf_dir, "events")
-    hc = ev.groupBy(
-        "event_type",
-        F.unix_timestamp(F.date_trunc("hour", "ts")).alias("h"),
-    ).agg(F.count("*").alias("c"))
-    b = hc.groupBy("event_type").agg(
-        F.min("h").alias("lo"), F.max("h").alias("hi")
-    )
-    spine = b.select(
-        "event_type",
-        F.explode(F.sequence("lo", "hi", F.lit(3600))).alias("h"),
-    )
-    f = spine.join(hc, ["event_type", "h"], "left").select(
-        "event_type", "h", F.coalesce(F.col("c"), F.lit(0)).alias("c")
-    )
+    f = _dense_hourly_counts(table(spark, sf_dir, "events"))
     tot = f.groupBy("event_type").agg(
         F.count("*").alias("n"), F.sum("c").alias("s1")
     )
@@ -5075,27 +4970,9 @@ def events_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the wall-clock-bounded spine, per-block window sums keyed (type,
     scale, block), two key-sized reduces. Reference basis: SURVEY.md
     §2.4/§2.5 stats-window family (absent in reference)."""
-    ev = table(spark, sf_dir, "events")
-    hc = ev.groupBy(
-        "event_type",
-        F.unix_timestamp(F.date_trunc("hour", "ts")).alias("h"),
-    ).agg(F.count("*").alias("c"))
-    b = hc.groupBy("event_type").agg(
-        F.min("h").alias("lo"), F.max("h").alias("hi")
-    )
-    spine = b.select(
-        "event_type",
-        F.explode(F.sequence("lo", "hi", F.lit(3600))).alias("h"),
-    )
     w_rn = Window.partitionBy("event_type").orderBy("h")
-    f = (
-        spine.join(hc, ["event_type", "h"], "left")
-        .select(
-            "event_type",
-            "h",
-            F.coalesce(F.col("c"), F.lit(0)).alias("c"),
-        )
-        .withColumn("rn", F.row_number().over(w_rn))
+    f = _dense_hourly_counts(table(spark, sf_dir, "events")).withColumn(
+        "rn", F.row_number().over(w_rn)
     )
     sc = f.select(
         "*",
@@ -5233,21 +5110,7 @@ def events_ordinal_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one (type, hour) agg, two window LEADs over the
     wall-clock-bounded spine, one key-sized count. Reference basis:
     SURVEY.md §2.5 window family (absent in reference)."""
-    ev = table(spark, sf_dir, "events")
-    hc = ev.groupBy(
-        "event_type",
-        F.unix_timestamp(F.date_trunc("hour", "ts")).alias("h"),
-    ).agg(F.count("*").alias("c"))
-    b = hc.groupBy("event_type").agg(
-        F.min("h").alias("lo"), F.max("h").alias("hi")
-    )
-    spine = b.select(
-        "event_type",
-        F.explode(F.sequence("lo", "hi", F.lit(3600))).alias("h"),
-    )
-    f = spine.join(hc, ["event_type", "h"], "left").select(
-        "event_type", "h", F.coalesce(F.col("c"), F.lit(0)).alias("c")
-    )
+    f = _dense_hourly_counts(table(spark, sf_dir, "events"))
     w = Window.partitionBy("event_type").orderBy("h")
     tri = f.select(
         "event_type",

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..operators.incremental import aggregate_state, finalize_state, merge_states
 from ..operators.profile import profile_table
-from .registry import register, table
+from .registry import _file_signature, register, table
 
 #: history/delta split point for the MV demo (events span 2024-01-01..30
 #: at every sf, so both sides are non-empty at every scale)
@@ -44,7 +44,9 @@ _MV_KEYS = ["user_id", "event_type"]
 )
 def events_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental MV maintenance: history (< cutoff) is aggregated once
-    into a mergeable state table and persisted to parquet; the delta
+    into a mergeable state table and persisted to parquet (one stage per
+    version of events.parquet, so a concurrent build never rewrites the
+    state a returned frame still reads); the delta
     (>= cutoff) is partial-aggregated and folded in by an associative
     state merge (operators/incremental.py). The oracle recomputes the
     whole aggregate from raw rows — proving the two-step refresh is
@@ -53,12 +55,12 @@ def events_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent."""
     ev = table(spark, sf_dir, "events")
     cutoff = F.lit(MV_CUTOFF).cast("timestamp")
-    state_path = "/tmp/rve_incr_mv_" + re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
 
     # refresh cycle 1: aggregate history once, persist the state
-    aggregate_state(ev.filter(F.col("ts") < cutoff), _MV_KEYS).write.mode(
-        "overwrite"
-    ).parquet(state_path)
+    def _write(tmp: str) -> None:
+        aggregate_state(ev.filter(F.col("ts") < cutoff), _MV_KEYS).write.parquet(tmp)
+
+    state_path = _fingerprint_stage(f"{sf_dir}/events.parquet", "incr_mv", _write)
 
     # refresh cycle 2: read stored state, fold in only the delta batch
     stored = spark.read.parquet(state_path)
@@ -210,7 +212,6 @@ def events_via_duckdb_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     transfer must lose/duplicate nothing. (ts is excluded: the connector
     demo sticks to bigint/varchar/double columns.)"""
     import os
-    import re as _re
 
     import duckdb
 
@@ -218,24 +219,25 @@ def events_via_duckdb_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .registry import ensure_session_confs
 
     ensure_session_confs(spark)
-    tag = _re.sub(r"[^A-Za-z0-9]+", "_", sf_dir)
-    db = f"/tmp/rve_duckdb_src_{tag}.duckdb"
-    if not os.path.exists(db):
-        stage = db + ".build"
-        if os.path.exists(stage):
-            os.remove(stage)
-        con = duckdb.connect(stage)
+
+    def _write(tmp: str) -> None:
+        os.makedirs(tmp)
+        con = duckdb.connect(f"{tmp}/events.duckdb")
         con.execute(
             "CREATE TABLE events AS "
             "SELECT event_id, user_id, event_type, value "
             f"FROM '{sf_dir}/events.parquet'"
         )
         con.close()
-        os.replace(stage, db)
+        # _fingerprint_stage's publish gate expects a top-level _SUCCESS
+        with open(f"{tmp}/_SUCCESS", "w"):
+            pass
+
+    stage = _fingerprint_stage(f"{sf_dir}/events.parquet", "duckdb", _write)
     register_duckdb_source(spark)
     df = (
         spark.read.format("duckdb")
-        .option("path", db)
+        .option("path", f"{stage}/events.duckdb")
         .option("table", "events")
         .option("partitionColumn", "user_id")
         .option("numPartitions", "8")
@@ -297,7 +299,7 @@ def events_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _fingerprint_stage(src: str, kind: str, write) -> str:
     """Stage a derived copy of `src` under /tmp, keyed by the source's
-    (mtime, size) fingerprint, with atomic publication.
+    file signature (`registry._file_signature`), with atomic publication.
 
     - fingerprint key: a regenerated source file invalidates the stage
       (otherwise the query would aggregate stale data while the oracle
@@ -307,21 +309,24 @@ def _fingerprint_stage(src: str, kind: str, write) -> str:
       never observes a partial stage, and losing the rename race just
       means the winner's complete stage is used;
     - superseded fingerprints of the same source are deleted (never the
-      live target), so regenerated inputs don't leak stage dirs.
+      live target or a concurrent writer's temp dir for it), so
+      regenerated inputs don't leak stage dirs.
     """
     import glob
+    import hashlib
     import os
-    import re as _re
     import shutil
     import uuid
 
-    st = os.stat(src)
-    tag = _re.sub(r"[^A-Za-z0-9]+", "_", src)
+    sig = _file_signature(src)
+    if sig is None:
+        raise FileNotFoundError(src)
+    tag = re.sub(r"[^A-Za-z0-9]+", "_", src)
     prefix = f"/tmp/rve_{kind}_src_{tag}_"
-    stage = f"{prefix}{st.st_mtime_ns}_{st.st_size}"
+    stage = prefix + hashlib.sha1(repr(sig).encode()).hexdigest()[:16]
     if not os.path.exists(os.path.join(stage, "_SUCCESS")):
         for old in glob.glob(f"{prefix}*"):
-            if old != stage:
+            if not old.startswith(stage):  # keep in-flight temps of this stage
                 shutil.rmtree(old, ignore_errors=True)
         tmp = f"{stage}.tmp-{uuid.uuid4().hex}"
         write(tmp)

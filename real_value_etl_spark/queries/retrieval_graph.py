@@ -196,7 +196,8 @@ def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage's fan-out bounded over the measured decades — see
     KNN_COARSE_MOD / KNN_SUPER_SELECT), per-cluster pair join,
     two-phase-free per-source top-k (the window runs inside a cluster's
-    block). Shared by the kNN-graph and label-propagation queries."""
+    block). Shared by the kNN-graph and label-propagation queries, and by
+    `_mutual_edges`, the edge set of the mutual-kNN graph queries."""
     emb = table(spark, sf_dir, "embeddings")
     cents = emb.filter(F.col("vec_id") % IVF_CENTROID_MOD == 0)
     coarse = emb.filter(F.col("vec_id") % KNN_COARSE_MOD == 0)
@@ -242,6 +243,24 @@ def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= KNN_GRAPH_K)
+    )
+
+
+def _mutual_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The undirected mutual-kNN graph as `(a, b)` with a < b: the
+    `_knn_edges` pairs whose reverse is also a kNN edge (both endpoints in
+    each other's top-k), one row per pair. A left-semi self join on
+    (src=dst, dst=src); no edge weight is carried."""
+    edges = _knn_edges(spark, sf_dir).select("src", "dst")
+    rev = edges.select(F.col("src").alias("m_src"), F.col("dst").alias("m_dst"))
+    return (
+        edges.join(
+            rev,
+            (F.col("m_src") == F.col("dst")) & (F.col("m_dst") == F.col("src")),
+            "left_semi",
+        )
+        .filter(F.col("src") < F.col("dst"))
+        .select(F.col("src").alias("a"), F.col("dst").alias("b"))
     )
 
 
@@ -1020,17 +1039,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     higher-degree nodes); id-orientation here keeps the oracle replay
     trivial while the join shape is identical. Clustering coefficient =
     3·triangles / wedges with wedges = Σ C(deg, 2)."""
-    edges = _knn_edges(spark, sf_dir).select("src", "dst")
-    rev = edges.select(F.col("src").alias("m_src"), F.col("dst").alias("m_dst"))
-    und = (
-        edges.join(
-            rev,
-            (F.col("m_src") == F.col("dst")) & (F.col("m_dst") == F.col("src")),
-            "left_semi",
-        )
-        .filter(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    )
+    und = _mutual_edges(spark, sf_dir)
     deg = (
         und.select(F.col("a").alias("node"))
         .unionByName(und.select(F.col("b").alias("node")))
@@ -1178,21 +1187,7 @@ def graph_k_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
     three times, so unbroken lineage would grow the plan ~3^rounds (the
     k-core / HITS lesson). Reference basis: SURVEY.md §2.12 graph
     family (absent in reference)."""
-    edges = _knn_edges(spark, sf_dir).select("src", "dst")
-    rev = edges.select(
-        F.col("src").alias("m_src"), F.col("dst").alias("m_dst")
-    )
-    und = (
-        edges.join(
-            rev,
-            (F.col("m_src") == F.col("dst"))
-            & (F.col("m_dst") == F.col("src")),
-            "left_semi",
-        )
-        .filter(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .localCheckpoint(eager=True)
-    )
+    und = _mutual_edges(spark, sf_dir).localCheckpoint(eager=True)
     for _ in range(KTRUSS_ROUNDS):
         sup = _edge_support(und)
         und = und.join(
@@ -1549,21 +1544,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set; the >= {m}-common-neighbor floor prunes map-side
     combined counts before the joins. Reference basis: SURVEY.md §2.12
     graph family (absent in reference)."""
-    edges = _knn_edges(spark, sf_dir).select("src", "dst")
-    rev = edges.select(
-        F.col("src").alias("m_src"), F.col("dst").alias("m_dst")
-    )
-    und = (
-        edges.join(
-            rev,
-            (F.col("m_src") == F.col("dst"))
-            & (F.col("m_dst") == F.col("src")),
-            "left_semi",
-        )
-        .filter(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .localCheckpoint(eager=True)
-    )
+    und = _mutual_edges(spark, sf_dir).localCheckpoint(eager=True)
     nb = und.select(F.col("a").alias("x"), F.col("b").alias("n")).unionAll(
         und.select(F.col("b").alias("x"), F.col("a").alias("n"))
     )
@@ -1664,21 +1645,7 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     a map-side-combinable per-node count joined LEFT onto the degree
     table so triangle-free nodes keep coefficient 0. Reference basis:
     SURVEY.md §2.12 graph family (absent in reference)."""
-    edges = _knn_edges(spark, sf_dir).select("src", "dst")
-    rev = edges.select(
-        F.col("src").alias("m_src"), F.col("dst").alias("m_dst")
-    )
-    und = (
-        edges.join(
-            rev,
-            (F.col("m_src") == F.col("dst"))
-            & (F.col("m_dst") == F.col("src")),
-            "left_semi",
-        )
-        .filter(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .localCheckpoint(eager=True)
-    )
+    und = _mutual_edges(spark, sf_dir).localCheckpoint(eager=True)
     tri = _triangles(und)
     tn = (
         tri.select(F.col("a").alias("node"))
@@ -1775,21 +1742,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     a communities-sized rollup — the scalar m crosses in as a 1-row
     broadcast. Reference basis: SURVEY.md §2.12 graph family (absent
     in reference)."""
-    edges = _knn_edges(spark, sf_dir).select("src", "dst")
-    rev = edges.select(
-        F.col("src").alias("m_src"), F.col("dst").alias("m_dst")
-    )
-    und = (
-        edges.join(
-            rev,
-            (F.col("m_src") == F.col("dst"))
-            & (F.col("m_dst") == F.col("src")),
-            "left_semi",
-        )
-        .filter(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .localCheckpoint(eager=True)
-    )
+    und = _mutual_edges(spark, sf_dir).localCheckpoint(eager=True)
     lab = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.coalesce(F.col("label").cast("long"), F.lit(-1)).alias("lab"),
@@ -1900,21 +1853,7 @@ def graph_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor id with fan-out bounded by the kNN degree cap, and the
     >= {m} floor prunes before the anti-join. Reference basis:
     SURVEY.md §2.12 graph family (absent in reference)."""
-    edges = _knn_edges(spark, sf_dir).select("src", "dst")
-    rev = edges.select(
-        F.col("src").alias("m_src"), F.col("dst").alias("m_dst")
-    )
-    und = (
-        edges.join(
-            rev,
-            (F.col("m_src") == F.col("dst"))
-            & (F.col("m_dst") == F.col("src")),
-            "left_semi",
-        )
-        .filter(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .localCheckpoint(eager=True)
-    )
+    und = _mutual_edges(spark, sf_dir).localCheckpoint(eager=True)
     nb = und.select(F.col("a").alias("x"), F.col("b").alias("n")).unionAll(
         und.select(F.col("b").alias("x"), F.col("a").alias("n"))
     )
@@ -2131,21 +2070,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins attach endpoint degrees edge-wise; then a single
     map-side-combinable 1-row moment reduce. Reference basis:
     SURVEY.md §2.12 graph family (absent in reference)."""
-    edges = _knn_edges(spark, sf_dir).select("src", "dst")
-    rev = edges.select(
-        F.col("src").alias("m_src"), F.col("dst").alias("m_dst")
-    )
-    und = (
-        edges.join(
-            rev,
-            (F.col("m_src") == F.col("dst"))
-            & (F.col("m_dst") == F.col("src")),
-            "left_semi",
-        )
-        .filter(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .localCheckpoint(eager=True)
-    )
+    und = _mutual_edges(spark, sf_dir).localCheckpoint(eager=True)
     sym = und.select(F.col("a").alias("x"), F.col("b").alias("y")).unionAll(
         und.select(F.col("b").alias("x"), F.col("a").alias("y"))
     )
@@ -2249,21 +2174,7 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     rejected it); induced-edge membership tests ride the already-
     joined endpoint degrees; final frame is |K| rows. Reference
     basis: SURVEY.md §2.12 graph family (absent in reference)."""
-    edges = _knn_edges(spark, sf_dir).select("src", "dst")
-    rev = edges.select(
-        F.col("src").alias("m_src"), F.col("dst").alias("m_dst")
-    )
-    und = (
-        edges.join(
-            rev,
-            (F.col("m_src") == F.col("dst"))
-            & (F.col("m_dst") == F.col("src")),
-            "left_semi",
-        )
-        .filter(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .localCheckpoint(eager=True)
-    )
+    und = _mutual_edges(spark, sf_dir).localCheckpoint(eager=True)
     deg = (
         und.select(F.col("a").alias("x"))
         .unionAll(und.select(F.col("b").alias("x")))
@@ -2366,17 +2277,7 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a frame bounded by the edge list (never wider), the Pregel
     matvec shape with integer messages. Reference basis: SURVEY.md §2
     graph family (absent in reference)."""
-    edges = _knn_edges(spark, sf_dir).select("src", "dst")
-    rev = edges.select(F.col("src").alias("m_src"), F.col("dst").alias("m_dst"))
-    und = (
-        edges.join(
-            rev,
-            (F.col("m_src") == F.col("dst")) & (F.col("m_dst") == F.col("src")),
-            "left_semi",
-        )
-        .filter(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    )
+    und = _mutual_edges(spark, sf_dir)
     sym = und.select(F.col("a").alias("x"), F.col("b").alias("y")).unionByName(
         und.select(F.col("b").alias("x"), F.col("a").alias("y"))
     ).persist()
@@ -2499,17 +2400,7 @@ def graph_double_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts; the two tiny argmax reduces are TakeOrdered, never a
     global sort. Reference basis: SURVEY.md §2 graph family (absent
     in reference)."""
-    edges = _knn_edges(spark, sf_dir).select("src", "dst")
-    rev = edges.select(F.col("src").alias("m_src"), F.col("dst").alias("m_dst"))
-    und = (
-        edges.join(
-            rev,
-            (F.col("m_src") == F.col("dst")) & (F.col("m_dst") == F.col("src")),
-            "left_semi",
-        )
-        .filter(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    )
+    und = _mutual_edges(spark, sf_dir)
     sym = und.select(F.col("a").alias("x"), F.col("b").alias("y")).unionByName(
         und.select(F.col("b").alias("x"), F.col("a").alias("y"))
     ).persist()
@@ -2745,17 +2636,7 @@ def graph_edge_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (deg <= k per node, so <= k^2 wedges per center node); the edge
     join is keyed (a, b) both sides. Reference basis: SURVEY.md §2
     graph family (absent in reference)."""
-    edges = _knn_edges(spark, sf_dir).select("src", "dst")
-    rev = edges.select(F.col("src").alias("m_src"), F.col("dst").alias("m_dst"))
-    und = (
-        edges.join(
-            rev,
-            (F.col("m_src") == F.col("dst")) & (F.col("m_dst") == F.col("src")),
-            "left_semi",
-        )
-        .filter(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    )
+    und = _mutual_edges(spark, sf_dir)
     sym = und.select(F.col("a").alias("x"), F.col("b").alias("y")).unionByName(
         und.select(F.col("b").alias("x"), F.col("a").alias("y"))
     ).persist()

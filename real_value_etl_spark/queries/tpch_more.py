@@ -11,10 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import register, table
-
-
-def _dsum_expr(col, scale: int = 6):
-    return F.sum(col.cast(f"decimal(28,{scale})")).cast("double")
+from .relational import _dsum_expr
 
 
 # ---------------------------------------------------------------------------

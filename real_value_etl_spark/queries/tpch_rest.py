@@ -23,10 +23,6 @@ from pyspark.sql import functions as F
 from .registry import register, table
 
 
-def _dsum(col, scale: int = 6):
-    return F.sum(col.cast(f"decimal(28,{scale})")).cast("double")
-
-
 # ---------------------------------------------------------------------------
 # Q8 — market share of one supplier nation within a region, by order year
 # ---------------------------------------------------------------------------

@@ -27,7 +27,7 @@ from typing import Iterator, Tuple
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, GroupedData, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -86,6 +86,40 @@ def _drain(spark: SparkSession, result: DataFrame, name: str, mode: str) -> Data
     )
     query.awaitTermination()
     return spark.table(name)
+
+
+def _drain_stateful(
+    spark: SparkSession,
+    grouped: GroupedData,
+    kernel,
+    out_schema: StructType,
+    state_schema: StructType,
+    name: str,
+) -> DataFrame:
+    """Run `kernel` over `grouped` with applyInPandasWithState (update
+    mode, no timeout) and drain it into memory table `name`. The result
+    holds one row per key for every micro-batch that updated that key."""
+    out = grouped.applyInPandasWithState(
+        kernel,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    return _drain(spark, out, name, "update")
+
+
+def _last_emission(drained: DataFrame, keys: list[str], *order: Column) -> DataFrame:
+    """The final emission per `keys` of an update-mode drain: the first row
+    under `order`, which must sort a key's last state first. A source split
+    into several micro-batches emits one row per (key, batch); keeping the
+    last one makes the result independent of how the source was split."""
+    w = Window.partitionBy(*keys).orderBy(*order)
+    return (
+        drained.withColumn("__r", F.row_number().over(w))
+        .filter(F.col("__r") == 1)
+        .drop("__r")
+    )
 
 
 def stream_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -263,25 +297,13 @@ def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's DECIMAL sum cast to double bit-for-bit.
     """
     ev = _events_stream(spark, sf_dir).withWatermark("ts", WATERMARK)
-    totals = ev.select("user_id", "value").groupBy("user_id").applyInPandasWithState(
-        _user_totals,
-        outputStructType=_OUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    grouped = ev.select("user_id", "value").groupBy("user_id")
+    drained = _drain_stateful(
+        spark, grouped, _user_totals, _OUT_SCHEMA, _STATE_SCHEMA,
+        "mem_stream_user_totals",
     )
-    drained = _drain(spark, totals, "mem_stream_user_totals", "update")
-    # A multi-file source would emit one running row per (user, batch); keep
-    # the final (max n_events) row per user so semantics are batch-equal
-    # regardless of how the source splits batches.
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        drained.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") == 1)
-        .drop("__r")
-    )
+    # n_events only grows, so a user's last emission has the max
+    return _last_emission(drained, ["user_id"], F.desc("n_events"))
 
 
 def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -497,8 +519,6 @@ def cdc_apply_sink(state_path: str):
     """
     import os
 
-    from pyspark.sql import Window
-
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         _recover_state(state_path)
         if batch_id <= _last_applied_batch(state_path):
@@ -621,26 +641,12 @@ def stream_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     user, bounded by the user population). The final emission per user
     must equal the batch fold bit-for-bit."""
     ev = _events_stream(spark, sf_dir).withWatermark("ts", WATERMARK)
-    out = (
-        ev.select("user_id", "ts", "event_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _holt_state,
-            outputStructType=_HOLT_OUT_SCHEMA,
-            stateStructType=_HOLT_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    grouped = ev.select("user_id", "ts", "event_id", "value").groupBy("user_id")
+    drained = _drain_stateful(
+        spark, grouped, _holt_state, _HOLT_OUT_SCHEMA, _HOLT_STATE_SCHEMA,
+        "mem_stream_holt",
     )
-    drained = _drain(spark, out, "mem_stream_holt", "update")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        drained.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") == 1)
-        .drop("__r")
-    )
+    return _last_emission(drained, ["user_id"], F.desc("n_events"))
 
 
 _KMV_K = 64
@@ -702,27 +708,12 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction, so the final drained sketch is hash-checkable against
     a batch oracle (the streaming twin of text_kmv_distinct)."""
     ev = _events_stream(spark, sf_dir).withWatermark("ts", WATERMARK)
-    out = (
-        ev.select("event_type", "user_id")
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _kmv_state,
-            outputStructType=_KMV_OUT_SCHEMA,
-            stateStructType=_KMV_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    grouped = ev.select("event_type", "user_id").groupBy("event_type")
+    drained = _drain_stateful(
+        spark, grouped, _kmv_state, _KMV_OUT_SCHEMA, _KMV_STATE_SCHEMA, "mem_stream_kmv"
     )
-    drained = _drain(spark, out, "mem_stream_kmv", "update")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("event_type").orderBy(
-        F.desc("n_kept"), F.asc("kth_min")
-    )
-    return (
-        drained.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") == 1)
-        .drop("__r")
+    return _last_emission(
+        drained, ["event_type"], F.desc("n_kept"), F.asc("kth_min")
     )
 
 
@@ -807,31 +798,16 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained sketch (including the serialized register file and both
     estimates) hash-checkable against the batch SQL replay."""
     ev = _events_stream(spark, sf_dir).withWatermark("ts", WATERMARK)
-    out = (
-        ev.select("event_type", "user_id")
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _hll_state,
-            outputStructType=_HLL_OUT_SCHEMA,
-            stateStructType=_HLL_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    grouped = ev.select("event_type", "user_id").groupBy("event_type")
+    drained = _drain_stateful(
+        spark, grouped, _hll_state, _HLL_OUT_SCHEMA, _HLL_STATE_SCHEMA, "mem_stream_hll"
     )
-    drained = _drain(spark, out, "mem_stream_hll", "update")
-    from pyspark.sql import Window
-
     # est_distinct grows monotonically as registers fill (every update
     # strictly shrinks the integer denominator), so the final state per
     # key is the max-estimate row; registers string is a deterministic
     # tiebreak for the (astronomically unlikely) equal-estimate case.
-    w = Window.partitionBy("event_type").orderBy(
-        F.desc("est_distinct"), F.desc("registers")
-    )
-    return (
-        drained.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") == 1)
-        .drop("__r")
+    return _last_emission(
+        drained, ["event_type"], F.desc("est_distinct"), F.desc("registers")
     )
 
 
@@ -935,30 +911,20 @@ def stream_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (applyInPandasWithState): constant (k+1)-triple state per type, the
     streaming twin of q_priority_sample_sum."""
     ev = _events_stream(spark, sf_dir).withWatermark("ts", WATERMARK)
-    out = (
-        ev.select("event_type", "event_id", "value")
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _prio_state,
-            outputStructType=_PRIO_OUT_SCHEMA,
-            stateStructType=_PRIO_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    grouped = ev.select("event_type", "event_id", "value").groupBy("event_type")
+    drained = _drain_stateful(
+        spark, grouped, _prio_state, _PRIO_OUT_SCHEMA, _PRIO_STATE_SCHEMA,
+        "mem_stream_prio",
     )
-    drained = _drain(spark, out, "mem_stream_prio", "update")
-    from pyspark.sql import Window
-
     # tau rises strictly whenever the kept set changes (the new minimum
     # beats the evicted one); before the sample fills, k_sample grows.
     # (k_sample, tau) is therefore a monotone discriminator of updates.
-    w = Window.partitionBy("event_type").orderBy(
-        F.desc("k_sample"), F.desc("tau"), F.desc("sample_ids")
-    )
-    return (
-        drained.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") == 1)
-        .drop("__r")
+    return _last_emission(
+        drained,
+        ["event_type"],
+        F.desc("k_sample"),
+        F.desc("tau"),
+        F.desc("sample_ids"),
     )
 
 
@@ -1051,14 +1017,10 @@ def stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("db")
     ).select(F.col("db.depth").alias("depth"), F.col("db.bucket").alias("bucket"))
-    out = hashed.groupBy("depth").applyInPandasWithState(
-        _scm_state,
-        outputStructType=_SCM_OUT_SCHEMA,
-        stateStructType=_SCM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    grouped = hashed.groupBy("depth")
+    drained = _drain_stateful(
+        spark, grouped, _scm_state, _SCM_OUT_SCHEMA, _SCM_STATE_SCHEMA, "mem_stream_cms"
     )
-    drained = _drain(spark, out, "mem_stream_cms", "update")
     sketch = drained.groupBy("depth", "bucket").agg(F.max("cnt").alias("cnt"))
 
     from ..queries.registry import table as _table
@@ -1193,19 +1155,13 @@ def stream_hdr_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _events_stream(spark, sf_dir).withWatermark("ts", WATERMARK)
     cells = cell_of(ev.select("event_type", cents.alias("c")))
-    out = cells.groupBy("event_type").applyInPandasWithState(
-        _shq_state,
-        outputStructType=_SHQ_OUT_SCHEMA,
-        stateStructType=_SHQ_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    grouped = cells.groupBy("event_type")
+    drained = _drain_stateful(
+        spark, grouped, _shq_state, _SHQ_OUT_SCHEMA, _SHQ_STATE_SCHEMA, "mem_stream_shq"
     )
-    drained = _drain(spark, out, "mem_stream_shq", "update")
     hist = drained.groupBy("event_type", "cell").agg(
         F.max("cnt").alias("cnt")
     )
-
-    from pyspark.sql import Window
 
     w_cum = (
         Window.partitionBy("event_type")
@@ -1369,14 +1325,10 @@ def stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             "shiftleft(CAST(1 AS BIGINT), CAST(user_id % 63 AS INT))"
         ).alias("bits"),
     )
-    out = cells.groupBy("event_type").applyInPandasWithState(
-        _sbd_state,
-        outputStructType=_SBD_OUT_SCHEMA,
-        stateStructType=_SBD_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    grouped = cells.groupBy("event_type")
+    drained = _drain_stateful(
+        spark, grouped, _sbd_state, _SBD_OUT_SCHEMA, _SBD_STATE_SCHEMA, "mem_stream_sbd"
     )
-    drained = _drain(spark, out, "mem_stream_sbd", "update")
     bm = drained.groupBy("event_type", "block").agg(F.max("w").alias("w"))
     stream_n = bm.groupBy("event_type").agg(
         F.sum(F.expr("CAST(bit_count(w) AS BIGINT)")).alias(
@@ -1480,25 +1432,14 @@ def stream_minmax_witness(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot move the answer. The drained final state must equal the
     batch MIN/MAX + witness recovery bit-for-bit."""
     ev = _events_stream(spark, sf_dir).withWatermark("ts", WATERMARK)
-    out = (
-        ev.select("event_type", "event_id", "value")
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _ext_state,
-            outputStructType=_EXT_OUT_SCHEMA,
-            stateStructType=_EXT_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    grouped = ev.select("event_type", "event_id", "value").groupBy("event_type")
+    drained = _drain_stateful(
+        spark, grouped, _ext_state, _EXT_OUT_SCHEMA, _EXT_STATE_SCHEMA,
+        "mem_stream_extrema",
     )
-    drained = _drain(spark, out, "mem_stream_extrema", "update")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("event_type").orderBy(F.desc("n_batches"))
     return (
-        drained.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") == 1)
-        .drop("__r", "n_batches")
+        _last_emission(drained, ["event_type"], F.desc("n_batches"))
+        .drop("n_batches")
         .select(
             "event_type",
             "min_value",
@@ -1588,21 +1529,14 @@ def stream_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = ev.filter(F.col("value").isNotNull()).select(
         "event_type", F.floor(F.col("value") * 100).cast("long").alias("cents")
     )
-    out = cents.groupBy("event_type").applyInPandasWithState(
-        _mom_state,
-        outputStructType=_MOM_OUT_SCHEMA,
-        stateStructType=_MOM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    grouped = cents.groupBy("event_type")
+    drained = _drain_stateful(
+        spark, grouped, _mom_state, _MOM_OUT_SCHEMA, _MOM_STATE_SCHEMA,
+        "mem_stream_moments",
     )
-    drained = _drain(spark, out, "mem_stream_moments", "update")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("event_type").orderBy(F.desc("n_batches"))
     last = (
-        drained.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") == 1)
-        .drop("__r", "n_batches")
+        _last_emission(drained, ["event_type"], F.desc("n_batches"))
+        .drop("n_batches")
     )
     nd = F.col("n").cast("double")
     s1d = F.col("s1").cast("double")
@@ -1733,23 +1667,14 @@ def stream_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rs.r").alias("r"),
         F.col("rs.sgn").alias("sgn"),
     )
-    out = fan.groupBy("event_type").applyInPandasWithState(
-        _ams_state,
-        outputStructType=_AMS_OUT_SCHEMA,
-        stateStructType=_AMS_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    drained = _drain(spark, out, "mem_stream_ams_f2", "update")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("event_type", "r").orderBy(
-        F.desc("n_batches")
+    grouped = fan.groupBy("event_type")
+    drained = _drain_stateful(
+        spark, grouped, _ams_state, _AMS_OUT_SCHEMA, _AMS_STATE_SCHEMA,
+        "mem_stream_ams_f2",
     )
     last = (
-        drained.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "n_batches")
+        _last_emission(drained, ["event_type", "r"], F.desc("n_batches"))
+        .drop("n_batches")
     )
     sk = last.groupBy("event_type").agg(
         F.count("*").alias("rows_r"),
@@ -1865,25 +1790,13 @@ def stream_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the schema all-long/string) and is surfaced as a real boolean
     column."""
     ev = _events_stream(spark, sf_dir).withWatermark("ts", WATERMARK)
-    out = (
-        ev.select("user_id", "ts", "event_id", "event_type")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _pattern_state,
-            outputStructType=_PATTERN_OUT_SCHEMA,
-            stateStructType=_PATTERN_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    grouped = ev.select("user_id", "ts", "event_id", "event_type").groupBy("user_id")
+    drained = _drain_stateful(
+        spark, grouped, _pattern_state, _PATTERN_OUT_SCHEMA, _PATTERN_STATE_SCHEMA,
+        "mem_stream_pattern",
     )
-    drained = _drain(spark, out, "mem_stream_pattern", "update")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
-        drained.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") == 1)
-        .drop("__r")
+        _last_emission(drained, ["user_id"], F.desc("n_events"))
         .select(
             "user_id",
             "n_events",

@@ -1,8 +1,8 @@
 """The shared byte-field expressions (functions/binary.py) against Python:
 int.to_bytes / int.from_bytes for the encoders and readers, zlib.crc32 and
-operators.multimodal.crc32c for the CRC fold. One in-memory frame, one
-collect; the inputs are columns, not literals, so nothing is constant-folded
-away before the generated code runs."""
+operators.multimodal.crc32c for the CRC fold, zero-length regions included.
+One in-memory frame, one collect; the inputs are columns, not literals, so
+nothing is constant-folded away before the generated code runs."""
 
 from __future__ import annotations
 
@@ -27,11 +27,19 @@ PAD = 3  # bytes before each field when it is read at a Column position
 def test_binary_helpers_match_python(spark):
     row = {f"v{n}": v for n, v in VALUES.items()}
     row.update(
-        over=OVER, data=bytearray(DATA), hexdata=DATA.hex(), pos=PAD + 1, little=True
+        over=OVER,
+        data=bytearray(DATA),
+        hexdata=DATA.hex(),
+        pos=PAD + 1,
+        little=True,
+        empty=bytearray(b""),
+        emptyhex="",
+        abc=bytearray(b"abc"),
     )
     schema = ", ".join(
         [f"v{n} long" for n in VALUES]
         + ["over long", "data binary", "hexdata string", "pos int", "little boolean"]
+        + ["empty binary", "emptyhex string", "abc binary"]
     )
     df = spark.createDataFrame([tuple(row.values())], schema)
     pad = F.unhex(F.lit("00" * PAD))
@@ -65,6 +73,9 @@ def test_binary_helpers_match_python(spark):
         B.crc(h, CRC32C_TABLE, pos, F.lit(9).cast("long"), hex_string=True).alias(
             "crc32c_slice"
         ),
+        B.crc(F.col("empty"), CRC32_TABLE).alias("crc32_empty"),
+        B.crc(F.col("emptyhex"), CRC32_TABLE, hex_string=True).alias("crc32_emptyhex"),
+        B.crc(F.col("abc"), CRC32_TABLE, start=2, length=0).alias("crc32_len0"),
     ]
     got = df.select(*cols).collect()[0].asDict()
 
@@ -84,3 +95,6 @@ def test_binary_helpers_match_python(spark):
     assert got["crc32_slice"] == zlib.crc32(sl)
     assert got["crc32c"] == crc32c(DATA)
     assert got["crc32c_slice"] == crc32c(sl)
+    # a zero-length region folds no byte
+    assert got["crc32_empty"] == got["crc32_emptyhex"] == zlib.crc32(b"") == 0
+    assert got["crc32_len0"] == 0

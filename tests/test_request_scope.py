@@ -8,6 +8,10 @@ the current request's PERSIST_SCOPE and released when that request ends:
   instead of being answered from Spark's CacheManager;
 - one request's release leaves a concurrent request's frames alone;
 - a static guard keeps every `.persist()` in the engine owned.
+
+The derived copies some queries stage on disk follow the same rule: a
+rewritten input gets a new stage, and building a query again leaves the
+stage an earlier frame reads in place.
 """
 
 from __future__ import annotations
@@ -24,6 +28,8 @@ from real_value_etl_spark.api import handle_run_query
 from real_value_etl_spark.operators import scan
 from real_value_etl_spark.queries.registry import REGISTRY, QuerySpec
 
+from .oracle_compare import compare, duck_connection
+
 ENGINE = Path(__file__).resolve().parents[1] / "real_value_etl_spark"
 
 
@@ -37,6 +43,27 @@ def _rows(spark, name: str, sf_dir: str) -> list[str]:
     return sorted(map(repr, out["rows"]))
 
 
+def _copy_tables(sf_dir: str, tmp_path) -> Path:
+    data = tmp_path / "sf"
+    data.mkdir()
+    for f in os.listdir(sf_dir):
+        shutil.copyfile(os.path.join(sf_dir, f), data / f)
+    return data
+
+
+def _rewrite(data: Path, table: str, keep: str) -> None:
+    """Replace `table`'s parquet file in `data` with its rows where `keep`."""
+    import duckdb
+
+    path, tmp = data / f"{table}.parquet", data / f"{table}.new.parquet"
+    con = duckdb.connect()
+    con.execute(
+        f"COPY (SELECT * FROM '{path}' WHERE {keep}) TO '{tmp}' (FORMAT parquet)"
+    )
+    con.close()
+    os.replace(tmp, path)
+
+
 # Queries whose returned plan reads a frame they persist themselves, one
 # per rewritten table. The guard test below covers every other such site.
 _SELF_PERSISTING = ("sim_kmeans_train", "text_tfidf_cosine_pairs")
@@ -46,29 +73,46 @@ def test_rewritten_inputs_are_read_again(spark, sf_dir, tmp_path):
     """Rewrite embeddings/documents in place between requests: the second
     request must return what a clean CacheManager returns, not the rows
     of a frame the first request left persisted."""
-    import duckdb
-
-    data = tmp_path / "sf"
-    data.mkdir()
-    for f in os.listdir(sf_dir):
-        shutil.copyfile(os.path.join(sf_dir, f), data / f)
+    data = _copy_tables(sf_dir, tmp_path)
     for name in _SELF_PERSISTING:
         _rows(spark, name, str(data))
 
-    con = duckdb.connect()
-    for table, key in (("embeddings", "vec_id"), ("documents", "doc_id")):
-        path, tmp = data / f"{table}.parquet", data / f"{table}.new.parquet"
-        con.execute(
-            f"COPY (SELECT * FROM '{path}' WHERE {key} % 3 <> 1) "
-            f"TO '{tmp}' (FORMAT parquet)"
-        )
-        os.replace(tmp, path)
-    con.close()
+    _rewrite(data, "embeddings", "vec_id % 3 <> 1")
+    _rewrite(data, "documents", "doc_id % 3 <> 1")
 
     served = {n: _rows(spark, n, str(data)) for n in _SELF_PERSISTING}
     spark.catalog.clearCache()
     fresh = {n: _rows(spark, n, str(data)) for n in _SELF_PERSISTING}
     assert [n for n in _SELF_PERSISTING if served[n] != fresh[n]] == []
+
+
+def test_staged_duckdb_copy_follows_rewritten_events(spark, sf_dir, tmp_path):
+    """events_via_duckdb_source reads events from a DuckDB file it stages
+    from events.parquet. After the parquet file is rewritten, the query must
+    answer what its oracle answers on the new file. (A clearCache() rerun
+    would read the same stale stage, so the oracle is the reference.)"""
+    spec = REGISTRY["events_via_duckdb_source"]
+    data = _copy_tables(sf_dir, tmp_path)
+    _rows(spark, spec.name, str(data))
+    _rewrite(data, "events", "event_id % 2 = 0")
+
+    con = duck_connection(str(data))
+    try:
+        ok, msg = compare(spec.fn(spark, str(data)), con, spec.oracle)
+    finally:
+        con.close()
+    assert ok, msg
+
+
+def test_incremental_mv_frame_survives_a_second_build(spark, sf_dir, duck):
+    """events_incremental_mv's frame reads the stored history state lazily.
+    Building the query again, as a concurrent request does, must leave the
+    state that the first frame reads in place."""
+    spec = REGISTRY["events_incremental_mv"]
+    first = spec.fn(spark, sf_dir)
+    spec.fn(spark, sf_dir)
+    ok, msg = compare(first, duck, spec.oracle)
+    assert ok, msg
 
 
 def test_release_leaves_concurrent_request_frames(spark, sf_dir, monkeypatch):
